@@ -10,7 +10,6 @@ from ipes_data_pipeline_spark.operators.dedup_fuzzy import (  # noqa: F401
     candidate_pairs,
     dedupe_fuzzy,
     min_label_components,
-    min_label_components_contracted,
 )
 from ipes_data_pipeline_spark.operators.dedup_minhash import (  # noqa: F401
     dedupe_exact_text,

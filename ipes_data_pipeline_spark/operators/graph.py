@@ -1,7 +1,8 @@
 """Iterative graph algorithms as bounded DataFrame loops.
 
-Connected components live in ``dedup_fuzzy.min_label_components`` (the
-dedup-resolution workhorse); this module adds weighted PageRank — the
+Connected components live in ``dedup_fuzzy`` (per-block resolution
+inside ``dedupe_fuzzy``; ``min_label_components`` for LSH graphs whose
+edges cross buckets); this module adds weighted PageRank — the
 influence/centrality rollup warehouses run over interaction graphs
 (who-buys-from-whom, citation, link graphs).
 

@@ -13,9 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 #: process. Freed at interpreter exit, or earlier via release_spills()
 #: — a spill must outlive every action on the returned frame, so the
 #: library cannot free it per-call; long-lived processes that loop over
-#: spilling operators (each dedupe_fuzzy spill is the full half edge
-#: set — tens of GB at sf10 scale) should call release_spills() between
-#: iterations once the returned frames are dead.
+#: spilling operators (each util.pin_pairs spill of an LSH edge set
+#: grows with pair counts, not input bytes) should call
+#: release_spills() between iterations once the returned frames are
+#: dead.
 _SPILL_DIRS: list[str] = []
 
 
@@ -94,19 +95,20 @@ def _spill_root(spark: SparkSession) -> str | None:
 #: estimate of the operator's INPUT (file-size-based for scan-rooted
 #: plans, no action needed) picks the store. 256 MiB ~ the sf1/sf10
 #: boundary for the documents corpus. NOT used for edge sets
-#: (candidate_pairs): those grow with block-pair counts, not input
-#: bytes, and stay on the spill unconditionally.
+#: (util.pin_pairs): those grow with pair counts, not input bytes, and
+#: use the lower threshold below.
 SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.spillMinInputBytes"
 _SPILL_MIN_INPUT_BYTES = 256 << 20
 
-#: Lower threshold for PAIR-PROPORTIONAL intermediates (fuzzy-dedup
-#: edge sets): edges grow with in-block pair counts, ~1-2 orders of
-#: magnitude past the input (4.3M edges from 15k rows at sf0.1, 213M at
-#: sf10), so the store regime must flip to the columnar spill well
-#: before the input itself is spill-sized. 8 MiB of input ~ the sf2
-#: customer table; sf10's measured +182 s localCheckpoint heap-thrash
-#: regime (round-9 A/B) sits far above it, sf0.1/sf1 (where the spill's
-#: extra write job is pure overhead, ~0.4 s/query) below.
+#: Lower threshold for PAIR-PROPORTIONAL intermediates (the LSH edge
+#: sets util.pin_pairs pins before a propagation loop): edges grow with
+#: in-bucket pair counts, ~1-2 orders of magnitude past the input (q39's
+#: blocked levenshtein graph: 4.3M edges from 15k rows at sf0.1, 213M
+#: at sf10), so the store regime must flip to the columnar spill well
+#: before the input itself is spill-sized. sf10's measured +182 s
+#: localCheckpoint heap-thrash regime (round-9 A/B, SCALING.md) sits
+#: far above 8 MiB, sf0.1/sf1 (where the spill's extra write job is
+#: pure overhead, ~0.4 s/query) below.
 EDGE_SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.edgeSpillMinInputBytes"
 _EDGE_SPILL_MIN_INPUT_BYTES = 8 << 20
 
@@ -171,8 +173,8 @@ def cut(
     Third regime, for LARGE intermediates: ``via_parquet=True`` spills
     the frame to a columnar scratch dir and returns the re-read —
     compressed, off-heap, schema-preserving. Round-9 measurement
-    (``scripts/ab_q39_edge_store.py``, q39's 213M-row edge set at sf10,
-    fresh process per variant): raw compute 204 s, +182 s with
+    (SCALING.md, q39's 213M-row edge set at sf10, fresh process per
+    variant): raw compute 204 s, +182 s with
     localCheckpoint (the deserialized row blocks thrash a 48 GB heap),
     **+26 s with the parquet spill** — 7× cheaper materialization at
     scale, within noise of localCheckpoint on small frames. This is the

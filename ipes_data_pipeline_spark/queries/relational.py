@@ -10,10 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ipes_data_pipeline_spark.operators.dedup_fuzzy import (
-    candidate_pairs,
-    min_label_components_contracted,
-)
+from ipes_data_pipeline_spark.operators.dedup_fuzzy import dedupe_fuzzy
 from ipes_data_pipeline_spark.operators.util import cut, spread
 from ipes_data_pipeline_spark.queries import (
     davg,
@@ -904,16 +901,16 @@ def q39(spark, sf):
     # Block on the 15-char name prefix (first-token blocking degenerates on
     # this dataset: names contain no whitespace). Within a block, names
     # differ only in their last 3 digits, so every node reaches the block
-    # minimum in <= 2 hops (change two digits, then one); 3 propagation
-    # rounds = diameter + margin, and the oracle unrolls the same 3.
+    # minimum in <= 2 hops (change two digits, then one): the oracle's
+    # fixed 3-round unroll equals dedupe_fuzzy's exact components.
     cust = t(spark, sf, "customer")
-    block = F.substring(F.col("c_name"), 1, 15)
-    edges = candidate_pairs(cust, "c_custkey", "c_name", block, max_edits=2)
-    nodes = cust.select(F.col("c_custkey").alias("node"))
-    # contraction computes TRUE components; the oracle's fixed 3-round
-    # unroll equals the fixpoint because the component diameter is 2
-    comp = min_label_components_contracted(nodes, edges)
-    return comp.select(F.col("node").alias("c_custkey"), "canonical_id")
+    return dedupe_fuzzy(
+        cust,
+        "c_custkey",
+        "c_name",
+        block_expr=F.substring("c_name", 1, 15),
+        max_edits=2,
+    )
 
 
 @register(
@@ -930,17 +927,18 @@ def q39(spark, sf):
     _q39_oracle(block_cap=256, n_rounds=4),
 )
 def q39p(spark, sf):
+    # exact components of the CAPPED edge graph; the oracle unrolls 4
+    # rounds (measured fixpoint at gate scales is 3 — one round of
+    # margin, trivial at oracle scale)
     cust = t(spark, sf, "customer")
-    block = F.substring(F.col("c_name"), 1, 15)
-    edges = candidate_pairs(
-        cust, "c_custkey", "c_name", block, max_edits=2, block_cap=256
+    return dedupe_fuzzy(
+        cust,
+        "c_custkey",
+        "c_name",
+        block_expr=F.substring("c_name", 1, 15),
+        max_edits=2,
+        block_cap=256,
     )
-    nodes = cust.select(F.col("c_custkey").alias("node"))
-    # contraction computes TRUE components of the CAPPED edge graph;
-    # the oracle unrolls 4 rounds (measured fixpoint at gate scales is
-    # 3 — one round of margin, trivial at oracle scale)
-    comp = min_label_components_contracted(nodes, edges)
-    return comp.select(F.col("node").alias("c_custkey"), "canonical_id")
 
 
 @register(

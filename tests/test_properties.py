@@ -59,12 +59,12 @@ def test_dedup_canonical_order_invariant(spark, perm):
     df = spark.createDataFrame(rows, "id int, name string")
     got = {
         r["id"]: r["canonical_id"]
-        for r in dedupe_fuzzy(df, "id", "name", max_edits=2, iterations=4).collect()
+        for r in dedupe_fuzzy(df, "id", "name", max_edits=2).collect()
     }
     df0 = spark.createDataFrame(base, "id int, name string")
     want = {
         r["id"]: r["canonical_id"]
-        for r in dedupe_fuzzy(df0, "id", "name", max_edits=2, iterations=4).collect()
+        for r in dedupe_fuzzy(df0, "id", "name", max_edits=2).collect()
     }
     assert got == want
 
@@ -84,19 +84,23 @@ def test_dedup_block_cap_valve(spark):
     blk = F.element_at(F.split(F.col("name"), r"\s+"), 1)
 
     def edges(cap):
-        return {
-            (r["src"], r["dst"])
-            for r in candidate_pairs(
-                df, "id", "name", blk, max_edits=2, block_cap=cap
-            ).collect()
+        rows = candidate_pairs(
+            df, "id", "name", blk, max_edits=2, block_cap=cap
+        ).collect()
+        # half edges, each tagged with the one (blk, sub) group it lies in
+        assert all(r["src"] < r["dst"] for r in rows)
+        return {(r["src"], r["dst"]) for r in rows}, {
+            (r["blk"], r["sub"]) for r in rows
         }
 
-    lossless, capped = edges(None), edges(8)
+    (lossless, groups), (capped, capped_groups) = edges(None), edges(8)
+    assert groups == {("acme", 0), ("zorp", 0)}
     assert capped < lossless  # strictly fewer: the 40-block sub-salted
+    assert len(capped_groups) > len(groups)
     # the small block is under every cap: its edge survives intact
     assert (100, 101) in capped
     # cap >= max block size => valve provably inert
-    assert edges(64) == lossless
+    assert edges(64)[0] == lossless
 
     full = {
         r["id"]: r["canonical_id"]

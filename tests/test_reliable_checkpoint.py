@@ -184,9 +184,11 @@ def test_cut_via_parquet_honors_reliable_without_shared_root(spark, tmp_path):
 def test_session_conf_runs_queries_reliably_with_identical_values(spark, ckdir):
     """The 100 TB story: ONE cluster-side conf flips every cut site in
     an operator chain assembled from library defaults — no call-site
-    threading. q131 (prefix-sum shards), q39 (fuzzy dedup components)
-    and q140 (pagerank rounds) run UNMODIFIED under the conf, write
-    real checkpoint files, and produce row-identical values."""
+    threading. q131 (prefix-sum shards) and q140 (pagerank rounds) run
+    UNMODIFIED under the conf, write real checkpoint files, and produce
+    row-identical values. q39 (fuzzy dedup) cuts nothing — its
+    components resolve inside each block — and rides along as the
+    control whose values the conf must not touch either."""
     from ipes_data_pipeline_spark.operators.util import RELIABLE_CUTS_CONF
     from ipes_data_pipeline_spark.queries import REGISTRY, load_all
 

@@ -1,16 +1,14 @@
 """Cross-engine value checks of the scale valves IN their firing regime.
 
-The registered queries (q42p, q121p, q133a) run their valves with
-production parameters (bucket_cap=256, target_bucket=256) that are
-provably inert at gate scale, so the gate pins the capped/adaptive code
-paths only where they DON'T fire. These tests force the valves with
-tiny parameters on synthetic skewed corpora and check Spark's output
-against the SAME-parameterized DuckDB oracle SQL — a salt or
-plane-count mismatch between the Python and SQL constructions surfaces
-here, at pytest speed, instead of as a gate failure at sf1+.
-
-(q39p needs no such test: its gate corpus fires the valve at sf0.01 —
-the 1000-row name blocks sub-salt into 4 buckets there.)
+The registered queries (q39p, q42p, q121p, q133a) run their valves with
+production parameters (block_cap/bucket_cap=256, target_bucket=256) that
+are inert at the sf0.001 scale the test suite runs (q39p's valve first
+fires at sf0.01, where the 1000-row name blocks sub-salt into 4
+buckets). These tests force the valves with tiny parameters on small
+skewed corpora and check Spark's output against the SAME-parameterized
+DuckDB oracle SQL — a salt or plane-count mismatch between the Python
+and SQL constructions surfaces here, at pytest speed, instead of as a
+gate failure at larger scales.
 """
 
 from __future__ import annotations
@@ -21,12 +19,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from ipes_data_pipeline_spark.operators.dedup_fuzzy import dedupe_fuzzy
 from ipes_data_pipeline_spark.operators.dedup_minhash import minhash_lsh_pairs
 from ipes_data_pipeline_spark.operators.similarity import (
     auto_plane_count,
     cosine_pairs_bucketed,
 )
+from ipes_data_pipeline_spark.oracle import run_oracle
 from ipes_data_pipeline_spark.queries.dataops import _q42_oracle, _sql_cosine
+from ipes_data_pipeline_spark.queries.relational import _q39_oracle
 from ipes_data_pipeline_spark.operators.similarity import _AUTO_PLANES
 
 
@@ -91,6 +92,29 @@ def test_minhash_bucket_cap_fires_and_matches_oracle(spark):
     # the under-cap near-dup pair is untouched (recall traded only
     # inside oversized buckets)
     assert (20, 21) in got
+
+
+def test_fuzzy_block_cap_fires_and_matches_oracle(spark, sf_dir):
+    """q39p's valve in its firing regime: sf0.001 customer is one
+    150-row name block, so block_cap=32 sub-salts it into 5 buckets.
+    Spark's capped components must differ from the lossless ones (the
+    valve FIRED) and equal the same-parameterized DuckDB oracle."""
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+
+    def run(cap):
+        return {
+            (r["c_custkey"], r["canonical_id"])
+            for r in dedupe_fuzzy(
+                cust, "c_custkey", "c_name",
+                block_expr=F.substring("c_name", 1, 15), max_edits=2,
+                block_cap=cap,
+            ).collect()
+        }
+
+    capped, lossless = run(32), run(None)
+    assert capped != lossless  # the valve fired
+    want = run_oracle(_q39_oracle(block_cap=32, n_rounds=4), sf_dir)
+    assert capped == set(zip(want["c_custkey"], want["canonical_id"]))
 
 
 def test_adaptive_plane_count_fires_and_matches_oracle(spark):
