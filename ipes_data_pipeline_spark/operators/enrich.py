@@ -6,7 +6,9 @@ Reference semantics re-expressed for scale:
 - cache probe (enrich_data.py:176-180)  → left join against the cache
   table; misses = rows with null enrichment → only those hit the backend;
 - per-row ``time.sleep(21)`` (:205)     → token bucket *inside* each
-  partition (politeness without idling the driver);
+  partition (politeness without idling the driver), with up to
+  :data:`MAX_IN_FLIGHT` calls overlapped per partition — a backend must
+  therefore be thread-safe;
 - markdown-fence-stripping JSON parse + required-field/enum validation
   (:113-121) → backend-side parse + enum clamp to 'Unknown';
 - periodic cache save (:200-207)        → caller appends ``new_rows`` to
@@ -21,8 +23,10 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -144,7 +148,10 @@ class ChatHttpBackend:
     Plain-field dataclass → pickles into executor tasks; urllib is
     stdlib (no dependency). Politeness/quota is the caller's
     ``calls_per_second`` token bucket — this class does exactly one
-    logical call per invocation.
+    logical call per invocation. Thread-safe (each call builds its own
+    request and holds no shared state), as :func:`enrich_misses`
+    requires: up to :data:`MAX_IN_FLIGHT` calls run at once per
+    partition.
     """
 
     base_url: str
@@ -263,6 +270,66 @@ class TokenBucket:
             time.sleep(min(1.0, (1 - self._tokens) / self.rate))
 
 
+#: Backend calls in flight per partition. A call waits on the network
+#: and the model, not on this process's CPU, so threads overlap the
+#: waits. 16 covers a typical partition's miss set (the default width
+#: is one partition per core, a few dozen misses each) in a few waves
+#: while bounding the threads and open connections of each Python
+#: worker; the request rate is ``calls_per_second``'s job, not this.
+MAX_IN_FLIGHT = 16
+
+
+def enrich_partition(
+    batches: Iterator[pd.DataFrame],
+    backend: Callable[[str, list[str]], dict],
+    calls_per_second: float = 0.0,
+) -> Iterator[pd.DataFrame]:
+    """The per-partition body of :func:`enrich_misses`: one backend call
+    per row, up to :data:`MAX_IN_FLIGHT` at once, rows out in input
+    order. The token bucket runs on this (submitting) thread before each
+    submit, and a submit waits for a free slot first, so every call
+    starts at the bucket's pace. A call that raises yields an all-null
+    row for its name only."""
+    bucket = TokenBucket(calls_per_second) if calls_per_second > 0 else None
+    slots = threading.BoundedSemaphore(MAX_IN_FLIGHT)
+
+    def call(name: str, dockets: list[str]) -> dict:
+        try:
+            return clamp_enums(backend(name, dockets))
+        except Exception:  # failure → empty struct, counted by caller
+            return {}
+        finally:
+            slots.release()
+
+    with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
+        for pdf in batches:
+            names, futures = [], []
+            for row in pdf.itertuples(index=False):
+                # Arrow hands an array<string> cell to itertuples as a
+                # numpy array: `raw or []` would throw ("truth value of
+                # an array is ambiguous") for ANY company with 2+
+                # dockets. None/NaN = null cell.
+                raw = getattr(row, "dockets", None)
+                dockets = (
+                    []
+                    if raw is None or isinstance(raw, float)
+                    else list(raw)
+                )
+                slots.acquire()
+                if bucket:
+                    bucket.acquire()
+                names.append(row.normalized_name)
+                futures.append(pool.submit(call, row.normalized_name, dockets))
+            recs = [f.result() for f in futures]
+            yield pd.DataFrame(
+                {
+                    "normalized_name": names,
+                    **{c: [r.get(c) for r in recs] for c in ENRICH_COLS},
+                },
+                columns=["normalized_name", *ENRICH_COLS],
+            )
+
+
 def enrich_misses(
     misses: DataFrame,
     backend: Callable[[str, list[str]], dict] | None = None,
@@ -275,6 +342,8 @@ def enrich_misses(
     ``calls_per_second`` > 0 enables the per-partition token bucket
     (cluster-wide rate ≈ n_partitions × calls_per_second — size
     ``n_partitions`` to the external API's quota, not the data).
+    Calls overlap within a partition (:func:`enrich_partition`), so the
+    backend must be thread-safe.
     """
     backend = backend or DeterministicMockBackend()
     has_dockets = "dockets" in misses.columns
@@ -293,39 +362,7 @@ def enrich_misses(
         src = src.coalesce(src.sparkSession.sparkContext.defaultParallelism)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = TokenBucket(calls_per_second) if calls_per_second > 0 else None
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                if bucket:
-                    bucket.acquire()
-                # Arrow hands an array<string> cell to itertuples as a
-                # numpy array: `raw or []` would throw ("truth value of
-                # an array is ambiguous") for ANY company with 2+
-                # dockets. None/NaN = null cell.
-                raw = getattr(row, "dockets", None) if has_dockets else None
-                dockets = (
-                    []
-                    if raw is None or isinstance(raw, float)
-                    else list(raw)
-                )
-                try:
-                    rec = clamp_enums(backend(row.normalized_name, dockets))
-                except Exception:  # failure → empty struct, counted by caller
-                    rec = {}
-                out.append(
-                    {
-                        "normalized_name": row.normalized_name,
-                        "is_active": rec.get("is_active"),
-                        "activity_signal": rec.get("activity_signal"),
-                        "industry_segment": rec.get("industry_segment"),
-                        "product_summary": rec.get("product_summary"),
-                        "market_position": rec.get("market_position"),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["normalized_name", *ENRICH_COLS]
-            ) if out else pd.DataFrame(columns=["normalized_name", *ENRICH_COLS])
+        return enrich_partition(batches, backend, calls_per_second)
 
     return src.mapInPandas(run, schema=ENRICH_SCHEMA_DDL)
 

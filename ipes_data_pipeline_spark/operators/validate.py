@@ -3,9 +3,11 @@
 ``code/structure_data.py:263-309``).
 
 Constraints are column expressions → one `is_valid` flag; invalid rows
-are *quarantined*, not dropped-with-a-print; counts come from
-``DataFrame.observe`` so they ride along with the write action instead
-of costing extra passes.
+are *quarantined*, not dropped-with-a-print; the valid and invalid
+counts come from one ``DataFrame.observe`` below the valid/quarantine
+split, so the caller's write of ``valid`` collects both as a side
+effect. Error samples cost one more action, only when there are
+invalid rows.
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from pyspark.sql import functions as F
 class ValidationResult:
     valid: DataFrame
     quarantine: DataFrame  # original columns + violated_constraints array
-    observation: Observation  # .get after an action on `valid`
+    #: valid_records / invalid_records; .get after an action on `valid`
+    observation: Observation
 
     #: names of all declared constraints, in order
     constraint_names: list[str] = field(default_factory=list)
@@ -58,15 +61,28 @@ def validate(
         lambda x: x.isNotNull(),
     )
     flagged = df.withColumn("violated_constraints", violated)
-    valid = flagged.filter(F.size("violated_constraints") == 0).drop(
-        "violated_constraints"
-    )
-    quarantine = flagged.filter(F.size("violated_constraints") > 0)
+    is_valid = F.size("violated_constraints") == 0
     obs = Observation(name)
-    observed = valid.observe(obs, F.count(F.lit(1)).alias("valid_records"))
-    return ValidationResult(
-        observed, quarantine, obs, constraint_names=list(constraints)
+    # the counts sit BELOW the `valid` filter (CollectMetrics is not a
+    # pushdown target), so they see every row, invalid ones included
+    observed = flagged.observe(
+        obs,
+        F.count_if(is_valid).alias("valid_records"),
+        F.count_if(~is_valid).alias("invalid_records"),
     )
+    valid = observed.filter(is_valid).drop("violated_constraints")
+    quarantine = flagged.filter(~is_valid)
+    return ValidationResult(
+        valid, quarantine, obs, constraint_names=list(constraints)
+    )
+
+
+def _observed(obs: Observation) -> bool:
+    """True once an action has filled ``obs``: ``Observation.get``
+    would block forever on a frame no action touches. Spark fills it
+    from a listener just after the action returns, so a false here
+    right after an action only costs one redundant count."""
+    return obs._jo is not None and obs._jo.future().isCompleted()
 
 
 def validation_report(
@@ -79,19 +95,25 @@ def validation_report(
     column shown in error samples — validate() takes arbitrary
     constraint sets, so the report must not assume the company schema.
 
-    Self-contained: runs its own action on ``valid`` (which also
-    populates the Observation). In the pipeline path the caller's write
-    action is the trigger and the counts ride along for free —
-    ``Observation.get`` blocks until *some* action touches the observed
-    DataFrame.
+    The counts are the Observation's: in the pipeline path the caller's
+    write of ``valid`` has already filled it and no action runs for
+    them; otherwise one action on ``valid`` fills it. Error samples
+    cost one action on ``quarantine``, and only when
+    ``invalid_records > 0``.
     """
-    quarantined = result.quarantine.select(
-        F.col(sample_col).alias("name"),
-        F.array_join("violated_constraints", ", ").alias("error"),
-    )
-    samples = [r.asDict() for r in quarantined.limit(sample_errors).collect()]
-    n_invalid = result.quarantine.count()
-    n_valid = result.valid.count()  # action → Observation populated too
+    if not _observed(result.observation):
+        result.valid.count()
+    counts = result.observation.get
+    n_valid, n_invalid = counts["valid_records"], counts["invalid_records"]
+    samples = []
+    if n_invalid > 0:
+        quarantined = result.quarantine.select(
+            F.col(sample_col).alias("name"),
+            F.array_join("violated_constraints", ", ").alias("error"),
+        )
+        samples = [
+            r.asDict() for r in quarantined.limit(sample_errors).collect()
+        ]
     return {
         "total_processed": n_valid + n_invalid,
         "valid_records": n_valid,

@@ -12,6 +12,10 @@ Parity notes:
   always empty — SURVEY §2.3.2) + the validation report;
 - fail-fast with a failure record (run_pipeline.py:158-166) → the
   except branch records status="failed" before re-raising.
+
+Every layer is read back with its declared schema (``schemas.py``), so
+no read pays a schema-inference job; ``tests/test_run_pipeline.py``
+pins the written layers to those declarations.
 """
 
 from __future__ import annotations
@@ -33,7 +37,13 @@ from ipes_data_pipeline_spark.operators.validate import (
 from ipes_data_pipeline_spark.pipeline.bronze import flatten_filings
 from ipes_data_pipeline_spark.pipeline.gold import build_gold, read_cache
 from ipes_data_pipeline_spark.pipeline.silver import structure
-from ipes_data_pipeline_spark.schemas import RAW_FILING_NESTED
+from ipes_data_pipeline_spark.schemas import (
+    COMPANY_DIM,
+    FILING_FACT,
+    GOLD,
+    RAW_FILING_FLAT,
+    RAW_FILING_NESTED,
+)
 from ipes_data_pipeline_spark.sources.metrics import record_run
 
 
@@ -97,7 +107,7 @@ def run_pipeline(
                 flatten_filings(raw).write.mode("overwrite").parquet(paths["bronze"])
 
         with timed("silver"):
-            flat = spark.read.parquet(paths["bronze"])
+            flat = spark.read.schema(RAW_FILING_FLAT).parquet(paths["bronze"])
             # persist=True: the two sinks below share the per-entity
             # aggregate (and the whole dedup subtree above it) — cached
             # once instead of executed once per sink
@@ -120,8 +130,12 @@ def run_pipeline(
             report = validation_report(checked)
             star.unpersist()
 
-        companies = spark.read.parquet(os.path.join(paths["silver"], "companies"))
-        filings = spark.read.parquet(os.path.join(paths["silver"], "filings"))
+        companies = spark.read.schema(COMPANY_DIM).parquet(
+            os.path.join(paths["silver"], "companies")
+        )
+        filings = spark.read.schema(FILING_FACT).parquet(
+            os.path.join(paths["silver"], "filings")
+        )
 
         if not skip_gold:
             with timed("gold"):
@@ -144,11 +158,11 @@ def run_pipeline(
             # same contract as skip_bronze reusing bronze); a fresh lake
             # simply has no gold yet — not an error
             try:
-                gold = spark.read.parquet(paths["gold"])
+                gold = spark.read.schema(GOLD).parquet(paths["gold"])
             except Exception:
                 gold = None
         else:
-            gold = spark.read.parquet(paths["gold"])
+            gold = spark.read.schema(GOLD).parquet(paths["gold"])
         if stats:
             record_run(
                 spark,

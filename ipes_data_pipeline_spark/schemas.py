@@ -122,6 +122,12 @@ ENRICHMENT = T.StructType(
     ]
 )
 
+#: the gold table: company identity + count, then the enrichment fields
+GOLD = T.StructType(
+    [COMPANY_DIM[c] for c in ("id", "entity_name", "filing_count")]
+    + ENRICHMENT.fields
+)
+
 INDUSTRY_SEGMENTS = [
     "UCaaS", "CCaaS", "CPaaS", "Carrier", "Reseller", "Enterprise IT",
     "Healthcare", "Financial Services", "Government", "Consulting/Legal",

@@ -41,28 +41,29 @@ def record_run(
     validation: dict | None = None,
     run_ts: float | None = None,
 ) -> None:
-    """Append one run record to the metrics table."""
-    import datetime as dt
+    """Append one run record to the metrics table.
 
-    # tz-AWARE UTC: a naive datetime is reinterpreted in the session
-    # timezone at write (and utcfromtimestamp is deprecated) — the
-    # stored instant would shift by the tz offset on any session whose
-    # tz isn't UTC
-    ts = dt.datetime.fromtimestamp(
-        run_ts if run_ts is not None else time.time(), tz=dt.timezone.utc
-    )
-    row = [
-        (
-            ts,
-            status,
-            float(duration_seconds),
-            {k: float(v) for k, v in step_durations.items()},
-            json.dumps(validation) if validation is not None else None,
-        )
+    The row is built on the JVM from literals over ``spark.range`` —
+    ``createDataFrame`` of a local list would ship pickled rows to a
+    Python worker just to write one record."""
+    # epoch micros → TIMESTAMP is an instant: no session-timezone
+    # reinterpretation on write (as a naive datetime would suffer)
+    micros = round((run_ts if run_ts is not None else time.time()) * 1_000_000)
+    steps = [
+        x for k, v in step_durations.items() for x in (F.lit(k), F.lit(float(v)))
     ]
-    spark.createDataFrame(row, RUN_STATS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(stats_dir)
+    values = {
+        "run_ts": F.timestamp_micros(F.lit(micros)),
+        "status": F.lit(status),
+        "total_duration_seconds": F.lit(float(duration_seconds)),
+        "steps": F.create_map(*steps),
+        "validation": F.lit(
+            json.dumps(validation) if validation is not None else None
+        ),
+    }
+    spark.range(0, 1, 1, 1).select(
+        *[values[f.name].cast(f.dataType).alias(f.name) for f in RUN_STATS_SCHEMA]
+    ).write.mode("append").parquet(stats_dir)
 
 
 def run_history(spark: SparkSession, stats_dir: str) -> DataFrame:

@@ -108,6 +108,19 @@ def test_validation_quarantine(spark, star):
     assert "filing_count_nonneg" in report["error_samples"][0]["error"]
 
 
+def test_validation_report_clean_input(star):
+    # all rows valid: the counts come from the Observation and no error
+    # sample is collected
+    report = validation_report(validate(star.companies, company_constraints()))
+    n = star.companies.count()
+    assert report == {
+        "total_processed": n,
+        "valid_records": n,
+        "invalid_records": 0,
+        "error_samples": [],
+    }
+
+
 def test_gold_enrichment_cache(spark, star):
     # nested so cloudpickle ships it by value to the Python workers;
     # an invocation is swallowed into an empty struct (null enrichment

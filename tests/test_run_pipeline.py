@@ -5,6 +5,12 @@ from __future__ import annotations
 import json
 
 from ipes_data_pipeline_spark.pipeline.run import run_pipeline
+from ipes_data_pipeline_spark.schemas import (
+    COMPANY_DIM,
+    FILING_FACT,
+    GOLD,
+    RAW_FILING_FLAT,
+)
 from ipes_data_pipeline_spark.sources.metrics import latest_run, run_history
 from tests.fixtures import RAW_FILINGS
 
@@ -72,3 +78,28 @@ def test_skip_gold_on_fresh_lake_succeeds(spark, tmp_path):
         spark, str(raw_dir), out, skip_bronze=True, stats=False
     )
     assert res2.gold is not None and res2.gold.count() == res2.companies.count()
+
+
+def test_written_layers_match_declared_schemas(spark, tmp_path):
+    """The pipeline reads each layer back with its declared schema, so a
+    written column that drifted from the declaration would come back as
+    silent nulls: pin every layer's inferred (name, type) list to it."""
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    with open(raw_dir / "filings.jsonl", "w") as f:
+        for r in RAW_FILINGS:
+            f.write(json.dumps(r) + "\n")
+    out_root = tmp_path / "lake"
+    run_pipeline(spark, str(raw_dir), str(out_root), stats=False)
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for layer, declared in (
+        ("bronze", RAW_FILING_FLAT),
+        ("silver/companies", COMPANY_DIM),
+        ("silver/filings", FILING_FACT),
+        ("gold", GOLD),
+    ):
+        written = spark.read.parquet(str(out_root / layer)).schema
+        assert fields(written) == fields(declared), layer

@@ -3,6 +3,7 @@ document sink with manifest resume, append-only run telemetry."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -18,6 +19,7 @@ from ipes_data_pipeline_spark.sources.binary_sink import (
     sniff_extension,
 )
 from ipes_data_pipeline_spark.sources.metrics import (
+    RUN_STATS_SCHEMA,
     latest_run,
     record_run,
     run_history,
@@ -185,3 +187,32 @@ def test_run_telemetry_append_and_latest(spark, tmp_path):
     last = latest_run(spark, stats)
     assert last["status"] == "failed"
     assert last["steps"] == {"fetch": 0.3}
+
+    # the row is built on the JVM: it must read back as createDataFrame
+    # wrote it — same columns and types, the epoch instant whatever the
+    # session time zone, an empty step map as {}, no validation as null
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        record_run(spark, stats, "success", 0.0, {}, None, run_ts=3_000.5)
+        assert [
+            (f.name, f.dataType.simpleString())
+            for f in spark.read.parquet(stats).schema
+        ] == [(f.name, f.dataType.simpleString()) for f in RUN_STATS_SCHEMA]
+        rows = {
+            r["status"] + str(r["micros"]): r
+            for r in run_history(spark, stats)
+            .withColumn("micros", F.unix_micros("run_ts"))
+            .collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert set(rows) == {"success1000000000", "failed2000000000", "success3000500000"}
+    first, third = rows["success1000000000"], rows["success3000500000"]
+    assert first["total_duration_seconds"] == 1.11
+    assert first["steps"] == {"fetch": 0.4, "structure": 0.5}
+    assert json.loads(first["validation"]) == {"valid": 178}
+    assert rows["failed2000000000"]["validation"] is None
+    assert third["steps"] == {}
+    assert third["validation"] is None
+    assert latest_run(spark, stats)["status"] == "success"
