@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ipes_data_pipeline_spark.functions.vectors import cosine, dot, norm, sign_bucket
-from ipes_data_pipeline_spark.operators.util import cut
+from ipes_data_pipeline_spark.operators.util import cut, local_frame
 
 
 def ann_topk_bruteforce(
@@ -84,7 +84,7 @@ def knn_graph(
     ).first()
     n_corpus = stats["n"]
     if n_corpus == 0:
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_frame(df.sparkSession, [], out_schema)
     dim = max(stats["dim"] or 0, 0)
     est_bytes = n_corpus * max(dim, 1) * 8
     if est_bytes > max_corpus_bytes:
@@ -207,7 +207,7 @@ def ann_topk_batch(
     ).first()
     n_q, dim = stats["n"], max(stats["dim"] or 0, 0)
     if n_q == 0:
-        return df.sparkSession.createDataFrame([], final_schema)
+        return local_frame(df.sparkSession, [], final_schema)
     est = n_q * max(dim, 1) * 8
     if est > max_query_bytes:
         raise ValueError(
@@ -225,7 +225,7 @@ def ann_topk_batch(
     ok = qn > 0.0  # zero-norm queries: out of contract, dropped
     q_ids, Qm, qn = q_ids[ok], Qm[ok], qn[ok]
     if len(q_ids) == 0:
-        return df.sparkSession.createDataFrame([], final_schema)
+        return local_frame(df.sparkSession, [], final_schema)
     bc = df.sparkSession.sparkContext.broadcast((q_ids, Qm, qn))
 
     def score(batches):
@@ -703,7 +703,8 @@ def kmeans_lloyd_centroids(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     cent = _lloyd_centroid_list(emb, n_cells, n_iter)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         cent, "c_id long, c_vec array<double>"
     )
 
@@ -992,7 +993,8 @@ def _with_cells(emb: DataFrame, cent: list) -> DataFrame:
     if len(cent) >= _ARROW_ASSIGN_MIN_CELLS:
         return _with_cells_arrow(emb, cent)
     spark = emb.sparkSession
-    cent_row = spark.createDataFrame(
+    cent_row = local_frame(
+        spark,
         [(cent,)], "cents array<struct<c_id:long,c_vec:array<double>>>"
     )
 
@@ -1096,7 +1098,7 @@ def ann_topk_ivf_kmeans_lloyd(
     )
     rows = _lloyd_centroid_list(emb, n_cells, n_iter)
     if not rows:
-        return df.sparkSession.createDataFrame([], "id long, cos_sim double")
+        return local_frame(df.sparkSession, [], "id long, cos_sim double")
     q = query_df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -1173,7 +1175,8 @@ def semdedup(
         else _lloyd_centroid_list(emb, n_cells, n_iter, train_limit=train_limit)
     )
     if not rows:  # empty input: one verdict row per input vector = none
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [], "id long, c_id long, dominator long, keep boolean"
         )
 
@@ -1274,7 +1277,8 @@ def ann_topk_ivf_kmeans(
         for i, c in enumerate(model.clusterCenters())
     ]
     spark = df.sparkSession
-    cent_row = spark.createDataFrame(
+    cent_row = local_frame(
+        spark,
         [(cent,)], "cents array<struct<c_id:long,c_vec:array<double>>>"
     )
 
@@ -1547,17 +1551,20 @@ def _pq_query_dtab(
     m = len(cents_by_sub)
     parts = []
     for j in range(m):
-        cent_df = spark.createDataFrame(
+        cent_df = local_frame(
+            spark,
             cents_by_sub[j], "c_id long, c_vec array<double>"
         )
         if with_cell:
-            q_df = spark.createDataFrame(
+            q_df = local_frame(
+                spark,
                 [(c, v[j * dsub : (j + 1) * dsub]) for c, v in qv_rows],
                 "cell long, qv array<double>",
             )
             cols = ["cell"]
         else:
-            q_df = spark.createDataFrame(
+            q_df = local_frame(
+                spark,
                 [(v[j * dsub : (j + 1) * dsub],) for _, v in qv_rows],
                 "qv array<double>",
             )
@@ -1990,7 +1997,8 @@ def ivfpq_residual_topk(
     coarse = _lloyd_centroid_list(emb, n_cells, n_iter, train_limit=train_limit)
     if not coarse:
         return _empty()
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         coarse, "c_id long, c_vec array<double>"
     )
     # residuals: one map stage (broadcast centroid join, exact IEEE
@@ -2296,7 +2304,8 @@ def sq8_topk_arrow(
         .collect()
     )
     if not brows:
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [], "id bigint, adc_d2 double"
         )
     cdim = max(r["i0"] for r in brows) + 1

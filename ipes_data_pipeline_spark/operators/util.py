@@ -6,8 +6,10 @@ import atexit
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: parquet-spill scratch dirs created by cut(via_parquet=True) in this
 #: process. Freed at interpreter exit, or earlier via release_spills()
@@ -238,10 +240,39 @@ def cut(
             path = f"{root}/ipes_cut_{uuid.uuid4().hex[:8]}"
         _SPILL_DIRS.append(path)
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
     if reliable:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built frame (centroids, keys, quantiles, empty
+    results) as a Catalyst ``LocalRelation``, built through Arrow.
+
+    ``rows`` are tuples (or Rows) in ``schema`` order; ``schema`` is a
+    StructType or a DDL string. ``createDataFrame`` of a Python list
+    would plan a ``LogicalRDD`` over pickled rows: its scan starts a
+    Python worker (the first in a process forks the worker daemon) and
+    its size estimate is unbounded. An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` lands on the
+    driver as a ``LocalRelation`` with exact size stats, so joins
+    broadcast it without a hint and no Python worker runs.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

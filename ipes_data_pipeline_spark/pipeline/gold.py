@@ -16,11 +16,12 @@ from ipes_data_pipeline_spark.operators.enrich import (
     EnrichmentOutput,
     enrich_with_cache,
 )
+from ipes_data_pipeline_spark.operators.util import local_frame
 from ipes_data_pipeline_spark.schemas import ENRICHMENT_CACHE
 
 
 def empty_cache(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], ENRICHMENT_CACHE)
+    return local_frame(spark, [], ENRICHMENT_CACHE)
 
 
 def read_cache(spark: SparkSession, cache_dir: str) -> DataFrame:

@@ -28,21 +28,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ipes_data_pipeline_spark.schemas import TABLE_SCHEMAS
 from ipes_data_pipeline_spark.session import tune
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TABLES = tuple(TABLE_SCHEMAS)
 
 
 @dataclass(frozen=True)
@@ -72,32 +63,86 @@ def register(name: str, family: str, oracle: str | None):
     return deco
 
 
+def _ts_type(spark: SparkSession, path: str) -> T.DataType:
+    """Spark type of the ``ts`` column stored at ``path`` (a parquet file
+    or a directory of them), from one footer read on the driver through
+    the Parquet API on the JVM: no Spark job.
+
+    TIMESTAMP(NANOS) reads as a nanos long (``nanosAsLong``, set by
+    ``tune``); micros/millis without UTC adjustment as TIMESTAMP_NTZ;
+    UTC-adjusted as TIMESTAMP."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(conf)
+    status = fs.getFileStatus(jpath)
+    if status.isDirectory():
+        status = next(
+            s
+            for s in fs.listStatus(jpath)
+            if s.isFile() and s.getPath().getName().endswith(".parquet")
+        )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+    )
+    try:
+        col = reader.getFileMetaData().getSchema().getType("ts")
+        ann = col.getLogicalTypeAnnotation()
+    finally:
+        reader.close()
+    if ann is not None and ann.getUnit().name() == "NANOS":
+        return T.LongType()
+    if ann is None or ann.isAdjustedToUTC():
+        return T.TimestampType()
+    return T.TimestampNTZType()
+
+
+def events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
+    """The declared ``events`` schema with ``ts`` in the encoding of
+    ``{sf_dir}/events.parquet`` (see :func:`_ts_type`)."""
+    ts = _ts_type(spark, f"{sf_dir}/events.parquet")
+    return T.StructType(
+        [
+            T.StructField("ts", ts, True) if f.name == "ts" else f
+            for f in TABLE_SCHEMAS["events"]
+        ]
+    )
+
+
+def normalize_ts(events: DataFrame) -> DataFrame:
+    """``ts`` as a session-tz TIMESTAMP, whichever encoding was read.
+
+    The nanos data is micro-aligned, so ``timestamp_micros(ts div 1000)``
+    is lossless; the session is pinned UTC (session.py), so the NTZ cast
+    is wall-clock identity. Both match DuckDB's ``CAST(ts AS TIMESTAMP)``.
+    """
+    dt = events.schema["ts"].dataType
+    if isinstance(dt, T.LongType):
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(dt, T.TimestampNTZType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (parquet scan; pushdown-friendly).
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet, which Spark reads as a
-    nanos long (``nanosAsLong`` conf, see session.py); the data is
-    micro-aligned so converting to a micros timestamp is lossless and
-    matches DuckDB's ``CAST(ts AS TIMESTAMP)``.
+    The read uses the table's declared schema (``schemas.TABLE_SCHEMAS``),
+    so no schema-inference job runs per load. ``events.ts`` comes in one
+    of two encodings: TIMESTAMP(MICROS) without UTC adjustment (read as
+    TIMESTAMP_NTZ; the testdata and the benchmark's generated tables) or
+    TIMESTAMP(NANOS) (read as a nanos long under ``nanosAsLong``). One
+    driver-side footer read picks the encoding and :func:`normalize_ts`
+    turns both into the same TIMESTAMP values.
 
     No blanket repartition here: joins/aggs parallelize at their own
     exchange, and an extra round-robin shuffle before them measurably
     hurts. CPU-heavy per-row operators (minhash/simhash/features) call
     :func:`~ipes_data_pipeline_spark.operators.util.spread` themselves.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # Testdata generations have stored ts as TIMESTAMP(NANOS) (read as
-        # a nanos long under nanosAsLong) or TIMESTAMP(MICROS) without UTC
-        # adjustment (read as TIMESTAMP_NTZ). Normalize both to session-tz
-        # TIMESTAMP — the session is pinned UTC (session.py), so the NTZ
-        # cast is wall-clock-identity and matches DuckDB's naive reading.
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dt == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    schema = events_schema(spark, sf_dir) if name == "events" else TABLE_SCHEMAS[name]
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_ts(df) if name == "events" else df
 
 
 # --- deterministic double aggregation helpers -------------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ipes_data_pipeline_spark.functions.text import shingles, tokens
-from ipes_data_pipeline_spark.operators.util import cut, spread
+from ipes_data_pipeline_spark.operators.util import cut, local_frame, spread
 from ipes_data_pipeline_spark.queries import register, t
 
 SQL_TOKENS = (
@@ -1149,7 +1149,8 @@ def q145(spark, sf):
         ),
         6,
     ).cast("decimal(18,6)")
-    lr = spark.createDataFrame(
+    lr = local_frame(
+        spark,
         [(r["b"], r["c_t"], r["c_c"]) for r in counts],
         "b bigint, c_t bigint, c_c bigint",
     ).select("b", llr.alias("llr"))

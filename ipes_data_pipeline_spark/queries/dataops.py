@@ -31,7 +31,7 @@ from ipes_data_pipeline_spark.operators.dedup_minhash import (
     simhash_signatures,
 )
 from ipes_data_pipeline_spark.operators.sessionize import asof_join_latest, sessionize
-from ipes_data_pipeline_spark.operators.util import cut, spread
+from ipes_data_pipeline_spark.operators.util import cut, local_frame, spread
 from ipes_data_pipeline_spark.operators.similarity import (
     _AUTO_PLANES,
     ann_topk_bruteforce,
@@ -1529,7 +1529,7 @@ def q103(spark, sf):
         .cast("long"),
     )
     tot = h.groupBy("l_returnflag").agg(F.sum("cnt").cast("long").alias("total"))
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    qs = local_frame(spark, [(0.5,), (0.9,), (0.99,)], "q double")
     tgt = tot.crossJoin(F.broadcast(qs)).select(
         "l_returnflag",
         "q",

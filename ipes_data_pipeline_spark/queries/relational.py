@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ipes_data_pipeline_spark.operators.dedup_fuzzy import dedupe_fuzzy
-from ipes_data_pipeline_spark.operators.util import cut, spread
+from ipes_data_pipeline_spark.operators.util import cut, local_frame, spread
 from ipes_data_pipeline_spark.queries import (
     davg,
     dec,
@@ -1078,7 +1078,7 @@ def q104(spark, sf):
                 masks[p >> 5] = masks.get(p >> 5, 0) | (1 << (p % 32))
         word_list = [masks.get(w, 0) for w in range(_BF_WORDS)]
         dim_keys = F.broadcast(
-            spark.createDataFrame([(k,) for k in keys], "c_custkey long")
+            local_frame(spark, [(k,) for k in keys], "c_custkey long")
         )
     else:
         dim = dim_scan.distinct().transform(cut)

@@ -20,7 +20,14 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ipes_data_pipeline_spark.queries import register, sql_davg, sql_dsum, t
+from ipes_data_pipeline_spark.queries import (
+    events_schema,
+    normalize_ts,
+    register,
+    sql_davg,
+    sql_dsum,
+    t,
+)
 from ipes_data_pipeline_spark.queries import davg, dec, dsum
 
 
@@ -199,19 +206,14 @@ def _run_available_now(stream_df, mode: str = "complete"):
 
 
 def _events_stream(spark, sf):
-    # ts arrives as a nanos long (TIMESTAMP(NANOS) data under nanosAsLong)
-    # or TIMESTAMP_NTZ (micros data) depending on the testdata generation —
-    # probe the batch footer and normalize like t().
-    # Glob, not a bare file path: FileStreamSource requires a directory
-    # base (the glob's parent becomes basePath).
-    batch_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    events = spark.readStream.schema(batch_schema).parquet(f"{sf}/events*.parquet")
-    dt = dict(events.dtypes).get("ts")
-    if dt == "bigint":
-        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dt == "timestamp_ntz":
-        return events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events
+    # The batch table's declared schema, with ts in the encoding its
+    # footer names, normalized exactly as t() does. Glob, not a bare file
+    # path: FileStreamSource requires a directory base (the glob's parent
+    # becomes basePath).
+    events = spark.readStream.schema(events_schema(spark, sf)).parquet(
+        f"{sf}/events*.parquet"
+    )
+    return normalize_ts(events)
 
 
 @register(

@@ -140,3 +140,55 @@ MARKET_POSITIONS = ["Enterprise", "Mid-Market", "SMB", "Startup", "Unknown"]
 ENRICHMENT_CACHE = T.StructType(
     [T.StructField("normalized_name", T.StringType(), False)] + ENRICHMENT.fields
 )
+
+# --- testdata tables: the star schema and corpora every query loads ----------
+# Declared, never inferred: an inferring read launches one Spark job per
+# load to merge parquet footers. Each schema is exactly what Spark infers
+# from the testdata files (names, types, order; parquet columns read back
+# nullable), and a test holds them equal. ``events.ts`` is declared in
+# its micros encoding; the loader swaps in the nanos encoding when the
+# file footer says so (``queries.events_schema``).
+
+_I, _L, _D, _S = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_TS = T.TimestampNTZType()
+
+
+def _table(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, dt, True) for n, dt in cols])
+
+
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", _I), ("r_name", _S)),
+    "nation": _table(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "customer": _table(
+        ("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+        ("c_acctbal", _D), ("c_mktsegment", _S),
+    ),
+    "supplier": _table(
+        ("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I), ("s_acctbal", _D)
+    ),
+    "part": _table(
+        ("p_partkey", _L), ("p_name", _S), ("p_brand", _S), ("p_type", _S),
+        ("p_size", _I), ("p_retailprice", _D),
+    ),
+    "orders": _table(
+        ("o_orderkey", _L), ("o_custkey", _L), ("o_orderstatus", _S),
+        ("o_totalprice", _D), ("o_orderdate", _TS), ("o_orderpriority", _S),
+    ),
+    "lineitem": _table(
+        ("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+        ("l_linenumber", _I), ("l_quantity", _D), ("l_extendedprice", _D),
+        ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
+        ("l_linestatus", _S), ("l_shipdate", _TS),
+    ),
+    "events": _table(
+        ("event_id", _L), ("ts", _TS), ("user_id", _L), ("event_type", _S),
+        ("value", _D), ("props", _S),
+    ),
+    "documents": _table(
+        ("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S), ("n_chars", _L)
+    ),
+    "embeddings": _table(
+        ("vec_id", _L), ("embedding", T.ArrayType(T.FloatType())), ("label", _I)
+    ),
+}

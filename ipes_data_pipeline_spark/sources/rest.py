@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ipes_data_pipeline_spark.operators.enrich import TokenBucket
+from ipes_data_pipeline_spark.operators.util import local_frame
 
 #: transport(query, limit, offset) -> (records: list[dict], total: int)
 Transport = Callable[[str, int, int], tuple[list[dict], int]]
@@ -135,7 +136,7 @@ def read_paginated(
         total = min(total, max_records)
     n_pages = math.ceil(total / page_size) if total else 0
     if n_pages == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     pages = spark.range(n_pages).repartition(min(n_partitions, n_pages))
 

@@ -30,7 +30,7 @@ from ipes_data_pipeline_spark.operators.enrich import successful_cache_rows
 from ipes_data_pipeline_spark.pipeline.bronze import flatten_filings
 from ipes_data_pipeline_spark.pipeline.gold import build_gold, read_cache
 from ipes_data_pipeline_spark.pipeline.silver import structure
-from ipes_data_pipeline_spark.schemas import RAW_FILING_NESTED
+from ipes_data_pipeline_spark.schemas import RAW_FILING_FLAT, RAW_FILING_NESTED
 
 
 
@@ -72,7 +72,7 @@ def run_silver_refresh(spark: SparkSession, bronze_dir: str, silver_dir: str) ->
     table — correct, idempotent, and the same semantics as the
     reference, which rebuilds silver every run. Called after a bronze
     catch-up or from a scheduler tick."""
-    flat = spark.read.parquet(bronze_dir)
+    flat = spark.read.schema(RAW_FILING_FLAT).parquet(bronze_dir)
     star = structure(flat)
     star.companies.write.mode("overwrite").parquet(
         os.path.join(silver_dir, "companies")

@@ -15,6 +15,8 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ipes_data_pipeline_spark.operators.util import local_frame
+
 
 class ProgressCapture(StreamingQueryListener):
     """Collects micro-batch progress for all queries on the session.
@@ -64,7 +66,8 @@ class ProgressCapture(StreamingQueryListener):
         if not self.events:
             return
         snapshot = self.events[: len(self.events)]
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (
                     e["query_id"],
