@@ -665,50 +665,6 @@ def cosine_pairs_bucketed(
     )
 
 
-def kmeans_lloyd_centroids(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int = 8,
-    n_iter: int = 3,
-) -> DataFrame:
-    """DETERMINISTIC DataFrame-native Lloyd k-means: (c_id, c_vec) after
-    ``n_iter`` assign+update rounds.
-
-    Every source of nondeterminism in library k-means is pinned so the
-    result is bit-stable in ANY engine (this is what lets q72 carry a
-    cross-engine value oracle, which `pyspark.ml`'s sampled init cannot):
-
-    - init = the ``n_cells`` smallest ids' vectors (content-fixed, no
-      sampling); centroid labels stay those seed ids across rounds;
-    - assignment = argmin squared-L2 with ties broken on ascending
-      centroid id; the fold over dimensions is sequential in double
-      (zip_with + aggregate), bit-identical to DuckDB's list_reduce
-      (the q91 pattern);
-    - update = element-wise mean via DECIMAL(18,6) sums — exact
-      arithmetic, so summation ORDER cannot change the centroid (the
-      repo-wide dsum rule applied per dimension);
-    - empty cells simply drop their centroid row (identically in both
-      engines — the group is absent).
-
-    Physical shape per round: centroids are a tiny broadcast (cells ×
-    dim), so assignment is a map-side nested loop over the fact table
-    (no shuffle of the vectors); the update shuffles |cells| rows of
-    per-dimension partial sums — bounded by cells × dim, not by |rows|.
-    Centroids live driver-side between rounds, so the plan never nests:
-    every round's lineage is scan → assign → one aggregate (see
-    :func:`_lloyd_centroid_list`).
-    """
-    emb = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    cent = _lloyd_centroid_list(emb, n_cells, n_iter)
-    return local_frame(
-        df.sparkSession,
-        cent, "c_id long, c_vec array<double>"
-    )
-
-
 #: Driver-regime training cap: the Lloyd/PQ training set is collected
 #: to the driver when its estimated bytes (rows × dim × 8) fit under
 #: this bound. Conf-tunable per deployment (round 11 — VERDICT item 8):
@@ -740,8 +696,28 @@ def _lloyd_centroid_list(
     max_train_bytes: int | None = None,
     train_limit: int | None = None,
 ) -> list[tuple[int, list[float]]]:
-    """The Lloyd loop itself: ``emb(id, v: array<double>)`` → sorted
-    ``[(c_id, centroid)]`` after ``n_iter`` rounds.
+    """DETERMINISTIC Lloyd k-means: ``emb(id, v: array<double>)`` →
+    ``[(c_id, centroid)]`` sorted by c_id after ``n_iter`` assign+update
+    rounds.
+
+    Every source of nondeterminism in library k-means is pinned, so the
+    result is bit-stable in ANY engine (what lets q72, q130 and the PQ
+    family carry cross-engine value oracles, which ``pyspark.ml``'s
+    sampled init cannot):
+
+    - init = the ``n_cells`` smallest ids' vectors (content-fixed, no
+      sampling); centroid labels stay those seed ids across rounds;
+    - assignment = argmin squared-L2 with ties broken on ascending
+      centroid id; the fold over dimensions is sequential in IEEE
+      double (``zip_with`` + ``aggregate``), bit-identical to DuckDB's
+      ``list_reduce`` (the q91 pattern);
+    - update = element-wise mean via DECIMAL(18,6) sums — exact
+      arithmetic, so summation ORDER cannot change the centroid;
+    - empty cells simply drop their centroid row (identically in both
+      engines — the group is absent).
+
+    Centroids live driver-side between rounds, so the plan never nests:
+    every round's lineage is scan → assign → one aggregate.
 
     ``train_limit`` bounds the TRAINING set to the ``train_limit``
     smallest-id rows (deterministic, SQL-expressible as ``ORDER BY id
@@ -774,15 +750,13 @@ def _lloyd_centroid_list(
       per round = |cells| carrying dim+1 columns; the update collect IS
       the round barrier the algorithm needs anyway.
 
-    Bit-stability (what lets q72/q130 carry cross-engine value oracles)
-    holds in both regimes: d2 accumulates dimension-sequentially in
-    IEEE double (numpy loops per-dim in the same order as the
-    ``zip_with``+``aggregate`` fold), ties break to the lower c_id
-    (argmin-first over centroids kept in ascending-id order), and cell
-    means are exact DECIMAL(18,6) sums — numpy replicates Spark's
-    double→decimal cast (shortest-repr then HALF_UP, i.e. Java
-    ``BigDecimal.valueOf``) by quantizing ``Decimal(repr(x))`` once per
-    element, after which per-cell sums are exact int64 adds.
+    The contract above holds in both regimes: numpy loops per dimension
+    in the order of the ``zip_with``+``aggregate`` fold, argmin-first
+    over centroids kept in ascending-id order is the c_id tie-break, and
+    numpy replicates Spark's double→decimal cast (shortest-repr then
+    HALF_UP, i.e. Java ``BigDecimal.valueOf``) by quantizing
+    ``Decimal(repr(x))`` once per element, after which per-cell sums
+    are exact int64 adds.
 
     Sharing the list (not a DataFrame) lets callers like
     :func:`semdedup` skip a createDataFrame→collect round-trip.
@@ -929,33 +903,6 @@ def _lloyd_driver_matrix(
     return [(cid, [float(x) for x in vec]) for cid, vec in cents]
 
 
-def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """(id, c_id): nearest centroid by squared L2, ties to lower c_id.
-
-    The centroid table is cells × dim — driver-sized at any corpus
-    scale, so it ships to executors as DATA in _with_cells' one-row
-    broadcast crossJoin. Assignment is then a pure map stage: per row,
-    ``array_min`` over ``struct(d2, c_id)`` picks the lexicographic
-    minimum — exactly argmin-with-lower-id-ties — with ZERO shuffle.
-    The previous form (crossJoin + row_number window) shuffled
-    |rows| × |cells| rows per Lloyd round just to discard all but one;
-    at 50k vectors × 4 assignments that exchange dominated q130's
-    runtime.
-
-    The per-element fold (sequential (x-y)² accumulation in double)
-    is unchanged, so assignments — and therefore every downstream
-    value-checked result — are bit-identical to the join form.
-    """
-    rows = sorted(
-        (r["c_id"], [float(x) for x in r["c_vec"]]) for r in cent.collect()
-    )
-    if not rows:  # empty corpus -> no cells, no assignments
-        return emb.select(
-            "id", F.lit(None).cast("long").alias("c_id")
-        ).where(F.lit(False))
-    return _with_cells(emb, rows).select("id", "c_id")
-
-
 #: cell count above which assignment switches to the Arrow kernel —
 #: the HOF fold's interpreter cost is rows × cells × dim, fine at the
 #: oracle-pinned 8 cells but 2.8M interpreted 64-element folds for
@@ -1048,30 +995,10 @@ def _with_cells_arrow(emb: DataFrame, cent: list) -> DataFrame:
                 )
                 continue
             mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            # Row-blocked per-dimension fold with preallocated buffers:
-            # arithmetic is element-for-element identical to the naive
-            # `d2 += diff * diff` loop (same per-element op order, so
-            # IEEE results — and oracle verdicts — cannot move), but a
-            # 512-row block keeps diff/d2 resident in cache instead of
-            # streaming an N × cells temporary through DRAM per
-            # dimension (3× less memory traffic; this fold is the
-            # dominant cost of count-adaptive cell assignment at sf10).
-            best = np.empty(len(mat), dtype=np.int64)
-            blk = 512
-            for s in range(0, len(mat), blk):
-                m = mat[s : s + blk]
-                d2 = np.zeros((len(m), len(c_ids)))
-                diff = np.empty_like(d2)
-                for d in range(cmat.shape[1]):
-                    np.subtract(m[:, d, None], cmat[None, :, d], out=diff)
-                    np.multiply(diff, diff, out=diff)
-                    np.add(d2, diff, out=d2)
-                np.copyto(d2, np.inf, where=np.isnan(d2))
-                best[s : s + blk] = np.argmin(d2, axis=1)
             yield pd.DataFrame(
                 {
                     "id": pdf["id"].to_numpy(),
-                    "c_id": c_ids[best],
+                    "c_id": c_ids[_argmin_cells_blocked(mat, cmat)],
                     "v": pdf["v"],
                 }
             )
@@ -1088,9 +1015,9 @@ def ann_topk_ivf_kmeans_lloyd(
     n_iter: int = 3,
     k: int = 10,
 ) -> DataFrame:
-    """IVF ANN over :func:`kmeans_lloyd_centroids` cells — the
-    deterministic sibling of :func:`ann_topk_ivf_kmeans`, value-
-    checkable cross-engine (q72). Same scale shape: assignment is an
+    """IVF ANN over deterministic Lloyd cells
+    (:func:`_lloyd_centroid_list`), value-checkable cross-engine (q72).
+    Same scale shape as :func:`ann_topk_ivf`: assignment is an
     equi-join on the cell id, the probe touches one cell, no cross
     join of the corpus."""
     emb = df.select(
@@ -1141,7 +1068,7 @@ def semdedup(
     IS NULL``. The drop rule is a single anti-join pass (no iteration):
     deterministic, order-free, and exactly expressible in SQL — which
     is what lets the operator carry a cross-engine value oracle (q130)
-    on top of the :func:`kmeans_lloyd_centroids` cells q72 already
+    on top of the :func:`_lloyd_centroid_list` cells q72 already
     value-checks.
 
     Scale shape: clustering is the Lloyd loop (driver regime under the
@@ -1228,98 +1155,6 @@ def semdedup(
     )
 
 
-def ann_topk_ivf_kmeans(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    n_cells: int = 8,
-    k: int = 10,
-    n_probe: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF ANN with *learned* cells: k-means centroids partition the
-    vector space; search probes the ``n_probe`` cells nearest each
-    query vector (cells ranked by squared-L2 centroid distance — true
-    multi-probe, the FAISS ``nprobe`` semantics; the candidate set is
-    monotone in ``n_probe``, so recall can only improve).
-
-    The scale shape is identical to :func:`ann_topk_ivf` (equi-join on a
-    cell id — no cross join); the cells are simply better balanced than
-    coordinate sign planes, and each probed cell adds one joined
-    partition of candidates. Training cost is one pass over a sample;
-    assignment is a per-row argmin over ``n_cells`` centroids (JVM-side
-    via the fitted model's transform). `pyspark.ml` k-means depends on
-    init sampling, so THIS form has no cross-engine value oracle — the
-    declared query (q72) uses the deterministic
-    :func:`ann_topk_ivf_kmeans_lloyd` sibling instead; this one stays
-    as the library-integration variant (the exactness baseline remains
-    :func:`ann_topk_bruteforce`).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(feat.select("features"))
-    assigned = model.transform(feat).select(
-        "id", "v", F.col("prediction").alias("cell")
-    )
-    # rank ALL cells by centroid distance per query and explode the
-    # n_probe nearest: the centroid table ships as one broadcast row
-    # (the _with_cells pattern), the ranking is an array_sort over
-    # n_cells structs per query row — no driver round-trip per query
-    cent = [
-        (int(i), [float(x) for x in c])
-        for i, c in enumerate(model.clusterCenters())
-    ]
-    spark = df.sparkSession
-    cent_row = local_frame(
-        spark,
-        [(cent,)], "cents array<struct<c_id:long,c_vec:array<double>>>"
-    )
-
-    def d2(v, cv):
-        diff2 = F.zip_with(v, cv, lambda x, y: (x - y) * (x - y))
-        return F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x)
-
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    d2(F.col("q_arr"), c["c_vec"]).alias("d2"),
-                    c["c_id"].alias("c_id"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    q_probe = (
-        query_df.select(
-            F.col(vec_col).alias("q_vec"),
-            F.col(vec_col).cast("array<double>").alias("q_arr"),
-        )
-        .crossJoin(F.broadcast(cent_row))
-        .select(
-            "q_vec",
-            F.explode(F.transform(ranked, lambda s: s["c_id"])).alias("q_cell"),
-        )
-    )
-    return (
-        assigned.join(F.broadcast(q_probe), assigned.cell == F.col("q_cell"))
-        .select(F.col("id"), cosine(F.col("v"), F.col("q_vec")).alias("cos_sim"))
-        # no per-id dedup needed: cells partition the corpus, so a
-        # corpus row matches at most one of a query's probed cells
-        .orderBy(F.desc("cos_sim"), F.asc("id"))
-        .limit(k)
-    )
-
-
 def ann_topk_ivf(
     df: DataFrame,
     id_col: str,
@@ -1360,43 +1195,14 @@ def _d2_fold(v, cv):
     return F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _pq_prep(df, id_col, vec_col, query_df, m, op):
-    """Shared validation prologue of :func:`pq_topk` / :func:`ivfpq_topk`:
-    returns ``(emb, empty_fn, dsub, qv, n_rows)`` with ``dsub = 0``
-    signalling an empty corpus (caller returns ``empty_fn()``).
-    Validates BEFORE any eager materialization — at corpus scale a full
-    cut() must not be spent on an argument error; max(size) skips null
-    vectors (a null-vector first row must not read as an empty corpus);
-    the query vector is collected ONCE (enforcing the one-row contract
-    and avoiding re-executing the query plan per subspace). ``n_rows``
-    (the corpus row count) rides along in the SAME stats job so callers
-    can pick the training regime without paying a second count action
-    (round-10: the PQ family's per-query driver round-trips were most
-    of its bench wall)."""
-    emb = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-
-    def _empty():  # preserves the caller's id type
-        return emb.select(
-            "id", F.lit(None).cast("double").alias("adc_d2")
-        ).where(F.lit(False))
-
-    # Genuinely skip null vectors regardless of the session's
-    # spark.sql.legacy.sizeOfNull (under the legacy default size(null)
-    # is -1, so a bare max(size(v)) over an all-null corpus would yield
-    # -1 — truthy — and fail the divisibility check instead of taking
-    # the documented empty-corpus return).
-    stats = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.when(F.col("v").isNotNull(), F.size("v"))).alias("dim"),
-    ).first()
-    n_rows, dim = stats["n"], stats["dim"] or 0
-    if not dim:
-        return emb, _empty, 0, [], 0
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into m={m} subspaces")
+def _query_vector(query_df: DataFrame, vec_col: str, op: str) -> list[float]:
+    """The query vector of a single-query gear, collected ONCE to the
+    driver: ``query_df`` must hold exactly one row whose vector is
+    non-null with no null elements, else a ``ValueError`` naming ``op``
+    (instead of an opaque ``float(None)`` TypeError further down).
+    Collecting once both pins the contract and keeps the query plan
+    from re-executing per subspace or per use; batch queries compose by
+    looping, or by carrying a q_id through the scoring join."""
     qrows = query_df.select(
         F.col(vec_col).cast("array<double>").alias("v")
     ).collect()
@@ -1409,18 +1215,24 @@ def _pq_prep(df, id_col, vec_col, query_df, m, op):
         raise ValueError(
             f"{op} query vector must be non-null with no null elements"
         )
-    qv = [float(x) for x in qraw]
-    if len(qv) != dim:
-        raise ValueError(f"query dim {len(qv)} != corpus dim {dim}")
-    return emb, _empty, dim // m, qv, n_rows
+    return [float(x) for x in qraw]
 
 
 def _argmin_cells_blocked(mat, cmat):
-    """Blocked argmin-squared-L2 of ``mat`` rows against ``cmat`` rows —
-    the exact numpy fold of :func:`_with_cells_arrow` (per-dimension
-    in-order accumulation, NaN→+inf, first-minimum tie-break over
-    centroids the CALLER keeps ascending by id), factored out so the
-    fused PQ encode kernel and the assignment kernel cannot drift."""
+    """Blocked argmin-squared-L2 of ``mat`` rows against ``cmat`` rows:
+    per-dimension in-order accumulation, NaN→+inf, first-minimum
+    tie-break over centroids the CALLER keeps ascending by id. The one
+    numpy fold behind :func:`_with_cells_arrow`, the fused PQ encode
+    kernel and the driver-regime residual assignment, so they cannot
+    drift.
+
+    Row-blocked with preallocated buffers: arithmetic is
+    element-for-element identical to the naive ``d2 += diff * diff``
+    loop (same per-element op order, so IEEE results — and oracle
+    verdicts — cannot move), but a 512-row block keeps diff/d2 resident
+    in cache instead of streaming an N × cells temporary through DRAM
+    per dimension (3× less memory traffic; this fold is the dominant
+    cost of count-adaptive cell assignment at sf10)."""
     import numpy as np
 
     best = np.empty(len(mat), dtype=np.int64)
@@ -1585,96 +1397,6 @@ def _pq_query_dtab(
     return dtab
 
 
-def pq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    ksub: int = 16,
-    n_iter: int = 3,
-    train_limit: int | None = None,
-) -> DataFrame:
-    """Product-quantization ANN with an asymmetric-distance (ADC) scan
-    (Jégou et al., "Product Quantization for Nearest Neighbor Search",
-    TPAMI 2011) — the memory gear of the ANN family: vectors live as
-    ``m`` one-byte codes instead of ``dim`` floats (64 doubles -> 4
-    codes here = 128x), which is what makes a 100 TB embedding corpus
-    scannable at all.
-
-    Index build: the vector is split into ``m`` subvectors; each
-    subspace trains its own deterministic Lloyd codebook of ``ksub``
-    centroids (:func:`_lloyd_centroid_list` — min-id seeds, decimal
-    means, bounded by ``train_limit`` exactly like the IVF family) and
-    every vector is encoded as its per-subspace nearest-centroid ids
-    (:func:`_with_cells` — a zero-shuffle map stage per subspace).
-
-    Query (ADC): the query is NOT encoded; per subspace a ``ksub``-row
-    distance table d2(q_sub, centroid) is computed once, and the
-    approximate distance of a database vector is the sum of ``m`` table
-    lookups — no float vector is touched during the scan. Here the
-    lookup is a broadcast join of the (m x ksub)-row table against the
-    exploded code stream, then one map-side-combined SUM per id and a
-    TakeOrderedAndProject: shuffle volume is |corpus| single-decimal
-    rows, scan volume is codes only.
-
-    Cross-engine value-checkability (q159): codebooks are bit-stable
-    (the q72 Lloyd argument, per subspace), encode assignments are the
-    pinned argmin fold, each table entry is rounded to DECIMAL(18,6)
-    (Spark round == DuckDB ROUND: half away from zero on the
-    non-negative domain), and the m-term ADC sum is exact decimal —
-    summation order cannot move it.
-
-    ``query_df`` must hold exactly ONE query row — enforced (the query
-    vector is collected once to the driver, which both pins the
-    contract and avoids re-executing the query plan per subspace);
-    batch queries compose by looping, or carry a q_id through the
-    distance table and group by (q_id, id).
-
-    At 100 TB: codebooks are m x ksub x dsub doubles (driver-sized
-    forever); training reads ``train_limit`` rows; encode is one map
-    pass over the corpus; the ADC scan reads 1/32nd the bytes of a
-    float scan and its only exchange carries one decimal per vector.
-    Recall is the PQ trade (codes quantize): composes with the IVF
-    cells (:func:`ann_topk_ivf_kmeans_lloyd`) for IVFPQ, where the
-    scan also prunes to n_probe cells.
-    """
-    emb, _empty, dsub, qv, n_rows = _pq_prep(
-        df, id_col, vec_col, query_df, m, "pq_topk"
-    )
-    if not dsub:
-        return _empty()
-    n_train = n_rows if train_limit is None else min(n_rows, train_limit)
-    if not _pq_fused_fits(n_train, m, dsub):
-        # distributed-regime only: the fused path reads the corpus once
-        # per job, so the multi-consumer checkpoint buys nothing there
-        emb = cut(emb)  # referenced by m training collects + m encode passes
-    adc = _pq_adc_scan(
-        emb, emb, qv, m, dsub, ksub, n_iter, train_limit, n_train_rows=n_train
-    )
-    if adc is None:
-        return _empty()
-    return adc.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
-
-
-def _pq_fused_fits(n_train: int, m: int, dsub: int) -> bool:
-    """True when the whole PQ training set fits the driver-regime byte
-    cap (rows × dim × 8 ≤ :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF`,
-    default 256 MiB) — the bound that turns on the fused one-collect
-    training AND the fused one-scan Arrow encode. Forcing the conf to 0
-    pins the PQ family to the distributed per-subspace path."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    cap = (
-        _driver_train_cap(spark)
-        if spark is not None
-        else _PQ_DRIVER_TRAIN_MAX_BYTES
-    )
-    return 0 < n_train * m * dsub * 8 <= cap
-
-
 def _probe_cells(qv: list[float], coarse: list, n_probe: int) -> list[int]:
     """Rank cells driver-side with the pinned sequential fold (the SQL
     oracle's list_reduce order), ties to the lower c_id — the probe
@@ -1695,366 +1417,208 @@ def _probe_cells(qv: list[float], coarse: list, n_probe: int) -> list[int]:
     ]
 
 
-def _pq_adc_scan(
-    train_src: DataFrame,
-    encode_src: DataFrame,
-    qv: list[float],
-    m: int,
-    dsub: int,
-    ksub: int,
-    n_iter: int,
-    train_limit: int | None,
-    n_train_rows: int | None = None,
-) -> DataFrame | None:
-    """The PQ core shared by :func:`pq_topk` and :func:`ivfpq_topk`:
-    train per-subspace codebooks on ``train_src``, encode ``encode_src``
-    (both ``(id, v)`` frames; they differ when an IVF stage pruned the
-    scan set), build the query's m distance tables, and return the
-    un-truncated ``(id, adc_d2)`` frame. ``None`` when a subspace
-    trains empty (empty corpus). ``n_train_rows`` is the caller's
-    already-known training row count (post-``train_limit``); passing it
-    skips the sizing action.
-
-    Training-floor cut (round 8): when the whole training set fits the
-    driver-regime byte cap, it is sized ONCE and collected ONCE (one
-    Arrow transfer), and all m subspace codebooks train from numpy
-    slices of that matrix (:func:`_lloyd_driver_matrix`) — previously
-    each subspace paid its own sizing job + collect, and those 2m
-    driver round-trips were most of the PQ family's fixed cost at bench
-    scale. Value-identical: numpy column slices of collected full
-    vectors equal collected F.slice projections, and the per-subspace
-    regime bound (rows x dsub x 8) is implied by the full-matrix bound.
-
-    Encode-pass fusion (round 10): in the same regime the m per-
-    subspace ``_with_cells`` passes collapse into ONE Arrow scan
-    (:func:`_pq_encode_arrow`) — the plan drops from m map passes over
-    ``encode_src`` (each a separate read of the checkpoint/scan) to a
-    single pass, identical per-subspace assignment arithmetic.
-
-    Above the cap, the per-subspace `_lloyd_centroid_list` path stands
-    (each subspace independently picks driver or distributed regime —
-    the 100 TB path is unchanged)."""
-    spark = train_src.sparkSession
-    tr = (
-        train_src
-        if train_limit is None
-        else train_src.orderBy("id").limit(train_limit)
-    )
-    n_train = (
-        tr.agg(F.count(F.lit(1))).first()[0]
-        if n_train_rows is None
-        else n_train_rows
-    )
-    if _pq_fused_fits(n_train, m, dsub):
-        ids, mat = _collect_matrix(tr)
-        cents_by_sub = [
-            _lloyd_driver_matrix(
-                ids, mat[:, j * dsub : (j + 1) * dsub], ksub, n_iter
-            )
-            for j in range(m)
-        ]
-        if any(not c for c in cents_by_sub):
-            return None
-        codes = _pq_encode_arrow(encode_src, cents_by_sub, dsub)
-        dtab = _pq_query_dtab(
-            spark, [(None, qv)], cents_by_sub, dsub, with_cell=False
-        )
-        return (
-            codes.join(F.broadcast(dtab), ["sub_j", "code"])
-            .groupBy("id")
-            .agg(F.sum("d2").cast("double").alias("adc_d2"))
-        )
-    cents_by_sub = []
-    codes_parts = []
-    for j in range(m):
-        sub = train_src.select(
-            "id", F.slice("v", j * dsub + 1, dsub).alias("v")
-        )
-        cent = _lloyd_centroid_list(
-            sub, ksub, n_iter, train_limit=train_limit
-        )
-        if not cent:
-            return None
-        cents_by_sub.append(cent)
-        sub_enc = encode_src.select(
-            "id", F.slice("v", j * dsub + 1, dsub).alias("v")
-        )
-        codes_parts.append(
-            _with_cells(sub_enc, cent).select(
-                "id", F.lit(j).alias("sub_j"), F.col("c_id").alias("code")
-            )
-        )
-    codes = codes_parts[0]
-    for c in codes_parts[1:]:
-        codes = codes.unionAll(c)
-    dtab = _pq_query_dtab(
-        spark, [(None, qv)], cents_by_sub, dsub, with_cell=False
-    )
-    return (
-        codes.join(F.broadcast(dtab), ["sub_j", "code"])
-        .groupBy("id")
-        .agg(F.sum("d2").cast("double").alias("adc_d2"))
-    )
-
-
 def ivfpq_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     query_df: DataFrame,
     k: int = 10,
-    n_cells: int = 8,
+    n_cells: int | None = 8,
     n_probe: int = 2,
     m: int = 4,
     ksub: int = 16,
     n_iter: int = 3,
     train_limit: int | None = None,
+    residual: bool = False,
 ) -> DataFrame:
-    """IVFPQ: the coarse IVF stage prunes the scan to the query's
-    ``n_probe`` nearest learned cells, then the PQ/ADC stage
-    (:func:`_pq_adc_scan`) scores only the survivors — FAISS's
-    ``IndexIVFPQ`` composition, which is THE standard shape for
-    billion-vector search: the IVF cut bounds scan rows
-    (~``n_probe/n_cells`` of the corpus), the codes bound scan bytes
-    (m per vector), and both index structures (coarse centroids +
-    subspace codebooks) stay driver-sized forever.
+    """Product-quantization ANN with an asymmetric-distance (ADC) scan
+    (Jégou et al., "Product Quantization for Nearest Neighbor Search",
+    TPAMI 2011), optionally behind a learned IVF coarse stage — the
+    FAISS index-factory composition of one coarse quantizer plus one
+    codec (``PQ{m}`` / ``IVF{n_cells},PQ{m}``):
 
-    Determinism = the q72 coarse chain + the q159 PQ chain, composed:
-    cells rank by the same sequential-fold squared L2 with c_id
-    tie-break (the probe list is therefore bit-stable), and the ADC sum
-    is exact decimal — hence the cross-engine value oracle (q160).
+    - ``n_cells=None``: flat PQ (q159) — no coarse stage, every vector
+      is scanned;
+    - ``n_cells=c``: IVFPQ (q160) — the query's ``n_probe`` nearest of
+      ``c`` learned cells bound the scan ROWS (~n_probe/n_cells of the
+      corpus) while the codes bound the scan BYTES; ``n_probe=c`` is
+      flat PQ row for row;
+    - ``residual=True``: IVFPQ by_residual (q161), the faithful
+      ``IndexIVFPQ`` — codebooks train on, and codes encode,
+      ``v - coarse_centroid(cell(v))``; residuals cluster around the
+      origin whatever the cell, so the ksub codewords model a far
+      tighter distribution (Jégou 2011 §IV-B). The query's residual
+      differs per probed cell, so each probed cell owns its own m
+      distance tables (an n_probe × m × ksub-row broadcast) and codes
+      join their OWN cell's table. Needs the coarse stage:
+      ``n_cells=None`` raises ``ValueError``.
 
-    This is the non-residual form (global codebooks over raw vectors).
-    Faithful IVFPQ quantizes per-cell RESIDUALS (v - coarse_centroid),
-    buying accuracy at the cost of per-cell distance tables; the
-    residual subtraction is exact IEEE and would oracle the same way —
-    it is the documented next gear, not a semantics change.
+    Index build: the coarse centroids and the m per-subspace codebooks
+    of ``ksub`` codewords are the deterministic Lloyd chain of
+    :func:`_lloyd_centroid_list`, trained on the ``train_limit``
+    smallest-id rows (``ORDER BY id LIMIT train_limit``); every scanned
+    vector is encoded as its m per-subspace nearest-codeword ids — 4
+    small ints instead of 64 doubles, which is what makes a 100 TB
+    corpus scannable at all.
+
+    Query (ADC): the query is NOT encoded; per subspace a ksub-row table
+    d2(q_sub, codeword) rounded to DECIMAL(18,6) is computed engine-side
+    (:func:`_pq_query_dtab`), and a vector's distance is the exact
+    decimal sum of its m table lookups: a broadcast join against the
+    code stream, one map-side-combined SUM per id, TakeOrderedAndProject.
+    The only exchange carries one decimal per scanned vector.
+
+    Cross-engine value oracles (q159–q161) hold because every step is
+    pinned: bit-stable Lloyd chains, the argmin fold of
+    :func:`_with_cells` for every assignment, probe ranking by
+    :func:`_probe_cells`, exact IEEE residual subtraction, and ADC sums
+    in exact decimal (summation order cannot move them).
+
+    Two regimes, identical rows (a pytest pins q159–q161 equal under
+    both), chosen by training bytes (rows × dim × 8) against
+    :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF` on the corpus's session:
+
+    - **driver**: ONE Arrow collect of the training rows feeds numpy
+      coarse training, the probe ranking, the training residuals and all
+      m codebooks (:func:`_lloyd_driver_matrix` over column slices); ONE
+      Arrow scan assigns cells, filters to the probes, subtracts
+      residuals and encodes all m subspaces (:func:`_pq_encode_arrow`);
+    - **distributed**: the corpus is cut once; coarse training is
+      :func:`_lloyd_centroid_list`, the candidates are the probed cells
+      of :func:`_with_cells` (residuals one broadcast-join map stage),
+      and each subspace trains through ``_lloyd_centroid_list`` and
+      encodes through ``_with_cells`` — nothing larger than a codebook
+      ever reaches the driver.
+
+    ``query_df`` must hold exactly one row (:func:`_query_vector`).
+    Returns ``(id, adc_d2)`` ascending by distance then id, at most
+    ``k`` rows, ids passed through with the caller's type; an empty or
+    all-null corpus returns zero rows.
     """
-    emb, _empty, dsub, qv, n_rows = _pq_prep(
-        df, id_col, vec_col, query_df, m, "ivfpq_topk"
+    if residual and n_cells is None:
+        raise ValueError(
+            "ivfpq_topk residual=True encodes v - coarse_centroid and "
+            "needs a coarse stage; got n_cells=None"
+        )
+    emb = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if not dsub:
-        return _empty()
+    empty = emb.select(
+        "id", F.lit(None).cast("double").alias("adc_d2")
+    ).where(F.lit(False))
+    # Validate BEFORE any eager materialization (a corpus-scale cut must
+    # not be spent on an argument error). max(size) counts non-null
+    # vectors only, whatever spark.sql.legacy.sizeOfNull says (under the
+    # legacy default size(null) = -1 would read an all-null corpus as
+    # dim -1); the row count rides in the same job and picks the regime.
+    stats = emb.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.when(F.col("v").isNotNull(), F.size("v"))).alias("dim"),
+    ).first()
+    n_rows, dim = stats["n"], stats["dim"] or 0
+    if not dim:
+        return empty
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into m={m} subspaces")
+    qv = _query_vector(query_df, vec_col, "ivfpq_topk")
+    if len(qv) != dim:
+        raise ValueError(f"query dim {len(qv)} != corpus dim {dim}")
+    dsub = dim // m
     n_train = n_rows if train_limit is None else min(n_rows, train_limit)
-    if _pq_fused_fits(n_train, m, dsub):
-        # Fused driver regime (round 10): ONE Arrow collect trains the
-        # coarse centroids AND all m subspace codebooks, and ONE Arrow
-        # scan assigns coarse cells, filters to the probes and encodes
-        # all m subspaces (_pq_encode_arrow) — the previous plan paid a
-        # corpus checkpoint, a separate coarse-assignment pass, a
-        # candidate checkpoint, a sizing count and a second collect.
-        # Arithmetic is the pytest-pinned fold everywhere, so results
-        # (and the q160 oracle verdict) cannot move.
+    if not n_train:  # nothing to train codebooks on
+        return empty
+    spark = emb.sparkSession
+    coarse = probes = None
+    if n_train * dim * 8 <= _driver_train_cap(spark):
+        import numpy as np
+
         tr = emb if train_limit is None else emb.orderBy("id").limit(train_limit)
         ids, mat = _collect_matrix(tr)
-        coarse = _lloyd_driver_matrix(ids, mat, n_cells, n_iter)
-        if not coarse:
-            return _empty()
-        probes = _probe_cells(qv, coarse, n_probe)
+        if n_cells is not None:
+            coarse = _lloyd_driver_matrix(ids, mat, n_cells, n_iter)
+            probes = _probe_cells(qv, coarse, n_probe)
+            if residual:  # residuals of the TRAINING rows only
+                c_mat = np.array([v for _, v in coarse], dtype=np.float64)
+                mat = mat - c_mat[_argmin_cells_blocked(mat, c_mat)]
         cents_by_sub = [
             _lloyd_driver_matrix(
                 ids, mat[:, j * dsub : (j + 1) * dsub], ksub, n_iter
             )
             for j in range(m)
         ]
-        if any(not c for c in cents_by_sub):
-            return _empty()
-        codes = _pq_encode_arrow(
-            emb, cents_by_sub, dsub, coarse=coarse, probes=probes
-        )
-        dtab = _pq_query_dtab(
-            df.sparkSession, [(None, qv)], cents_by_sub, dsub, with_cell=False
-        )
-        adc = (
-            codes.join(F.broadcast(dtab), ["sub_j", "code"])
-            .groupBy("id")
-            .agg(F.sum("d2").cast("double").alias("adc_d2"))
-        )
-        return adc.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
-    emb = cut(emb)  # coarse training + assignment + m PQ passes
-    coarse = _lloyd_centroid_list(emb, n_cells, n_iter, train_limit=train_limit)
-    if not coarse:
-        return _empty()
-    probes = _probe_cells(qv, coarse, n_probe)
-    # the pruned candidate set feeds m encode branches — cut it once or
-    # the full-corpus coarse assignment re-executes per subspace
-    cand = cut(
-        _with_cells(emb, coarse)
-        .where(F.col("c_id").isin(probes))
-        .select("id", "v")
-    )
-    adc = _pq_adc_scan(emb, cand, qv, m, dsub, ksub, n_iter, train_limit)
-    if adc is None:
-        return _empty()
-    return adc.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
-
-
-def ivfpq_residual_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    ksub: int = 16,
-    n_iter: int = 3,
-    train_limit: int | None = None,
-) -> DataFrame:
-    """Residual IVFPQ — the faithful ``IndexIVFPQ`` (by_residual) form
-    :func:`ivfpq_topk`'s docstring names as the next gear: PQ codebooks
-    are trained on, and codes encode, the per-cell RESIDUAL
-    ``v - coarse_centroid(cell(v))`` instead of the raw vector.
-    Residuals cluster around the origin regardless of which cell a
-    vector lives in, so the ksub codewords per subspace model a far
-    tighter distribution than global raw-vector codebooks — the
-    accuracy the residual trade buys (Jégou 2011 §IV-B).
-
-    The cost is per-cell query tables: the query's residual differs per
-    probed cell, so each probed cell owns its own m distance tables —
-    here an (n_probe × m × ksub)-row broadcast (a few KB at any corpus
-    scale; FAISS pays the same table-per-probe multiplication). The
-    scan is unchanged: codes equi-join their OWN cell's table (the
-    join key gains the cell id), one map-side-combined decimal SUM per
-    id, TakeOrderedAndProject.
-
-    Determinism: residual subtraction is exact IEEE (engine-side
-    ``zip_with`` double subtraction ≡ the oracle's ``list_transform``
-    subtraction ≡ the driver's query-residual floats), codebooks are
-    the bit-stable Lloyd chain over those residuals, and the ADC sum
-    is exact decimal — hence the cross-engine value oracle (q161).
-
-    At 100 TB: identical shuffle/broadcast shape to :func:`ivfpq_topk`
-    (residual construction is one extra map stage against a broadcast
-    centroid table); index structures stay driver-sized.
-    """
-    emb, _empty, dsub, qv, n_rows = _pq_prep(
-        df, id_col, vec_col, query_df, m, "ivfpq_residual_topk"
-    )
-    if not dsub:
-        return _empty()
-    spark = df.sparkSession
-    n_train = n_rows if train_limit is None else min(n_rows, train_limit)
-    if _pq_fused_fits(n_train, m, dsub):
-        # Fused driver regime (round 10): ONE Arrow collect serves the
-        # coarse training, the probe ranking AND the residual subspace
-        # training — residuals are computed in numpy (mat minus the
-        # own-cell centroid row: the exact IEEE elementwise subtraction
-        # of the engine's zip_with, over the pytest-pinned assignment
-        # fold), so the full-corpus ``resv`` frame is never
-        # materialized. ONE Arrow scan then assigns, filters to the
-        # probes, subtracts the residual and encodes all m subspaces
-        # (_pq_encode_arrow, residual=True), emitting (id, cell, sub_j,
-        # code) directly — the candidate checkpoint and the
-        # codes-to-cell re-join disappear from the plan. The previous
-        # shape paid: emb cut, resv cut, cand cut, a sizing count and a
-        # second full collect — 5 extra actions per query.
-        tr = emb if train_limit is None else emb.orderBy("id").limit(train_limit)
-        ids, mat = _collect_matrix(tr)
-        coarse = _lloyd_driver_matrix(ids, mat, n_cells, n_iter)
-        if not coarse:
-            return _empty()
-        import numpy as np
-
-        c_ids = np.array([c for c, _ in coarse], dtype=np.int64)
-        c_mat = np.array([v for _, v in coarse], dtype=np.float64)
-        assign = _argmin_cells_blocked(mat, c_mat)
-        res_mat = mat - c_mat[assign]
-        probes = _probe_cells(qv, coarse, n_probe)
-        cents_by_sub = [
-            _lloyd_driver_matrix(
-                ids, res_mat[:, j * dsub : (j + 1) * dsub], ksub, n_iter
-            )
-            for j in range(m)
-        ]
-        if any(not c for c in cents_by_sub):
-            return _empty()
         codes = _pq_encode_arrow(
             emb, cents_by_sub, dsub, coarse=coarse, probes=probes,
-            residual=True,
+            residual=residual,
         )
+    else:
+        emb = cut(emb)  # coarse training + assignment + m subspace reads
+        train = cand = emb
+        if n_cells is not None:
+            coarse = _lloyd_centroid_list(
+                emb, n_cells, n_iter, train_limit=train_limit
+            )
+            probes = _probe_cells(qv, coarse, n_probe)
+            cand = _with_cells(emb, coarse)
+            if residual:
+                # one map stage against the broadcast centroid table
+                # (exact IEEE elementwise subtraction); cut once — m
+                # training reads and the probe filter reference it
+                cent_df = local_frame(
+                    spark, coarse, "c_id long, c_vec array<double>"
+                )
+                cand = train = cut(
+                    cand.join(F.broadcast(cent_df), "c_id").select(
+                        "id",
+                        "c_id",
+                        F.zip_with(
+                            "v",
+                            "c_vec",
+                            lambda a, b: a.cast("double") - b.cast("double"),
+                        ).alias("v"),
+                    )
+                )
+            # the probed candidates feed m encode passes — cut them once
+            # or the full-corpus coarse assignment re-executes per subspace
+            cand = cut(cand.where(F.col("c_id").isin(probes)))
+        cents_by_sub = []
+        codes = None
+        for j in range(m):
+            cent = _lloyd_centroid_list(
+                train.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
+                ksub,
+                n_iter,
+                train_limit=train_limit,
+            )
+            cents_by_sub.append(cent)
+            part = _with_cells(
+                cand.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
+                cent,
+            ).select("id", F.lit(j).alias("sub_j"), F.col("c_id").alias("code"))
+            codes = part if codes is None else codes.unionAll(part)
+        if residual:
+            codes = codes.join(
+                cand.select("id", F.col("c_id").alias("cell")), "id"
+            )
+    if residual:
         # per-probed-cell query residuals as DATA (driver float
-        # subtraction is the same IEEE double op the oracle's SQL
-        # subtraction performs); the d2 table entries themselves are
-        # computed ENGINE-side so the decimal rounding matches the
-        # oracle's ROUND exactly
-        q_res_rows = [
+        # subtraction is the IEEE double op of the oracle's SQL)
+        q_rows = [
             (cid, [q - c for q, c in zip(qv, cv)])
             for cid, cv in coarse
-            if cid in set(probes)
+            if cid in probes
         ]
-        dtab = _pq_query_dtab(
-            spark, q_res_rows, cents_by_sub, dsub, with_cell=True
-        )
-        adc = (
-            codes.join(F.broadcast(dtab), ["cell", "sub_j", "code"])
-            .groupBy("id")
-            .agg(F.sum("d2").cast("double").alias("adc_d2"))
-        )
-        return adc.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
-    emb = cut(emb)  # coarse training + assignment reference it
-    coarse = _lloyd_centroid_list(emb, n_cells, n_iter, train_limit=train_limit)
-    if not coarse:
-        return _empty()
-    cent_df = local_frame(
-        spark,
-        coarse, "c_id long, c_vec array<double>"
-    )
-    # residuals: one map stage (broadcast centroid join, exact IEEE
-    # elementwise subtraction); cut once — m training collects, m
-    # encode passes and the candidate filter all reference it
-    resv = cut(
-        _with_cells(emb, coarse)
-        .join(F.broadcast(cent_df), "c_id")
-        .select(
-            "id",
-            "c_id",
-            F.zip_with(
-                "v", "c_vec", lambda a, b: a.cast("double") - b.cast("double")
-            ).alias("v"),
-        )
-    )
-    probes = _probe_cells(qv, coarse, n_probe)
-    cand = cut(resv.where(F.col("c_id").isin(probes)))
-    # per-probed-cell query residuals as DATA (see the fused branch)
-    q_res_rows = [
-        (cid, [q - c for q, c in zip(qv, cv)])
-        for cid, cv in coarse
-        if cid in set(probes)
-    ]
-    # per-subspace training over the resv frame (each subspace
-    # independently picks driver or distributed regime — the 100 TB
-    # path); encode stays m _with_cells passes over the candidate cut
-    cents_by_sub = []
-    codes_parts = []
-    for j in range(m):
-        sub = resv.select(
-            "id", F.slice("v", j * dsub + 1, dsub).alias("v")
-        )
-        cent = _lloyd_centroid_list(
-            sub, ksub, n_iter, train_limit=train_limit
-        )
-        if not cent:
-            return _empty()
-        cents_by_sub.append(cent)
-        sub_enc = cand.select("id", F.slice("v", j * dsub + 1, dsub).alias("v"))
-        codes_parts.append(
-            _with_cells(sub_enc, cent).select(
-                "id", F.lit(j).alias("sub_j"), F.col("c_id").alias("code")
-            )
-        )
-    codes = codes_parts[0]
-    for c in codes_parts[1:]:
-        codes = codes.unionAll(c)
-    dtab = _pq_query_dtab(spark, q_res_rows, cents_by_sub, dsub, with_cell=True)
-    adc = (
-        codes.join(cand.select("id", F.col("c_id").alias("cell")), "id")
-        .join(F.broadcast(dtab), ["cell", "sub_j", "code"])
+    else:
+        q_rows = [(None, qv)]
+    dtab = _pq_query_dtab(spark, q_rows, cents_by_sub, dsub, with_cell=residual)
+    keys = ["cell", "sub_j", "code"] if residual else ["sub_j", "code"]
+    return (
+        codes.join(F.broadcast(dtab), keys)
         .groupBy("id")
         .agg(F.sum("d2").cast("double").alias("adc_d2"))
+        .orderBy(F.asc("adc_d2"), F.asc("id"))
+        .limit(k)
     )
-    return adc.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
 
 
 def sq8_topk(
@@ -2097,8 +1661,8 @@ def sq8_topk(
     distance is the exact decimal sum of those 64 parts — summation
     order cannot move it (mirrors the PQ/ADC table rule).
 
-    ``query_df`` must hold exactly ONE row (enforced, like
-    :func:`pq_topk`). Rows whose vector is NULL are dropped from the
+    ``query_df`` must hold exactly ONE row (enforced by
+    :func:`_query_vector`, like every single-query gear). Rows whose vector is NULL are dropped from the
     scan; a NULL *element* quantizes to code 0 (``greatest`` skips the
     NULL — bit-identical to the first cut), and an all-null DIMENSION
     contributes 0 error (the SUM-skips-null semantics of the first
@@ -2134,19 +1698,7 @@ def sq8_topk(
             "id", F.lit(None).cast("double").alias("adc_d2")
         ).where(F.lit(False))
 
-    qrows = query_df.select(
-        F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    if len(qrows) != 1:
-        raise ValueError(
-            f"sq8_topk expects exactly one query row, got {len(qrows)}"
-        )
-    qraw = qrows[0]["v"]
-    if qraw is None or any(x is None for x in qraw):
-        raise ValueError(
-            "sq8_topk query vector must be non-null with no null elements"
-        )
-    qv = [float(x) for x in qraw]
+    qv = _query_vector(query_df, vec_col, "sq8_topk")
     dim = len(qv)
     live = emb.where(F.col("v").isNotNull())
     # train: ONE corpus pass — per-dimension bounds via explode +
@@ -2278,20 +1830,9 @@ def sq8_topk_arrow(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    qrows = query_df.select(
-        F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    if len(qrows) != 1:
-        raise ValueError(
-            f"sq8_topk_arrow expects exactly one query row, got {len(qrows)}"
-        )
-    qraw = qrows[0]["v"]
-    if qraw is None or any(x is None for x in qraw):
-        raise ValueError(
-            "sq8_topk_arrow query vector must be non-null with no null "
-            "elements"
-        )
-    qv = np.array([float(x) for x in qraw], dtype=np.float64)
+    qv = np.array(
+        _query_vector(query_df, vec_col, "sq8_topk_arrow"), dtype=np.float64
+    )
     dim = len(qv)
     live = emb.where(F.col("v").isNotNull())
     # bounds: the same ONE map-side-combined pass as sq8_topk (at most
@@ -2410,12 +1951,8 @@ def mmr_rerank(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    qrows = query_df.select(
-        F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    if len(qrows) != 1:
-        raise ValueError(f"mmr_rerank expects exactly one query row, got {len(qrows)}")
-    q_arr = F.array(*[F.lit(float(x)) for x in qrows[0]["v"]])
+    qv = _query_vector(query_df, vec_col, "mmr_rerank")
+    q_arr = F.array(*[F.lit(x) for x in qv])
     cand = (
         emb.withColumn("q_vec", q_arr)
         .select("id", "v", cosine(F.col("v"), F.col("q_vec")).alias("rel"))
@@ -2680,20 +2217,7 @@ def binary_sign_ann(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    qrows = query_df.select(
-        F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    if len(qrows) != 1:
-        raise ValueError(
-            f"binary_sign_ann expects exactly one query row, got {len(qrows)}"
-        )
-    qraw = qrows[0]["v"]
-    if qraw is None or any(x is None for x in qraw):
-        raise ValueError(
-            "binary_sign_ann query vector must be non-null with no null "
-            "elements"
-        )
-    qv = [float(x) for x in qraw]
+    qv = _query_vector(query_df, vec_col, "binary_sign_ann")
     if len(qv) != dim:
         raise ValueError(f"binary_sign_ann expects dim={dim}, got {len(qv)}")
     emb = emb.where(F.col("v").isNotNull())

@@ -1113,11 +1113,12 @@ GROUP BY id ORDER BY adc_d2 ASC, id ASC LIMIT {k}"""
     _q159_oracle(),
 )
 def q159(spark, sf):
-    from ipes_data_pipeline_spark.operators.similarity import pq_topk
+    from ipes_data_pipeline_spark.operators.similarity import ivfpq_topk
 
     emb = t(spark, sf, "embeddings")
-    return pq_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 7), k=10
+    return ivfpq_topk(
+        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 7), k=10,
+        n_cells=None,
     )
 
 
@@ -1282,11 +1283,10 @@ def _materialize_ctes(sql: str) -> str:
     _materialize_ctes(_q161_oracle()),
 )
 def q161(spark, sf):
-    from ipes_data_pipeline_spark.operators.similarity import (
-        ivfpq_residual_topk,
-    )
+    from ipes_data_pipeline_spark.operators.similarity import ivfpq_topk
 
     emb = t(spark, sf, "embeddings")
-    return ivfpq_residual_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 7), k=10
+    return ivfpq_topk(
+        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == 7), k=10,
+        residual=True,
     )

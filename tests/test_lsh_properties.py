@@ -499,17 +499,19 @@ def test_lloyd_driver_and_distributed_regimes_agree(spark):
         assert dv == xv  # exact float equality, not approx
 
 
-def test_pq_driver_train_cap_conf_pins_regimes_equal(spark):
-    """spark.ipes.pqDriverTrainMaxBytes=0 forces the whole PQ family to
-    the distributed per-subspace path (round 11 — the 100 TB regime,
-    previously only reachable by growing the corpus past the hard-coded
-    256 MiB cap). The forced regime must produce the exact rows of the
-    default fused-driver regime."""
+@pytest.mark.parametrize(
+    "name", ["q159_pq_ann", "q160_ivfpq_ann", "q161_ivfpq_residual_ann"]
+)
+def test_pq_driver_train_cap_conf_pins_regimes_equal(spark, name):
+    """spark.ipes.pqDriverTrainMaxBytes=0 forces the PQ family to the
+    distributed branch (the 100 TB regime, otherwise only reachable by
+    growing the corpus past the 256 MiB cap). For flat PQ (q159), IVFPQ
+    (q160) and residual IVFPQ (q161) alike, the forced regime must
+    produce the exact rows of the default driver regime."""
     from ipes_data_pipeline_spark.queries import REGISTRY, load_all
 
     load_all()
     sf_dir = "/root/testdata/sf0.001"
-    name = "q159_pq_ann"
     fused = sorted(map(tuple, REGISTRY[name].spark(spark, sf_dir).collect()))
     spark.conf.set("spark.ipes.pqDriverTrainMaxBytes", "0")
     try:
@@ -522,11 +524,11 @@ def test_pq_driver_train_cap_conf_pins_regimes_equal(spark):
 
 
 def test_pq_fused_training_collect_matches_per_subspace(spark):
-    """_pq_adc_scan's round-8 fused path (one collect, all m codebooks
-    from numpy slices of the full matrix) must be BIT-IDENTICAL to the
-    per-subspace _lloyd_centroid_list path it short-circuits — the q159
-    oracle only exercises whichever branch the fixture size selects, so
-    this pins the numpy-slice == F.slice-collect claim directly."""
+    """ivfpq_topk's driver branch (one collect, all m codebooks from
+    numpy slices of the full matrix) must be BIT-IDENTICAL to the
+    per-subspace _lloyd_centroid_list training of its distributed
+    branch — this pins the numpy-slice == F.slice-collect claim
+    directly, codebook by codebook."""
     from pyspark.sql import functions as F
 
     from ipes_data_pipeline_spark.operators.similarity import (
@@ -557,46 +559,6 @@ def test_pq_fused_training_collect_matches_per_subspace(spark):
         assert [c for c, _ in fused] == [c for c, _ in per_sub]
         for (_, fv), (_, pv) in zip(fused, per_sub):
             assert fv == pv  # exact float equality per element
-
-
-def test_ivf_kmeans_multi_probe_improves_recall(spark):
-    """ann_topk_ivf_kmeans(n_probe=p): probing the p nearest cells sees
-    a candidate superset of p-1 probes, so recall against the brute
-    -force top-k is monotone — and n_probe = n_cells IS brute force.
-    (Regression for the round-3 finding: limit(n_probe) used to drop
-    QUERY rows instead of ranking cells.)"""
-    from pyspark.sql import functions as F
-
-    from ipes_data_pipeline_spark.operators.similarity import (
-        ann_topk_bruteforce,
-        ann_topk_ivf_kmeans,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") == 7)
-    exact = {
-        r["id"]
-        for r in ann_topk_bruteforce(emb, "vec_id", "embedding", q, k=10).collect()
-    }
-    recalls = []
-    for p in (1, 2, 4):
-        got = {
-            r["id"]
-            for r in ann_topk_ivf_kmeans(
-                emb, "vec_id", "embedding", q, n_cells=4, k=10, n_probe=p
-            ).collect()
-        }
-        recalls.append(len(exact & got) / len(exact))
-    assert recalls == sorted(recalls), recalls  # monotone in n_probe
-    # probing every cell IS brute force
-    full = {
-        r["id"]
-        for r in ann_topk_ivf_kmeans(
-            emb, "vec_id", "embedding", q, n_cells=4, k=10, n_probe=4
-        ).collect()
-    }
-    assert full == exact
-    assert recalls[-1] == 1.0
 
 
 def test_minhash_empty_shingle_docs_band_on_null_components(spark):

@@ -480,29 +480,39 @@ def test_grouped_topk_null_ordering_matches_window(spark):
 
 
 def test_pq_topk_contract_and_recall(spark):
-    """PQ ADC top-k: the one-row query contract is enforced, distances
-    are non-negative and ascending, and the quantized top-1 for a query
-    that IS a corpus vector must place that vector first (its own
-    reconstruction error is minimal by construction on this separated
-    fixture)."""
+    """Flat PQ ADC top-k (``ivfpq_topk(n_cells=None)``): the one-row
+    query contract is enforced, distances are non-negative and
+    ascending, and the quantized top-1 for a query that IS a corpus
+    vector must place that vector first (its own reconstruction error
+    is minimal by construction on this separated fixture). A residual
+    codec needs a coarse stage: ``residual=True, n_cells=None`` is a
+    ValueError."""
     import pytest
 
     from ipes_data_pipeline_spark.operators import similarity as S
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q7 = emb.filter("vec_id = 7")
-    top = S.pq_topk(emb, "vec_id", "embedding", q7, k=5).collect()
+    top = S.ivfpq_topk(
+        emb, "vec_id", "embedding", q7, k=5, n_cells=None
+    ).collect()
     assert len(top) == 5
     dists = [r["adc_d2"] for r in top]
     assert dists == sorted(dists) and all(d >= 0.0 for d in dists)
     assert top[0]["id"] == 7
 
     with pytest.raises(ValueError, match="exactly one query row"):
-        S.pq_topk(emb, "vec_id", "embedding", emb.limit(2), k=5)
+        S.ivfpq_topk(
+            emb, "vec_id", "embedding", emb.limit(2), k=5, n_cells=None
+        )
+    with pytest.raises(ValueError, match="residual"):
+        S.ivfpq_topk(
+            emb, "vec_id", "embedding", q7, k=5, n_cells=None, residual=True
+        )
 
 
 def test_pq_prep_null_vectors_and_null_query_elements(spark):
-    """_pq_prep edge contracts (round-6 advice): an all-null-vector
+    """PQ prologue edge contracts (round-6 advice): an all-null-vector
     corpus is an EMPTY corpus (zero-row frame back) even under the
     legacy sizeOfNull conf where size(null) = -1; a query vector with
     null elements raises a contract ValueError naming the op, not an
@@ -523,7 +533,12 @@ def test_pq_prep_null_vectors_and_null_query_elements(spark):
     try:
         for conf in ("true", "false"):
             spark.conf.set("spark.sql.legacy.sizeOfNull", conf)
-            assert S.pq_topk(null_corpus, "vec_id", "embedding", q).count() == 0
+            assert (
+                S.ivfpq_topk(
+                    null_corpus, "vec_id", "embedding", q, n_cells=None
+                ).count()
+                == 0
+            )
             assert (
                 S.ivfpq_topk(null_corpus, "vec_id", "embedding", q).count()
                 == 0
@@ -541,7 +556,7 @@ def test_pq_prep_null_vectors_and_null_query_elements(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="pq_topk.*null"):
-        S.pq_topk(emb, "vec_id", "embedding", bad_q, k=5)
+        S.ivfpq_topk(emb, "vec_id", "embedding", bad_q, k=5, n_cells=None)
 
 
 def test_ivfpq_probe_all_equals_pq(spark):
@@ -554,7 +569,12 @@ def test_ivfpq_probe_all_equals_pq(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q7 = emb.filter("vec_id = 7")
-    full = [tuple(r) for r in S.pq_topk(emb, "vec_id", "embedding", q7, k=8).collect()]
+    full = [
+        tuple(r)
+        for r in S.ivfpq_topk(
+            emb, "vec_id", "embedding", q7, k=8, n_cells=None
+        ).collect()
+    ]
     all_probe = [
         tuple(r)
         for r in S.ivfpq_topk(

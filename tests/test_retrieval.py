@@ -144,6 +144,14 @@ def test_mmr_steps_are_sequential_and_scores_monotone_start(spark):
     assert all(out[0]["mmr_score"] >= r["mmr_score"] for r in out[1:])
 
 
+def test_mmr_null_query_vector_or_element_raises_named_error(spark):
+    corpus = _vec_df(spark, [(1, [0.9, 0.1]), (2, [0.1, 0.9])])
+    for qv in (None, [1.0, None]):
+        q = _vec_df(spark, [(99, qv)])
+        with pytest.raises(ValueError, match="mmr_rerank.*null"):
+            mmr_rerank(corpus, "id", "v", q, n_candidates=2, k=1)
+
+
 # ------------------------------------------------------------ batch ANN
 
 
