@@ -451,7 +451,7 @@ def simhash_signatures(
     (q43 tripled on the driver bench). The masks now get their OWN
     projection (computed once per row, like ``th``); the folds are pure
     shift-and-mask over the staged array
-    (scripts/ab_simhash_signature.py: inline 6.0 s / staged 1.65 s /
+    (OPTIMIZATION_r11.md §1: inline 6.0 s / staged 1.65 s /
     r9 substring-compare 1.95 s medians at sf0.1, identical outputs).
     """
     toks_df = spread(df).select(

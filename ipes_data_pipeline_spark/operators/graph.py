@@ -44,7 +44,7 @@ oracle to pre-aggregate too — callers that want it should aggregate
 their own edge tables, as q140 does.
 
 ACCEPTED round 5: sparse contrib-carry (see the loop comment below) —
-2.96 s → 2.42 s median at sf0.1 (scripts/bench_pagerank_variants.py),
+2.96 s → 2.42 s median at sf0.1 (round-5 interleaved A/B),
 value-identical checksums, removes iterations-1 |nodes| left joins
 from the unrolled plan.
 
@@ -52,7 +52,7 @@ Round-11 additions to the rejected ledger (all value-identical, all
 within noise at sf0.1 / local[32], 5 interleaved passes each):
 (g) cut() the (edges ⋈ out_w) frame once so rounds skip the per-round
 out_w broadcast rebuild — 3.05 s vs 2.98 s, jobs/run 20 vs 21
-(scripts/ab_pagerank_ewcut.py); (h) ``broadcast_ranks=False`` shuffle
+(OPTIMIZATION_r11.md §3); (h) ``broadcast_ranks=False`` shuffle
 joins to collapse the broadcast-build jobs — 3.35 vs 3.46 s, jobs 20
 vs 21 (AQE materializes each query stage as its own job either way);
 (i) pre-repartition edges by ``dst`` hoping the per-round

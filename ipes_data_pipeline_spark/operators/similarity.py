@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ipes_data_pipeline_spark import conf
 from ipes_data_pipeline_spark.functions.vectors import cosine, dot, norm, sign_bucket
 from ipes_data_pipeline_spark.operators.util import cut, local_frame
 
@@ -665,35 +666,10 @@ def cosine_pairs_bucketed(
     )
 
 
-#: Driver-regime training cap: the Lloyd/PQ training set is collected
-#: to the driver when its estimated bytes (rows × dim × 8) fit under
-#: this bound. Conf-tunable per deployment (round 11 — VERDICT item 8):
-#: a cluster with a fat driver can raise it, and forcing it to 0 pins
-#: every trainer to the distributed regime (the 100 TB path; pytest
-#: asserts both regimes produce identical centroid lists).
-PQ_DRIVER_TRAIN_MAX_BYTES_CONF = "spark.ipes.pqDriverTrainMaxBytes"
-_PQ_DRIVER_TRAIN_MAX_BYTES = 1 << 28
-
-
-def _driver_train_cap(spark) -> int:
-    """Resolve the driver-regime training cap from the session conf
-    (invalid values fall back to the 256 MiB default; 0 or negative is
-    VALID and means 'always distributed')."""
-    try:
-        return int(
-            spark.conf.get(
-                PQ_DRIVER_TRAIN_MAX_BYTES_CONF, str(_PQ_DRIVER_TRAIN_MAX_BYTES)
-            )
-        )
-    except ValueError:  # pragma: no cover - malformed user conf
-        return _PQ_DRIVER_TRAIN_MAX_BYTES
-
-
 def _lloyd_centroid_list(
     emb: DataFrame,
     n_cells: int,
     n_iter: int,
-    max_train_bytes: int | None = None,
     train_limit: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """DETERMINISTIC Lloyd k-means: ``emb(id, v: array<double>)`` →
@@ -733,10 +709,9 @@ def _lloyd_centroid_list(
     Two regimes, identical arithmetic (a pytest asserts they produce
     the same list on the fixture corpus):
 
-    - **Driver regime** (training set ≤ ``max_train_bytes`` — defaults
-      to the :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF` session conf,
-      256 MiB — estimated rows × dim × 8 by one stats job): collect the
-      (id, v) projection
+    - **Driver regime** (training set ≤ ``pqDriverTrainMaxBytes`` in
+      :data:`conf.TABLE`, 256 MiB by default — estimated rows × dim × 8
+      by one stats job): collect the (id, v) projection
       once and run every round in numpy. This is how production ANN
       indexes train centroids anyway (a bounded corpus/sample, not the
       full 100 TB), and it removes the per-round distributed-job
@@ -761,8 +736,7 @@ def _lloyd_centroid_list(
     Sharing the list (not a DataFrame) lets callers like
     :func:`semdedup` skip a createDataFrame→collect round-trip.
     """
-    if max_train_bytes is None:
-        max_train_bytes = _driver_train_cap(emb.sparkSession)
+    cap = conf.get(emb.sparkSession, "pqDriverTrainMaxBytes")
     if train_limit is not None:
         emb = emb.orderBy("id").limit(train_limit)
     stats = emb.agg(
@@ -772,7 +746,7 @@ def _lloyd_centroid_list(
     n_rows, dim = stats["n"], stats["dim"] or 0
     if n_rows == 0:
         return []
-    if n_rows * max(dim, 1) * 8 <= max_train_bytes:
+    if n_rows * max(dim, 1) * 8 <= cap:
         return _lloyd_driver(emb, n_cells, n_iter)
     # distributed regime: the caller's lineage is referenced by the
     # seed collect and every round — cut it once or a derived frame
@@ -1474,9 +1448,9 @@ def ivfpq_topk(
     :func:`_probe_cells`, exact IEEE residual subtraction, and ADC sums
     in exact decimal (summation order cannot move them).
 
-    Two regimes, identical rows (a pytest pins q159–q161 equal under
-    both), chosen by training bytes (rows × dim × 8) against
-    :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF` on the corpus's session:
+    Two regimes, identical rows (tests/test_conf.py pins q159–q161
+    equal under both), chosen by training bytes (rows × dim × 8)
+    against ``pqDriverTrainMaxBytes`` (:data:`conf.TABLE`):
 
     - **driver**: ONE Arrow collect of the training rows feeds numpy
       coarse training, the probe ranking, the training residuals and all
@@ -1530,7 +1504,7 @@ def ivfpq_topk(
         return empty
     spark = emb.sparkSession
     coarse = probes = None
-    if n_train * dim * 8 <= _driver_train_cap(spark):
+    if n_train * dim * 8 <= conf.get(spark, "pqDriverTrainMaxBytes"):
         import numpy as np
 
         tr = emb if train_limit is None else emb.orderBy("id").limit(train_limit)

@@ -11,6 +11,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ipes_data_pipeline_spark import conf
+
 #: parquet-spill scratch dirs created by cut(via_parquet=True) in this
 #: process. Freed at interpreter exit, or earlier via release_spills()
 #: — a spill must outlive every action on the returned frame, so the
@@ -58,74 +60,27 @@ def release_spills(spark: SparkSession | None = None) -> int:
 atexit.register(release_spills)
 
 
-#: Session conf flipping EVERY cut site to fault-tolerant checkpoints at
-#: once — a 100 TB operator chain assembled from library defaults would
-#: otherwise silently use localCheckpoint unless `reliable=True` were
-#: threaded through every call. Cluster side: set
-#: `spark.ipes.reliableCuts=true` (plus `setCheckpointDir` to HDFS/S3)
-#: and all operators run in the durable regime unmodified.
-RELIABLE_CUTS_CONF = "spark.ipes.reliableCuts"
-
-#: Scratch root for parquet spills. On a multi-node cluster this (or the
-#: session checkpoint dir) MUST point at a filesystem every executor can
-#: reach — a driver-local temp dir only works under a local[*] master.
-SPILL_DIR_CONF = "spark.ipes.spillDir"
-
-
 def _spill_root(spark: SparkSession) -> str | None:
     """Resolve where parquet spills go: ``spark.ipes.spillDir`` if set,
     else the session checkpoint dir (already a shared, durable FS on a
     real cluster), else None (caller decides the local-mode fallback)."""
-    root = spark.conf.get(SPILL_DIR_CONF, None)
-    if root:
-        return root.rstrip("/")
+    root = conf.get(spark, "spillDir")
+    if root is not None:
+        return root
     ckpt = spark.sparkContext.getCheckpointDir()
     if ckpt is not None:
         return ckpt.rstrip("/")
     return None
 
 
-#: Input-size threshold (bytes) below which an INPUT-PROPORTIONAL
-#: intermediate (minhash band/shingle tables) is materialized via
-#: localCheckpoint instead of the parquet spill. The spill is the right
-#: store when the frame is big — the round-9 sf10 A/B measured
-#: localCheckpoint's deserialized row blocks at +182 s vs +26 s for the
-#: spill on the 213M-row set — but it costs an extra write job + FS
-#: round-trip that localCheckpoint doesn't, ~0.4 s per query at sf0.1
-#: (round-10 A/B, this file's history). The regime must therefore be
-#: scale-ADAPTIVE, not a constant: Catalyst's optimized-plan size
-#: estimate of the operator's INPUT (file-size-based for scan-rooted
-#: plans, no action needed) picks the store. 256 MiB ~ the sf1/sf10
-#: boundary for the documents corpus. NOT used for edge sets
-#: (util.pin_pairs): those grow with pair counts, not input bytes, and
-#: use the lower threshold below.
-SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.spillMinInputBytes"
-_SPILL_MIN_INPUT_BYTES = 256 << 20
-
-#: Lower threshold for PAIR-PROPORTIONAL intermediates (the LSH edge
-#: sets util.pin_pairs pins before a propagation loop): edges grow with
-#: in-bucket pair counts, ~1-2 orders of magnitude past the input (q39's
-#: blocked levenshtein graph: 4.3M edges from 15k rows at sf0.1, 213M
-#: at sf10), so the store regime must flip to the columnar spill well
-#: before the input itself is spill-sized. sf10's measured +182 s
-#: localCheckpoint heap-thrash regime (round-9 A/B, SCALING.md) sits
-#: far above 8 MiB, sf0.1/sf1 (where the spill's extra write job is
-#: pure overhead, ~0.4 s/query) below.
-EDGE_SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.edgeSpillMinInputBytes"
-_EDGE_SPILL_MIN_INPUT_BYTES = 8 << 20
-
-
-def spill_worthwhile(
-    df: DataFrame,
-    conf_key: str = SPILL_MIN_INPUT_BYTES_CONF,
-    default_bytes: int = _SPILL_MIN_INPUT_BYTES,
-) -> bool:
-    """True when ``df``'s Catalyst size estimate crosses the spill
-    threshold — callers materializing an intermediate PROPORTIONAL to
-    ``df`` pass the result as ``cut(..., via_parquet=...)``. Callers
-    whose intermediate grows FASTER than the input (edge sets) pass the
-    pair-proportional conf/default pair instead."""
-    thr = int(df.sparkSession.conf.get(conf_key, str(default_bytes)))
+def spill_worthwhile(df: DataFrame, threshold: str = "spillMinInputBytes") -> bool:
+    """True when ``df``'s Catalyst size estimate reaches the byte
+    threshold named by ``threshold`` in :data:`conf.TABLE`. Callers
+    materializing an intermediate PROPORTIONAL to ``df`` pass the
+    result as ``cut(..., via_parquet=...)``; callers whose intermediate
+    grows FASTER than the input (edge sets) name
+    ``"edgeSpillMinInputBytes"`` instead."""
+    thr = conf.get(df.sparkSession, threshold)
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     return est >= thr
 
@@ -138,13 +93,8 @@ def pin_pairs(src_df: DataFrame, pairs: DataFrame) -> DataFrame:
     round. Store regime follows the pair-proportional edge threshold
     keyed on the SOURCE corpus size (``src_df``), because pair counts
     grow 1–2 orders of magnitude faster than the input (see
-    :data:`EDGE_SPILL_MIN_INPUT_BYTES_CONF`)."""
-    return cut(
-        pairs,
-        via_parquet=spill_worthwhile(
-            src_df, EDGE_SPILL_MIN_INPUT_BYTES_CONF, _EDGE_SPILL_MIN_INPUT_BYTES
-        ),
-    )
+    ``edgeSpillMinInputBytes`` in :data:`conf.TABLE`)."""
+    return cut(pairs, via_parquet=spill_worthwhile(src_df, "edgeSpillMinInputBytes"))
 
 
 def cut(
@@ -216,10 +166,7 @@ def cut(
     shard contract — SCALING.md case study) holds identically.
     """
     spark = df.sparkSession
-    if not reliable:
-        reliable = (
-            str(spark.conf.get(RELIABLE_CUTS_CONF, "false")).lower() == "true"
-        )
+    reliable = reliable or conf.get(spark, "reliableCuts")
     if via_parquet:
         root = _spill_root(spark)
         if root is None:
@@ -227,7 +174,8 @@ def cut(
             if not master.startswith("local"):
                 raise ValueError(
                     "cut(via_parquet=True) on a non-local master needs a "
-                    f"shared scratch filesystem: set {SPILL_DIR_CONF} or "
+                    "shared scratch filesystem: set "
+                    f"{conf.TABLE['spillDir'].key} or "
                     "sparkContext.setCheckpointDir to an executor-"
                     "reachable path (a driver-local temp dir is not)"
                 )

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ipes_data_pipeline_spark.operators.dedup_fuzzy import dedupe_fuzzy
-from ipes_data_pipeline_spark.operators.util import cut, local_frame, spread
+from ipes_data_pipeline_spark.operators.util import spread
 from ipes_data_pipeline_spark.queries import (
     davg,
     dec,
@@ -1039,69 +1039,40 @@ def q104(spark, sf):
     # bit-reproducible in DuckDB, and the query reports its calibration:
     # n_bloom_pass >= n_exact always (no false negatives), with
     # n_false_pos showing the fp rate at this fill ratio.
-    # TWO build regimes, same values (round 11 — the round-10 form
-    # collected every distinct dim key unconditionally, an UNBOUNDED
-    # driver collect at 100 TB):
-    #
-    # - Small build side (Catalyst estimate of the filtered dim scan
-    #   under spark.ipes.bloomKeyCollectMaxBytes, default 8 MiB): ONE
-    #   driver round-trip collects the distinct keys and derives the
-    #   2048-word mask table in Python md5 (bit-identical digests over
-    #   the same decimal strings); the exact leg joins the bounded key
-    #   list back as a broadcast local relation. One collect + one probe
-    #   job — the round-10 fast path, now byte-capped q39p-style.
-    # - Above the cap: the bloom builds DISTRIBUTED (explode the 4 bit
-    #   positions per key, bit_or per 64-word — registers merge, so
-    #   per-shard blooms roll up) and only the fixed 2048-word/16 KB
-    #   filter is collected, exactly like Spark's own runtime
-    #   BloomFilterAggregate; the exact leg broadcast-joins the pinned
-    #   dim FRAME. The driver never holds the key set.
-    import hashlib
-
-    from ipes_data_pipeline_spark.operators.util import cut, spill_worthwhile
-
-    dim_scan = (
+    # The filter builds INSIDE the plan, like Spark's own runtime
+    # BloomFilterAggregate: explode the 4 bit positions per distinct
+    # key, bit_or per word, then fold the words into the one dense row
+    # the probe cross-joins. Nothing is collected to the driver at any
+    # scale; the exact leg broadcast-joins the distinct dim keys.
+    dim = (
         t(spark, sf, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select(F.col("c_custkey").cast("string").alias("v"))
+        .distinct()
     )
-    collect_ok = not spill_worthwhile(
-        dim_scan, "spark.ipes.bloomKeyCollectMaxBytes", 8 << 20
+    words = (
+        dim.select(F.explode(_bf_positions(F.col("v"))).alias("p"))
+        .select(
+            F.shiftright("p", 5).cast("int").alias("word"),
+            (F.col("p") % 32).cast("int").alias("bit"),
+        )
+        .groupBy("word")
+        .agg(F.expr("bit_or(shiftleft(1L, bit))").alias("mask"))
     )
-    if collect_ok:
-        keys = sorted(int(r["v"]) for r in dim_scan.distinct().collect())
-        masks: dict[int, int] = {}
-        for key in keys:
-            h = hashlib.md5(str(key).encode()).hexdigest()
-            for s in _BF_SLICES:
-                p = int(h[s - 1 : s + 7], 16) % _BF_BITS
-                masks[p >> 5] = masks.get(p >> 5, 0) | (1 << (p % 32))
-        word_list = [masks.get(w, 0) for w in range(_BF_WORDS)]
-        dim_keys = F.broadcast(
-            local_frame(spark, [(k,) for k in keys], "c_custkey long")
-        )
-    else:
-        dim = dim_scan.distinct().transform(cut)
-        bloom = (
-            dim.select(F.explode(_bf_positions(F.col("v"))).alias("p"))
-            .select(
-                F.shiftright("p", 5).cast("long").alias("word"),
-                (F.col("p") % 32).cast("int").alias("bit"),
-            )
-            .groupBy("word")
-            .agg(F.expr("bit_or(shiftleft(1L, bit))").alias("mask"))
-        )
-        bwords = {int(r["word"]): int(r["mask"]) for r in bloom.collect()}
-        word_list = [bwords.get(w, 0) for w in range(_BF_WORDS)]
-        dim_keys = F.broadcast(
-            dim.select(F.col("v").cast("long").alias("c_custkey"))
-        )
-    arr = F.lit(word_list)
+    bloom = words.agg(
+        F.map_from_entries(F.collect_list(F.struct("word", "mask"))).alias("m")
+    ).select(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(_BF_WORDS - 1)),
+            lambda w: F.coalesce(F.try_element_at("m", w), F.lit(0).cast("long")),
+        ).alias("arr")
+    )
+    dim_keys = F.broadcast(dim.select(F.col("v").cast("long").alias("c_custkey")))
     # spread: the md5×4 probe math inherits the scan's partitioning and
     # sf0.1 orders is one row-group — one task would hog one core.
     probe = (
         spread(t(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_orderstatus"))
-        .withColumn("arr", arr)
+        .crossJoin(F.broadcast(bloom))
         .withColumn("ps", _bf_positions(F.col("o_custkey")))
         .withColumn(
             "pass",

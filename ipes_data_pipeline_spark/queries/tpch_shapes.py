@@ -161,30 +161,30 @@ def q69(spark, sf):
 # ------------------------------------------------- streaming (value-checked)
 
 
-def _run_available_now(stream_df, mode: str = "complete"):
-    """Run a bounded streaming query to a memory sink, return the result.
+#: Shuffle (= state store) partitions for the bounded demo runs of
+#: :func:`_run_available_now`. A stateful streaming query creates one
+#: state store per shuffle partition (FOUR per partition for a
+#: stream-stream join: keyed + watermark index on each side), and every
+#: micro-batch pays a per-store snapshot/commit regardless of row
+#: volume. At fixture scale that fixed cost dominates — q115 measured
+#: 9.4 s at 4 state partitions vs 84 s at 32 on the same input. Values
+#: are partition-count independent; only wall clock moves. Production
+#: streams (``streaming/``) size state through Spark's own
+#: ``spark.sql.shuffle.partitions``, frozen into the checkpoint at first
+#: start (e.g. 2-4x executor cores for a 100 TB keyed stream).
+STREAM_STATE_PARTITIONS = 8
 
-    State partition sizing: a stateful streaming query creates one state
-    store per shuffle partition (FOUR per partition for a stream-stream
-    join: keyed + watermark index on each side), and every micro-batch
-    pays a per-store snapshot/commit regardless of row volume. At
-    fixture scale that fixed cost dominates — q115 measured 9.4 s at 4
-    state partitions vs 84 s at 32 on the same input — so bounded demo
-    runs plan with a small state-partition count. The knob is
-    ``spark.ipes.streamStatePartitions`` (default 8 here): on a real
-    cluster you size it to the expected keyed-state volume (it is
-    frozen into the checkpoint at first start), e.g. 2-4x executor
-    cores for a 100 TB keyed stream. Values are partition-count
-    independent; only wall clock moves.
-    """
+
+def _run_available_now(stream_df, mode: str = "complete"):
+    """Run a bounded streaming query to a memory sink, return the result,
+    planned with :data:`STREAM_STATE_PARTITIONS` state partitions."""
     import uuid
 
     spark = stream_df.sparkSession
     name = f"srq_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    state_parts = spark.conf.get("spark.ipes.streamStatePartitions", "8")
-    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")

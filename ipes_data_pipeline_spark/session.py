@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ipes_data_pipeline_spark import conf
+
 #: Confs that are safe to set on a live session (all runtime-settable).
 _RUNTIME_CONFS = {
     # DuckDB oracle comparisons need UTC-naive timestamp semantics.
@@ -35,20 +37,6 @@ _RUNTIME_CONFS = {
     # is micro-aligned, so `timestamp_micros(ts div 1000)` is lossless).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
-
-
-#: Bytes of scan input per initial shuffle partition. Calibrated on two
-#: measured anchors: the round-5 sf10 A/B (1.8 GB star; 256 initial
-#: partitions took the exploded shingle/band plans from 393->201 s /
-#: 347->145 s), and the round-10 sf0.1 interleaved A/B (17.5 MB inputs;
-#: a constant 256 cost ~10% over the core count on an 8-query subset —
-#: every tiny stage still wrote 256-bucket shuffle maps before AQE
-#: coalesced the read side). 8 MiB/partition reproduces both: sf0.1 ->
-#: 32 (the core-count floor), sf10 -> ~230. Override via
-#: spark.ipes.initialPartitionsPerBytes; floor = default parallelism,
-#: cap = 1024 (shuffle-block quadratics, guide §2.2).
-INITIAL_PARTITIONS_PER_BYTES_CONF = "spark.ipes.initialPartitionsPerBytes"
-_INITIAL_PARTITIONS_PER_BYTES = 8 << 20
 
 
 #: cache of the dataset-directory size walk — tune() runs inside every
@@ -77,10 +65,14 @@ def _initial_partitions(cpus: int, per_bytes: int) -> int:
     fall back to 256 — the measured sf10 value, and AQE coalescing
     makes over-provisioning cheap relative to under-provisioning.
 
+    ``per_bytes`` is ``spark.ipes.initialPartitionsPerBytes``
+    (:data:`conf.TABLE`); floor = ``cpus``, cap = 1024 (shuffle-block
+    quadratics, guide §2.2).
+
     Round-11 bisect note: the r10 q43/q121p regression was NOT this
-    derivation — scripts/ab_initial_partitions.py measured 32 vs 256
-    a wash (±5%) at sf0.1 on the simhash/minhash families; the cause
-    was the simhash mask re-evaluation (functions/text.py)."""
+    derivation — 32 vs 256 initial partitions measured a wash (±5%) at
+    sf0.1 on the simhash/minhash families (OPTIMIZATION_r11.md §1, §9);
+    the cause was the simhash mask re-evaluation (functions/text.py)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if not sf_dir or not os.path.isdir(sf_dir):
         return 256
@@ -98,19 +90,7 @@ def tune(spark: SparkSession) -> SparkSession:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     except ValueError:  # pragma: no cover - malformed harness env
         cpus = 32
-    # A bad user value (0, negative, non-integer) must not silently skip
-    # the adaptive tuning (ADVICE r10): fall back to the default rate.
-    try:
-        per = int(
-            spark.conf.get(
-                INITIAL_PARTITIONS_PER_BYTES_CONF,
-                str(_INITIAL_PARTITIONS_PER_BYTES),
-            )
-        )
-    except ValueError:
-        per = _INITIAL_PARTITIONS_PER_BYTES
-    if per <= 0:
-        per = _INITIAL_PARTITIONS_PER_BYTES
+    per = conf.get(spark, "initialPartitionsPerBytes")
     try:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",

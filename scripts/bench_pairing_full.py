@@ -1,5 +1,6 @@
 """Same-minutes interleaved Spark-vs-DuckDB pairing over the FULL
-headline set (round-7: the bench_q144_pairing method generalized).
+headline set (round-7: the round-6 q144 interleaved pairing,
+artifacts/BENCH_q144_r6.json, generalized).
 
 Round 6 committed a single-pass pairing taken in a slow weather window
 (1.77x) while the judge's medians-of-3 pairing read 1.29x — the spread

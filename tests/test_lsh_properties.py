@@ -491,36 +491,14 @@ def test_lloyd_driver_and_distributed_regimes_agree(spark):
         )
     )
     driver = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
-    dist = _lloyd_centroid_list(
-        emb, n_cells=8, n_iter=3, max_train_bytes=0  # force distributed
-    )
+    spark.conf.set("spark.ipes.pqDriverTrainMaxBytes", "0")  # distributed
+    try:
+        dist = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
+    finally:
+        spark.conf.unset("spark.ipes.pqDriverTrainMaxBytes")
     assert [c for c, _ in driver] == [c for c, _ in dist]
     for (_, dv), (_, xv) in zip(driver, dist):
         assert dv == xv  # exact float equality, not approx
-
-
-@pytest.mark.parametrize(
-    "name", ["q159_pq_ann", "q160_ivfpq_ann", "q161_ivfpq_residual_ann"]
-)
-def test_pq_driver_train_cap_conf_pins_regimes_equal(spark, name):
-    """spark.ipes.pqDriverTrainMaxBytes=0 forces the PQ family to the
-    distributed branch (the 100 TB regime, otherwise only reachable by
-    growing the corpus past the 256 MiB cap). For flat PQ (q159), IVFPQ
-    (q160) and residual IVFPQ (q161) alike, the forced regime must
-    produce the exact rows of the default driver regime."""
-    from ipes_data_pipeline_spark.queries import REGISTRY, load_all
-
-    load_all()
-    sf_dir = "/root/testdata/sf0.001"
-    fused = sorted(map(tuple, REGISTRY[name].spark(spark, sf_dir).collect()))
-    spark.conf.set("spark.ipes.pqDriverTrainMaxBytes", "0")
-    try:
-        dist = sorted(
-            map(tuple, REGISTRY[name].spark(spark, sf_dir).collect())
-        )
-    finally:
-        spark.conf.unset("spark.ipes.pqDriverTrainMaxBytes")
-    assert fused == dist
 
 
 def test_pq_fused_training_collect_matches_per_subspace(spark):

@@ -177,23 +177,6 @@ def test_bloom_semi_filter_no_false_negatives_and_broadcast(spark, sf_dir):
         assert r["n_bloom_pass"] == r["n_exact"] + r["n_false_pos"], r
 
 
-def test_bloom_semi_filter_regimes_agree(spark, sf_dir):
-    # q104's build side has two regimes (round 11): a byte-capped driver
-    # key collect (fast path) and a distributed explode+bit_or bloom
-    # build whose 16 KB filter is the ONLY thing collected (the 100 TB
-    # path — the driver never holds the key set). Forcing the cap to 0
-    # engages the distributed regime; values must be identical.
-    fast = sorted(map(tuple, q(spark, "q104_bloom_semi_filter", sf_dir).collect()))
-    spark.conf.set("spark.ipes.bloomKeyCollectMaxBytes", "0")
-    try:
-        dist = sorted(
-            map(tuple, q(spark, "q104_bloom_semi_filter", sf_dir).collect())
-        )
-    finally:
-        spark.conf.unset("spark.ipes.bloomKeyCollectMaxBytes")
-    assert fast == dist
-
-
 def test_weighted_sample_is_take_ordered_no_exchange(spark, sf_dir):
     # A-Res top-k must plan as TakeOrderedAndProject over the scan —
     # per-task local top-50 merged on the driver, zero shuffles

@@ -84,18 +84,18 @@ def test_cut_honors_session_conf(spark, ckdir):
     """spark.ipes.reliableCuts=true promotes a default cut() to a REAL
     checkpoint (files land in the checkpoint dir); off → local blocks
     only. The per-call reliable=True is never demoted by the conf."""
-    from ipes_data_pipeline_spark.operators.util import RELIABLE_CUTS_CONF, cut
+    from ipes_data_pipeline_spark.operators.util import cut
 
     df = spark.range(100)
     before = _ck_files(ckdir)
     cut(df)
     assert _ck_files(ckdir) == before  # default: localCheckpoint, no files
-    spark.conf.set(RELIABLE_CUTS_CONF, "true")
+    spark.conf.set("spark.ipes.reliableCuts", "true")
     try:
         cut(df)
         assert _ck_files(ckdir) > before  # conf promoted the cut
     finally:
-        spark.conf.unset(RELIABLE_CUTS_CONF)
+        spark.conf.unset("spark.ipes.reliableCuts")
 
 
 def test_cut_via_parquet_preserves_values_off_heap(spark, ckdir):
@@ -134,14 +134,13 @@ def test_cut_via_parquet_spill_dir_conf_and_release(spark, tmp_path):
 
     from ipes_data_pipeline_spark.operators.util import (
         _SPILL_DIRS,
-        SPILL_DIR_CONF,
         cut,
         release_spills,
     )
 
     root = str(tmp_path / "scratch")
     os.makedirs(root)
-    spark.conf.set(SPILL_DIR_CONF, root)
+    spark.conf.set("spark.ipes.spillDir", root)
     try:
         out = cut(spark.range(20), via_parquet=True)
         assert out.count() == 20
@@ -151,7 +150,7 @@ def test_cut_via_parquet_spill_dir_conf_and_release(spark, tmp_path):
         assert freed >= 1 and not _SPILL_DIRS
         assert all(not os.path.exists(d) for d in spilled)
     finally:
-        spark.conf.unset(SPILL_DIR_CONF)
+        spark.conf.unset("spark.ipes.spillDir")
 
 
 def test_cut_via_parquet_honors_reliable_without_shared_root(spark, tmp_path):
@@ -189,7 +188,6 @@ def test_session_conf_runs_queries_reliably_with_identical_values(spark, ckdir):
     row-identical values. q39 (fuzzy dedup) cuts nothing — its
     components resolve inside each block — and rides along as the
     control whose values the conf must not touch either."""
-    from ipes_data_pipeline_spark.operators.util import RELIABLE_CUTS_CONF
     from ipes_data_pipeline_spark.queries import REGISTRY, load_all
 
     load_all()
@@ -204,7 +202,7 @@ def test_session_conf_runs_queries_reliably_with_identical_values(spark, ckdir):
         df = REGISTRY[n].spark(spark, sf)
         baseline[n] = [tuple(r) for r in df.orderBy(*df.columns).collect()]
     before = _ck_files(ckdir)
-    spark.conf.set(RELIABLE_CUTS_CONF, "true")
+    spark.conf.set("spark.ipes.reliableCuts", "true")
     try:
         for n in names:
             df = REGISTRY[n].spark(spark, sf)
@@ -212,4 +210,4 @@ def test_session_conf_runs_queries_reliably_with_identical_values(spark, ckdir):
             assert rows == baseline[n], n
         assert _ck_files(ckdir) > before  # the cuts really checkpointed
     finally:
-        spark.conf.unset(RELIABLE_CUTS_CONF)
+        spark.conf.unset("spark.ipes.reliableCuts")

@@ -282,24 +282,23 @@ def test_failed_enrichment_never_poisons_cache(spark, tmp_path):
     assert cache.select("normalized_name").distinct().count() == n
 
 
-def test_stream_state_partitions_knob_is_value_invariant(spark, sf_dir):
-    """The spark.ipes.streamStatePartitions knob sizes state stores for
-    the bounded streaming demos: values must be identical at any
-    setting (only wall clock moves), and the session's shuffle
-    partition conf must be restored after the run — including the
-    registered default path."""
-    from ipes_data_pipeline_spark.queries import REGISTRY, load_all
+def test_stream_state_partitions_knob_is_value_invariant(
+    spark, sf_dir, monkeypatch
+):
+    """tpch_shapes.STREAM_STATE_PARTITIONS sizes state stores for the
+    bounded streaming demos: values must be identical at any setting
+    (only wall clock moves), and the session's shuffle partition conf
+    must be restored after the run — including the registered default
+    path."""
+    from ipes_data_pipeline_spark.queries import REGISTRY, load_all, tpch_shapes
 
     load_all()
     run = REGISTRY["q70_streaming_tumbling"].spark
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def rows(n_parts):
-        spark.conf.set("spark.ipes.streamStatePartitions", n_parts)
-        try:
-            return sorted(map(tuple, run(spark, sf_dir).collect()))
-        finally:
-            spark.conf.unset("spark.ipes.streamStatePartitions")
+        monkeypatch.setattr(tpch_shapes, "STREAM_STATE_PARTITIONS", n_parts)
+        return sorted(map(tuple, run(spark, sf_dir).collect()))
 
-    assert rows("2") == rows("16")
+    assert rows(2) == rows(16)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
