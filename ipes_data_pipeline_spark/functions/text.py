@@ -84,29 +84,6 @@ def minhash_slice(hash_col: Column, slice_idx: int) -> Column:
     )
 
 
-def shingle_hashes_xx(shingle_col: Column, salt: str) -> Column:
-    """xxhash64('<salt>|' + shingle) per shingle — the PRODUCTION fast
-    path for MinHash staging. One JVM xxHash64 pass (a few ns/row inside
-    codegen) replaces an md5 digest (~10× the cost); each 64-bit hash is
-    sliced into TWO 32-bit MinHash families by :func:`minhash_slice_xx`.
-    Not oracle-portable: DuckDB has no xxhash64, so value-checked queries
-    stay on the md5 staging (:func:`shingle_hashes`)."""
-    return F.transform(
-        shingle_col, lambda s: F.xxhash64(F.concat(F.lit(f"{salt}|"), s))
-    )
-
-
-def minhash_slice_xx(hash_col: Column, half: int) -> Column:
-    """MinHash component = min over one 32-bit half of the staged 64-bit
-    hashes (``half`` 0 = high word, 1 = low word). Unsigned slices, so
-    the long MIN is the numeric min of the 32-bit family."""
-    if half == 0:
-        piece = lambda h: F.shiftrightunsigned(h, 32)  # noqa: E731
-    else:
-        piece = lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF))  # noqa: E731
-    return F.array_min(F.transform(hash_col, piece))
-
-
 def token_hashes(tok_col: Column) -> Column:
     """md5 hex per token — staged ONCE so the 32 simhash bit expressions
     reference the array instead of re-hashing per bit (32× less md5)."""
@@ -208,12 +185,6 @@ def simhash_bits_from_hashes(hash_col: Column, n_bits: int = 32) -> Column:
     return simhash_bits_from_masks(
         simhash_masks(hash_col, n_bits), F.size(hash_col), n_bits
     )
-
-
-def simhash_bits(tok_col: Column, n_bits: int = 32) -> Column:
-    """SimHash signature directly from a token array (hashes inlined —
-    prefer staging :func:`token_hashes` in its own projection first)."""
-    return simhash_bits_from_hashes(token_hashes(tok_col), n_bits)
 
 
 def normalized_text(col) -> Column:

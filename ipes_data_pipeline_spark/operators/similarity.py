@@ -78,15 +78,19 @@ def knn_graph(
     )
     # one distributed job sizes the corpus (count + dim together) — a
     # separate count-then-head pair re-executed the corpus lineage twice
-    # before the collect even started
+    # before the collect even started. dim is read over non-null vectors
+    # only: size(null) is -1 with ANSI off, so a leading null vector
+    # would otherwise size the corpus at one dimension.
     stats = corpus.agg(
         F.count(F.lit(1)).alias("n"),
-        F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("dim"),
+        F.max(
+            F.when(F.col(vec_col).isNotNull(), F.size(F.col(vec_col)))
+        ).alias("dim"),
     ).first()
     n_corpus = stats["n"]
     if n_corpus == 0:
         return local_frame(df.sparkSession, [], out_schema)
-    dim = max(stats["dim"] or 0, 0)
+    dim = stats["dim"] or 0
     est_bytes = n_corpus * max(dim, 1) * 8
     if est_bytes > max_corpus_bytes:
         raise ValueError(
@@ -733,20 +737,21 @@ def _lloyd_centroid_list(
     ``Decimal(repr(x))`` once per element, after which per-cell sums
     are exact int64 adds.
 
+    Null vectors are out of contract: the one stats job that sizes the
+    training set also counts them, and a null among non-null vectors
+    raises ``ValueError`` before either regime starts (an all-null set
+    trains nothing, like an empty one).
+
     Sharing the list (not a DataFrame) lets callers like
     :func:`semdedup` skip a createDataFrame→collect round-trip.
     """
     cap = conf.get(emb.sparkSession, "pqDriverTrainMaxBytes")
     if train_limit is not None:
         emb = emb.orderBy("id").limit(train_limit)
-    stats = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.first(F.size("v"), ignorenulls=True).alias("dim"),
-    ).first()
-    n_rows, dim = stats["n"], stats["dim"] or 0
-    if n_rows == 0:
+    n_rows, dim = _vector_stats(emb, "_lloyd_centroid_list")
+    if not dim:  # no rows, or no non-null vector to train on
         return []
-    if n_rows * max(dim, 1) * 8 <= cap:
+    if n_rows * dim * 8 <= cap:
         return _lloyd_driver(emb, n_cells, n_iter)
     # distributed regime: the caller's lineage is referenced by the
     # seed collect and every round — cut it once or a derived frame
@@ -770,6 +775,28 @@ def _lloyd_centroid_list(
             for r in rows
         )
     return cent
+
+
+def _vector_stats(emb: DataFrame, op: str) -> tuple[int, int]:
+    """``(rows, dim)`` of an ``(id, v)`` frame in ONE job. ``dim`` is
+    the largest size over non-null vectors, 0 when there are none:
+    ``size(null)`` is -1 with ANSI off, so a plain ``first(size(v))``
+    reads a leading null vector as a dimension. Null vectors are out of
+    contract for the Lloyd trainers and the PQ encode, so a frame mixing
+    null and non-null vectors raises ``ValueError`` naming ``op``, the
+    same error whichever regime would have run."""
+    stats = emb.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("v").isNull(), 1)).alias("n_null"),
+        F.max(F.when(F.col("v").isNotNull(), F.size("v"))).alias("dim"),
+    ).first()
+    n_rows, n_null, dim = stats["n"], stats["n_null"], stats["dim"] or 0
+    if n_null and dim:
+        raise ValueError(
+            f"{op}: {n_null} of {n_rows} vectors are null; filter them "
+            "out (v IS NOT NULL) first"
+        )
+    return n_rows, dim
 
 
 def _collect_matrix(emb: DataFrame):
@@ -1234,16 +1261,18 @@ def _pq_encode_arrow(
 ) -> DataFrame:
     """ONE Arrow pass over ``src(id, v)`` emitting the PQ code stream
     for all ``m`` subspaces — ``(id, sub_j, code)``, plus a ``cell``
-    column when a ``coarse`` stage is fused in.
+    column when a ``coarse`` stage is fused in. The only PQ encoder:
+    :func:`ivfpq_topk` calls it once, after either training regime
+    (the distributed regime is training only).
 
-    Replaces the m per-subspace :func:`_with_cells` map passes (and,
-    with ``coarse``, the separate coarse-assignment pass + candidate
-    ``cut``) that previously each re-read the corpus: the round-10 plan
-    audit had q159/q160/q161 paying 4–6 scans and 2–3 localCheckpoint
+    One scan replaces the m per-subspace :func:`_with_cells` map passes
+    (and, with ``coarse``, a separate coarse-assignment pass + candidate
+    ``cut``) that each re-read the corpus: the round-10 plan audit had
+    q159/q160/q161 paying 4–6 scans and 2–3 localCheckpoint
     materializations per query where one scan suffices (guide §1.2:
     fix the pass count before the per-task work).
 
-    Value identity with the per-subspace form, term by term:
+    Value identity with :func:`_with_cells`, term by term:
 
     - per-subspace assignment is :func:`_argmin_cells_blocked` over the
       same ``F.slice`` column range — the identical per-dimension IEEE
@@ -1256,14 +1285,15 @@ def _pq_encode_arrow(
       subtraction, applied after the probe filter (same surviving rows,
       same values);
     - ids pass through untouched (any Spark type), so downstream joins
-      and the final top-k see exactly the rows the multi-pass plan saw.
+      and the final top-k see exactly the rows a per-subspace plan
+      would.
 
     At 100 TB this is still a pure map stage: codebooks + coarse
     centroids ride in the task closure (m × ksub × dsub + cells × dim
-    doubles — driver-sized forever), and the emitted stream is m rows
-    of (id, two small ints) per surviving vector — the only exchange
-    downstream carries one decimal per vector after the map-side
-    partial SUM.
+    doubles — driver-sized forever, whichever regime trained them), and
+    the emitted stream is m rows of (id, two small ints) per surviving
+    vector — the only exchange downstream carries one decimal per
+    vector after the map-side partial SUM.
     """
     import numpy as np
     import pandas as pd
@@ -1454,20 +1484,25 @@ def ivfpq_topk(
 
     - **driver**: ONE Arrow collect of the training rows feeds numpy
       coarse training, the probe ranking, the training residuals and all
-      m codebooks (:func:`_lloyd_driver_matrix` over column slices); ONE
-      Arrow scan assigns cells, filters to the probes, subtracts
-      residuals and encodes all m subspaces (:func:`_pq_encode_arrow`);
-    - **distributed**: the corpus is cut once; coarse training is
-      :func:`_lloyd_centroid_list`, the candidates are the probed cells
-      of :func:`_with_cells` (residuals one broadcast-join map stage),
-      and each subspace trains through ``_lloyd_centroid_list`` and
-      encodes through ``_with_cells`` — nothing larger than a codebook
-      ever reaches the driver.
+      m codebooks (:func:`_lloyd_driver_matrix` over column slices);
+    - **distributed** (training only): the corpus is cut once; coarse
+      training and each subspace's codebook train through
+      :func:`_lloyd_centroid_list` (residuals one broadcast-join map
+      stage) — nothing larger than a codebook ever reaches the driver.
+
+    The regime decides only where the codebooks train. Both then encode
+    through the same :func:`_pq_encode_arrow` scan, which assigns cells,
+    filters to the probes, subtracts residuals and encodes all m
+    subspaces in ONE Arrow pass: codebooks and coarse centroids are
+    driver-sized in either regime, so its task-closure contract holds
+    at any corpus size.
 
     ``query_df`` must hold exactly one row (:func:`_query_vector`).
     Returns ``(id, adc_d2)`` ascending by distance then id, at most
     ``k`` rows, ids passed through with the caller's type; an empty or
-    all-null corpus returns zero rows.
+    all-null corpus returns zero rows, and a corpus mixing null and
+    non-null vectors raises ``ValueError`` (:func:`_vector_stats`,
+    checked before either regime starts).
     """
     if residual and n_cells is None:
         raise ValueError(
@@ -1482,15 +1517,9 @@ def ivfpq_topk(
         "id", F.lit(None).cast("double").alias("adc_d2")
     ).where(F.lit(False))
     # Validate BEFORE any eager materialization (a corpus-scale cut must
-    # not be spent on an argument error). max(size) counts non-null
-    # vectors only, whatever spark.sql.legacy.sizeOfNull says (under the
-    # legacy default size(null) = -1 would read an all-null corpus as
-    # dim -1); the row count rides in the same job and picks the regime.
-    stats = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.when(F.col("v").isNotNull(), F.size("v"))).alias("dim"),
-    ).first()
-    n_rows, dim = stats["n"], stats["dim"] or 0
+    # not be spent on an argument error); the row count that picks the
+    # regime rides in the same job.
+    n_rows, dim = _vector_stats(emb, "ivfpq_topk")
     if not dim:
         return empty
     if dim % m:
@@ -1521,30 +1550,26 @@ def ivfpq_topk(
             )
             for j in range(m)
         ]
-        codes = _pq_encode_arrow(
-            emb, cents_by_sub, dsub, coarse=coarse, probes=probes,
-            residual=residual,
-        )
     else:
-        emb = cut(emb)  # coarse training + assignment + m subspace reads
-        train = cand = emb
+        emb = cut(emb)  # coarse training, m subspace trainings, the encode
+        train = emb
         if n_cells is not None:
             coarse = _lloyd_centroid_list(
                 emb, n_cells, n_iter, train_limit=train_limit
             )
             probes = _probe_cells(qv, coarse, n_probe)
-            cand = _with_cells(emb, coarse)
             if residual:
                 # one map stage against the broadcast centroid table
-                # (exact IEEE elementwise subtraction); cut once — m
-                # training reads and the probe filter reference it
+                # (exact IEEE elementwise subtraction); cut once — the m
+                # subspace trainings each read it
                 cent_df = local_frame(
                     spark, coarse, "c_id long, c_vec array<double>"
                 )
-                cand = train = cut(
-                    cand.join(F.broadcast(cent_df), "c_id").select(
+                train = cut(
+                    _with_cells(emb, coarse)
+                    .join(F.broadcast(cent_df), "c_id")
+                    .select(
                         "id",
-                        "c_id",
                         F.zip_with(
                             "v",
                             "c_vec",
@@ -1552,28 +1577,19 @@ def ivfpq_topk(
                         ).alias("v"),
                     )
                 )
-            # the probed candidates feed m encode passes — cut them once
-            # or the full-corpus coarse assignment re-executes per subspace
-            cand = cut(cand.where(F.col("c_id").isin(probes)))
-        cents_by_sub = []
-        codes = None
-        for j in range(m):
-            cent = _lloyd_centroid_list(
+        cents_by_sub = [
+            _lloyd_centroid_list(
                 train.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
                 ksub,
                 n_iter,
                 train_limit=train_limit,
             )
-            cents_by_sub.append(cent)
-            part = _with_cells(
-                cand.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
-                cent,
-            ).select("id", F.lit(j).alias("sub_j"), F.col("c_id").alias("code"))
-            codes = part if codes is None else codes.unionAll(part)
-        if residual:
-            codes = codes.join(
-                cand.select("id", F.col("c_id").alias("cell")), "id"
-            )
+            for j in range(m)
+        ]
+    codes = _pq_encode_arrow(
+        emb, cents_by_sub, dsub, coarse=coarse, probes=probes,
+        residual=residual,
+    )
     if residual:
         # per-probed-cell query residuals as DATA (driver float
         # subtraction is the IEEE double op of the oracle's SQL)
@@ -1610,162 +1626,24 @@ def sq8_topk(
     than float64 (PQ here is 128×) but per-DIMENSION resolution, so
     recall degrades far more gently than PQ's per-subspace codes.
 
-    Physical shape: "train" is ONE collected bounds pass (explode +
+    Physical shape: "train" is ONE bounds pass (posexplode +
     groupBy(dim index), map-side combined — at most ``dim`` rows leave
-    any task) that comes back as LITERAL ARRAYS; scoring posexplodes
-    the vector into (id, i, v_i) scalars, reads bounds/query via
-    ``element_at(<const array>, i)`` — constant-folded, NO join of any
-    kind — and partially aggregates the per-dimension decimal errors
-    map-side before a |corpus|-row exchange of single decimals — the
-    PQ/ADC scan shape with the broadcast join deleted. An earlier cut
-    fused encode+ADC into a per-row ``aggregate``/``transform`` lambda
-    fold (zero shuffle, prettier plan) and measured 33× SLOWER than
-    DuckDB at sf10 (25.7 s vs 0.77 s): higher-order-function lambdas
-    evaluate OUTSIDE whole-stage codegen, so the fold paid
-    interpreted-expression cost per element. The explode shape keeps
-    every expression flat and codegen'd; its exchange carries one
-    decimal per vector — the same bytes the PQ scan ships. No Python
-    anywhere.
-
-    Cross-engine determinism (q162): codes are exact integers
-    (``floor(x + 0.5)`` of a fixed-association double expression —
-    identical IEEE ops in both engines; half-up matches DuckDB because
-    the pre-floor operand is non-negative by clamping), each squared
-    per-dimension error is rounded to DECIMAL(18,6), and the row
-    distance is the exact decimal sum of those 64 parts — summation
-    order cannot move it (mirrors the PQ/ADC table rule).
-
-    ``query_df`` must hold exactly ONE row (enforced by
-    :func:`_query_vector`, like every single-query gear). Rows whose vector is NULL are dropped from the
-    scan; a NULL *element* quantizes to code 0 (``greatest`` skips the
-    NULL — bit-identical to the first cut), and an all-null DIMENSION
-    contributes 0 error (the SUM-skips-null semantics of the first
-    cut's groupBy, kept via per-term ``coalesce``).
-
-    Round-9 floor cut: the first shipped shape ran THREE corpus passes
-    (a dim-validation aggregate, the bounds aggregate re-executed as a
-    broadcast-join build, then the ADC scan). Bounds are driver-sized
-    by construction (2 x dim doubles), so now ONE bounds pass —
-    posexplode + groupBy(dim) with map-side combine, at most ``dim``
-    rows leave any task at any corpus size — is COLLECTED, validates
-    the corpus dim for free (max dim index + 1), and comes back as a
-    LITERAL dim-row side table, leaving the final action exactly one
-    corpus scan. A tempting further cut — inlining bounds/query as
-    literals in a flat per-row expression, zero joins zero shuffles —
-    was built and MEASURED OUT: the 64-term expression tree exceeds
-    the whole-stage-codegen size limit, drops every span to
-    interpreted eval, and runs 50-80 us/row (10.6 s vs 5.4 s for this
-    shape at 200k rows) — the HOF-fold lesson again, by another door.
-    The explode shape keeps every expression tiny and codegen'd; its
-    exchange carries one decimal per vector — the same bytes the PQ
-    scan ships.
-    """
-    from ipes_data_pipeline_spark.operators.util import spread
-
-    emb = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-
-    def _empty():
-        return emb.select(
-            "id", F.lit(None).cast("double").alias("adc_d2")
-        ).where(F.lit(False))
-
-    qv = _query_vector(query_df, vec_col, "sq8_topk")
-    dim = len(qv)
-    live = emb.where(F.col("v").isNotNull())
-    # train: ONE corpus pass — per-dimension bounds via explode +
-    # groupBy(dim index). Partial aggregation combines map-side, so at
-    # most `dim` (mn, mx) rows leave any task regardless of corpus
-    # size; the collected result is 2 x dim doubles. max(i0)+1 is the
-    # corpus dim — validation rides along at zero extra cost. No
-    # spread here: the bounds pass is scan-bound, and the round-robin
-    # shuffle costs more than the 13-vs-32-task win (0.97 s unspread
-    # vs 2.3 s spread at 200k rows, measured).
-    brows = (
-        live.select(F.posexplode("v").alias("i0", "vi"))
-        .groupBy("i0")
-        .agg(F.min("vi").alias("mn"), F.max("vi").alias("mx"))
-        .collect()
-    )
-    if not brows:
-        return _empty()
-    cdim = max(r["i0"] for r in brows) + 1
-    if cdim != dim:
-        raise ValueError(f"query dim {dim} != corpus dim {cdim}")
-    # bounds + query come back as LITERAL ARRAYS consumed via
-    # element_at(<const array>, i) INSIDE the part expression — they
-    # constant-fold into the codegen constant pool, so the scan needs
-    # no broadcast join at all (and crucially no per-exploded-row
-    # array materialization: aliasing them as columns before the
-    # explode would drag 3 x dim doubles through every Generate row)
-    bmap = {r["i0"]: r for r in brows}
-    mn_a = F.array(*[F.lit(bmap[i]["mn"]) for i in range(dim)])
-    mx_a = F.array(*[F.lit(bmap[i]["mx"]) for i in range(dim)])
-    q_a = F.array(*[F.lit(float(x)) for x in qv])
-    # spread BEFORE the CPU-heavy explode: the dim× row blowup + hash
-    # agg is ~10 us/row-group-task at 200k rows — a single-row-group
-    # parquet scan would run it on one core. No-op at real scale.
-    ex = spread(live).select(
-        "id", F.posexplode(F.col("v")).alias("i0", "vi")
-    )
-    idx = F.col("i0") + 1
-    mni, mxi, qi = (
-        F.element_at(mn_a, idx),
-        F.element_at(mx_a, idx),
-        F.element_at(q_a, idx),
-    )
-    vi = F.col("vi")
-    code = F.least(
-        F.greatest(
-            F.floor((vi - mni) * F.lit(255.0) / (mxi - mni) + F.lit(0.5))
-            .cast("int"),
-            F.lit(0),
-        ),
-        F.lit(255),
-    )
-    code = F.when(mxi > mni, code).otherwise(F.lit(0))
-    recon = mni + code.cast("double") * (mxi - mni) / F.lit(255.0)
-    part = F.round((qi - recon) * (qi - recon), 6).cast("decimal(18,6)")
-    return (
-        ex.select("id", part.alias("part"))
-        .groupBy("id")
-        .agg(F.sum("part").cast("double").alias("adc_d2"))
-        .orderBy(F.asc("adc_d2"), F.asc("id"))
-        .limit(k)
-    )
-
-
-def sq8_topk_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """The deployable gear of :func:`sq8_topk`: identical SQ8
-    quantization (per-dimension byte codes between the corpus min/max,
-    asymmetric distance against the full-precision query), with the ADC
-    scan as ONE Arrow-batched corpus pass instead of the posexplode +
-    hash-aggregate shape.
-
-    Why it exists (round-9 measurement): the explode shape is the
-    oracle-anchored determinism gear and is fine through sf10, but its
-    dim× row blowup feeds a |corpus|-group hash aggregate whose cost
-    went superlinear in the measured sf10→sf100 decade (2M vectors:
-    12.8M → 128M exploded rows, 5.1 s → 78.9 s — the partial-agg hash
-    table outgrows the cache/heap comfort zone in a single JVM). The
-    Arrow kernel quantizes and scores a whole batch in numpy, keeps a
-    running per-task top-k by (distance, id) — lossless truncation: a
-    dropped row has k same-or-better rows above it in its own task —
-    and emits at most k rows per task, so the only exchange is the
-    parts × k digest the other ANN kernels ship (:func:`binary_sign_ann`
-    measured this pattern at 2.7×/decade, flat).
+    any task), collected to 2 × dim doubles and broadcast into the
+    kernel. The ADC scan is ONE Arrow-batched corpus pass: numpy
+    quantizes and scores a whole batch, keeps a running per-task top-k
+    by (distance, id) — lossless truncation: a dropped row has k
+    same-or-better rows above it in its own task — and emits at most k
+    rows per task, so the only exchange is the parts × k digest the
+    other ANN kernels ship (:func:`binary_sign_ann`). A posexplode +
+    per-id decimal hash aggregate over the same codes was the first
+    form; its dim× row blowup went superlinear past sf10 (80.8 s vs
+    10.0 s for this kernel at sf100) and it was slower at every
+    measured scale, so it was retired.
 
     Cross-engine determinism WITHOUT decimals: every per-dimension term
-    is pure IEEE-double arithmetic with fixed association (codes and
-    reconstruction exactly as :func:`sq8_topk`), and the per-part
+    is pure IEEE-double arithmetic with fixed association (codes
+    ``floor((v - mn) * 255 / (mx - mn) + 0.5)`` clamped to [0, 255],
+    reconstruction ``mn + code * (mx - mn) / 255``), and the per-part
     rounding is ``floor(err² × 1e6 + 0.5)`` cast to int64 — micro-unit
     integers, summed exactly in int64 — so numpy, Spark SQL, and DuckDB
     produce bit-identical distances with no decimal-string-rounding
@@ -1774,19 +1652,19 @@ def sq8_topk_arrow(
     reproduce vectorized; ``floor`` it can). The emitted ``adc_d2`` is
     ``units / 1e6`` — exact, the sum is far below 2^53.
 
-    Contract deltas vs sq8_topk (both mirrored in the q162p oracle):
-    corpus rows with a NULL vector are dropped before bounds; rows with
-    a null ELEMENT are excluded from the scan (they arrive in Arrow as
-    NaN and are masked vectorized — no interpreted per-element HOF
-    predicate on the hot path), while the bounds aggregates skip null
-    elements individually (MIN/MAX-skip-null — identical semantics in
-    Spark and SQL). A true NaN element is indistinguishable from a
-    null here and equally out of contract (the repo-wide zero-norm/NaN
-    rule). ``query_df`` must hold exactly one non-null row, as in
-    sq8_topk. And unlike sq8_topk (whose id rides through a hash
-    aggregate untouched), this kernel carries ids as int64 through the
-    Arrow digest — an integral ``id_col`` is required and validated up
-    front; string/decimal ids need the explode gear or a surrogate key.
+    Contract (mirrored in the q162 oracle): corpus rows with a NULL
+    vector are dropped before bounds; rows with a null ELEMENT are
+    excluded from the scan (they arrive in Arrow as NaN and are masked
+    vectorized — no interpreted per-element HOF predicate on the hot
+    path), while the bounds aggregates skip null elements individually
+    (MIN/MAX-skip-null — identical semantics in Spark and SQL). A true
+    NaN element is indistinguishable from a null here and equally out
+    of contract (the repo-wide zero-norm/NaN rule). A constant
+    dimension (mx == mn) codes 0 and contributes its exact error.
+    ``query_df`` must hold exactly one non-null row
+    (:func:`_query_vector`). Ids travel as int64 through the Arrow
+    digest, so an integral ``id_col`` is required and validated up
+    front; string or decimal ids need a surrogate key.
     """
     import numpy as np
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
@@ -1794,24 +1672,23 @@ def sq8_topk_arrow(
     id_type = df.schema[id_col].dataType
     if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
         raise ValueError(
-            f"sq8_topk_arrow carries ids as int64 through its Arrow "
-            f"top-k digest; id_col {id_col!r} is {id_type.simpleString()} "
-            "— use an integral id (e.g. a deterministic surrogate key, "
-            "operators.normalize.surrogate_key) or the sq8_topk explode "
-            "gear, which preserves any id type"
+            f"sq8_topk carries ids as int64 through its Arrow top-k "
+            f"digest; id_col {id_col!r} is {id_type.simpleString()} — use "
+            "an integral id (e.g. a deterministic surrogate key, "
+            "operators.normalize.surrogate_key)"
         )
     emb = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
     qv = np.array(
-        _query_vector(query_df, vec_col, "sq8_topk_arrow"), dtype=np.float64
+        _query_vector(query_df, vec_col, "sq8_topk"), dtype=np.float64
     )
     dim = len(qv)
     live = emb.where(F.col("v").isNotNull())
-    # bounds: the same ONE map-side-combined pass as sq8_topk (at most
-    # `dim` rows leave any task at any corpus size), collected to 2×dim
-    # doubles and broadcast into the kernel
+    # bounds: ONE map-side-combined pass (at most `dim` rows leave any
+    # task at any corpus size), collected to 2×dim doubles and broadcast
+    # into the kernel
     brows = (
         live.select(F.posexplode("v").alias("i0", "vi"))
         .groupBy("i0")
@@ -1844,7 +1721,7 @@ def sq8_topk_arrow(
             V = np.stack(pdf["v"].to_numpy())
             if V.shape[1] != len(q_):
                 raise ValueError(
-                    f"sq8_topk_arrow expects dim={len(q_)} corpus "
+                    f"sq8_topk expects dim={len(q_)} corpus "
                     f"vectors, got {V.shape[1]}"
                 )
             ids = pdf["id"].to_numpy(dtype=np.int64)
@@ -1855,9 +1732,9 @@ def sq8_topk_arrow(
                 V, ids = V[ok], ids[ok]
                 if len(ids) == 0:
                     continue
-            # token-for-token the sq8_topk / oracle expression, per
-            # element: floor((v - mn) * 255.0 / (mx - mn) + 0.5),
-            # clamped to [0, 255]; constant dims -> code 0
+            # token-for-token the oracle expression, per element:
+            # floor((v - mn) * 255.0 / (mx - mn) + 0.5), clamped to
+            # [0, 255]; constant dims -> code 0
             with np.errstate(divide="ignore", invalid="ignore"):
                 code = np.floor((V - mn_) * 255.0 / (mx_ - mn_) + 0.5)
             code = np.clip(code, 0.0, 255.0)

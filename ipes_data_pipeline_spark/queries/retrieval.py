@@ -35,71 +35,18 @@ _SQ8_K, _SQ8_QID = 10, 0
 def _q162_oracle(dim: int = _DIM, k: int = _SQ8_K, qid: int = _SQ8_QID) -> str:
     """SQ8 ADC scan: per-dimension uniform byte quantization between the
     corpus min/max, query kept full-precision. Expression association
-    mirrors operators/similarity.sq8_topk token for token."""
-    code = (
-        "LEAST(GREATEST(CAST(FLOOR((CAST(e.embedding[b.i] AS DOUBLE) - b.mn)"
-        " * 255.0 / (b.mx - b.mn) + 0.5) AS INT), 0), 255)"
-    )
-    recon = "(c.mn + CAST(c.code AS DOUBLE) * (c.mx - c.mn) / 255.0)"
-    err = f"(CAST(q.v[c.i] AS DOUBLE) - {recon})"
-    # NULL vectors are dropped on BOTH sides (engine: sq8_topk filters
-    # v IS NOT NULL before bounds + codes) so a null-heavy corpus cannot
-    # desynchronize the candidate set. The q CTE requires a null-
-    # element-free query row (the engine RAISES on one): a bad query
-    # yields zero oracle rows — visible — not partial SUM distances.
-    return f"""
-WITH nn AS (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL),
-bounds AS (
-  SELECT i,
-         MIN(CAST(embedding[i] AS DOUBLE)) AS mn,
-         MAX(CAST(embedding[i] AS DOUBLE)) AS mx
-  FROM nn, range(1, {dim + 1}) t(i)
-  GROUP BY i),
-codes AS (
-  SELECT e.vec_id AS id, b.i, b.mn, b.mx,
-         CASE WHEN b.mx > b.mn THEN {code} ELSE 0 END AS code
-  FROM nn e CROSS JOIN bounds b),
-q AS (SELECT embedding AS v FROM nn WHERE vec_id = {qid}
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-parts AS (
-  SELECT c.id, CAST(ROUND({err} * {err}, 6) AS DECIMAL(18,6)) AS part
-  FROM codes c CROSS JOIN q)
-SELECT id, CAST(SUM(part) AS DOUBLE) AS adc_d2
-FROM parts GROUP BY id ORDER BY adc_d2 ASC, id ASC LIMIT {k}"""
-
-
-@register(
-    "q162_sq8_ann",
-    "similarity search: scalar-quantized ANN (FAISS IndexScalarQuantizer "
-    "QT_8bit) — per-dimension byte codes between corpus min/max, "
-    "asymmetric-distance scan; the 8x-compression gear between "
-    "full-precision brute force (q46) and PQ's 128x (q159)",
-    _q162_oracle(),
-)
-def q162(spark, sf):
-    from ipes_data_pipeline_spark.operators.similarity import sq8_topk
-
-    emb = t(spark, sf, "embeddings")
-    return sq8_topk(
-        emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == _SQ8_QID),
-        k=_SQ8_K,
-    )
-
-
-def _q162p_oracle(dim: int = _DIM, k: int = _SQ8_K, qid: int = _SQ8_QID) -> str:
-    """sq8_topk_arrow's integer-exact ADC: same codes/reconstruction as
-    q162, but the per-part rounding is ``FLOOR(err² × 1e6 + 0.5)`` cast
-    to BIGINT — pure IEEE-double ops plus an exact int64 sum, the one
-    formulation numpy, Spark, and DuckDB all evaluate bit-identically
-    (no decimal-string rounding seam). Bounds skip null ELEMENTS
-    (MIN/MAX-skip-null); rows containing a null element are excluded
-    from the scan — the engine masks them vectorized in the kernel.
-    The q CTE takes the query from the null-element-free ``live`` set,
-    mirroring the engine's precondition (sq8_topk_arrow raises on a
-    null-element query): a bad query row yields zero oracle rows — a
-    visible gate divergence — instead of SUM silently skipping the
-    null parts into a skewed distance."""
+    mirrors operators/similarity.sq8_topk token for token, and the
+    per-part rounding is ``FLOOR(err² × 1e6 + 0.5)`` cast to BIGINT —
+    pure IEEE-double ops plus an exact int64 sum, the one formulation
+    numpy, Spark, and DuckDB all evaluate bit-identically (no
+    decimal-string rounding seam). NULL vectors are dropped; bounds
+    skip null ELEMENTS (MIN/MAX-skip-null); rows containing a null
+    element are excluded from the scan — the engine masks them
+    vectorized in the kernel. The q CTE takes the query from the
+    null-element-free ``live`` set, mirroring the engine's precondition
+    (sq8_topk raises on a null-element query): a bad query row yields
+    zero oracle rows — a visible gate divergence — instead of SUM
+    silently skipping the null parts into a skewed distance."""
     code = (
         "LEAST(GREATEST(CAST(FLOOR((CAST(e.embedding[b.i] AS DOUBLE) - b.mn)"
         " * 255.0 / (b.mx - b.mn) + 0.5) AS INT), 0), 255)"
@@ -129,26 +76,33 @@ SELECT id, CAST(SUM(part) AS DOUBLE) / 1000000.0 AS adc_d2
 FROM parts GROUP BY id ORDER BY adc_d2 ASC, id ASC LIMIT {k}"""
 
 
-@register(
-    "q162p_sq8_ann_scalable",
-    "similarity search: the DEPLOYABLE gear of q162 — identical SQ8 "
-    "quantization, ADC scan as ONE Arrow-batched corpus pass with a "
-    "running per-task top-k (the binary_sign_ann pattern) instead of "
-    "the dim-times posexplode + corpus-group hash aggregate, whose "
-    "cost went superlinear in the measured sf10->sf100 decade (5.1 s "
-    "-> 78.9 s at 2M vectors). Distances are micro-unit int64 "
-    "(floor(err^2*1e6+0.5), summed exactly) so the production kernel "
-    "stays exactly oracle-checkable — no decimal-rounding seam",
-    _q162p_oracle(),
-)
-def q162p(spark, sf):
-    from ipes_data_pipeline_spark.operators.similarity import sq8_topk_arrow
+def q162(spark, sf):
+    from ipes_data_pipeline_spark.operators.similarity import sq8_topk
 
     emb = t(spark, sf, "embeddings")
-    return sq8_topk_arrow(
+    return sq8_topk(
         emb, "vec_id", "embedding", emb.filter(F.col("vec_id") == _SQ8_QID),
         k=_SQ8_K,
     )
+
+
+register(
+    "q162_sq8_ann",
+    "similarity search: scalar-quantized ANN (FAISS IndexScalarQuantizer "
+    "QT_8bit) — per-dimension byte codes between corpus min/max, "
+    "asymmetric-distance scan as ONE Arrow-batched corpus pass with a "
+    "running per-task top-k; the 8x-compression gear between "
+    "full-precision brute force (q46) and PQ's 128x (q159)",
+    _q162_oracle(),
+)(q162)
+# the name the vector_retrieval benchmark workload and
+# scripts/ann_recall.py look up: the same query under its old gear name
+register(
+    "q162p_sq8_ann_scalable",
+    "similarity search: q162 registered under its former scalable-gear "
+    "name — same function, same oracle",
+    _q162_oracle(),
+)(q162)
 
 
 # ------------------------------------------------ q163: RRF hybrid fusion
@@ -231,9 +185,10 @@ def q163(spark, sf):
 
 def _q163p_oracle(k: int = _RRF_K, c: int = _RRF_C, qid: int = _RRF_QID) -> str:
     """q163's fusion with the semantic leg served by the SQ8 ADC scan
-    (q162's oracle, nested as a derived table) instead of brute-force
-    cosine. SQ8's ranking is fully deterministic, so this production
-    gear is EXACTLY oracle-checkable — no agreement-regime caveat."""
+    (q162's micro-unit oracle, nested as a derived table) instead of
+    brute-force cosine. SQ8's ranking is fully deterministic, so this
+    production gear is EXACTLY oracle-checkable — no agreement-regime
+    caveat."""
     from ipes_data_pipeline_spark.queries.curation import _q134_oracle
 
     contrib = (

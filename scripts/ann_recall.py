@@ -11,13 +11,17 @@ Ground truth is computed vectorized in numpy straight off the parquet
 file (no Spark, no sampling — the full corpus), per gear metric:
 
   q162p (SQ8 ADC)      exact squared-L2 ascending, id tiebreak
+  q159  (PQ)           exact squared-L2 ascending, id tiebreak
+  q160  (IVFPQ)        the same ground truth as q159
+  q161  (IVFPQ resid.) the same ground truth as q159
   q166  (binary+rerank) exact cosine descending, id tiebreak
   q168  (batched exact) exact cosine per query, self excluded
                         (a control row — the gear is exact, its recall
                         must be 1.0; anything else flags the harness)
 
 Gear results come from the registered queries themselves (same
-parameters the correctness gate pins: qid=0, k=10, batch (0,7,13,21)).
+parameters the correctness gate pins: qid=0 (SQ8, binary), qid=7 (PQ),
+k=10, batch (0,7,13,21)).
 
 Usage: python scripts/ann_recall.py SF_DIR [out.json]
 (run serially on a quiet box; one fresh Spark session for all gears)
@@ -60,6 +64,8 @@ def exact_sets(sf_dir: str):
     q = V[ids == 0][0]
     d2 = ((V - q) ** 2).sum(axis=1)
     out["q162p"] = topk_ids(ids, d2)
+    q7 = V[ids == 7][0]
+    out["pq"] = topk_ids(ids, ((V - q7) ** 2).sum(axis=1))
 
     qn = q / np.linalg.norm(q)
     cos = (Vn / nrmn[:, None]) @ qn
@@ -94,6 +100,9 @@ def main() -> None:
         for r in REGISTRY["q162p_sq8_ann_scalable"].spark(spark, sf_dir).collect()
     }
     recalls["q162p_sq8"] = len(got & exact["q162p"]) / K
+    for name in ("q159_pq_ann", "q160_ivfpq_ann", "q161_ivfpq_residual_ann"):
+        got = {int(r["id"]) for r in REGISTRY[name].spark(spark, sf_dir).collect()}
+        recalls[name] = len(got & exact["pq"]) / K
     got = {
         int(r["id"])
         for r in REGISTRY["q166_binary_sign_ann"].spark(spark, sf_dir).collect()

@@ -104,6 +104,13 @@ def test_knn_graph_guards_driver_memory(spark):
     with pytest.raises(ValueError, match="knn_graph_bucketed"):
         knn_graph(df, "vec_id", "embedding", k=3, max_corpus_bytes=1000)
     assert knn_graph(df, "vec_id", "embedding", k=3).count() == 300
+    # a leading null vector must not size the corpus at one dimension
+    # (size(null) is -1 with ANSI off): 101 x 4 x 8 B = 3232 B > 3000 B
+    lead_null = spark.createDataFrame(
+        [(-1, None)], "vec_id long, embedding array<double>"
+    ).unionAll(df).coalesce(1)
+    with pytest.raises(ValueError, match="knn_graph_bucketed"):
+        knn_graph(lead_null, "vec_id", "embedding", k=3, max_corpus_bytes=3000)
 
 
 def test_knn_graph_disjoint_corpus_keeps_all_slots(spark):
@@ -499,6 +506,37 @@ def test_lloyd_driver_and_distributed_regimes_agree(spark):
     assert [c for c, _ in driver] == [c for c, _ in dist]
     for (_, dv), (_, xv) in zip(driver, dist):
         assert dv == xv  # exact float equality, not approx
+
+
+@pytest.mark.parametrize("cap", [None, "0"], ids=["driver", "distributed"])
+def test_null_vectors_raise_the_same_error_in_both_regimes(spark, cap):
+    """A null vector used to split the Lloyd regimes: ``size(null)`` is
+    -1 with ANSI off, so the driver regime failed in numpy and the
+    distributed one returned ``[(1, [])]``. Both now count nulls in the
+    one stats job and raise the same ``ValueError``; ``ivfpq_topk``
+    raises it before it branches, and an all-null corpus still returns
+    zero rows."""
+    from ipes_data_pipeline_spark.operators.similarity import (
+        _lloyd_centroid_list,
+        ivfpq_topk,
+    )
+
+    rows = [(9, None), (1, [1.0, 2.0]), (2, [3.0, 4.0]), (3, [5.0, 1.0]),
+            (4, [0.0, 7.0])]
+    emb = spark.createDataFrame(rows, "id long, v array<double>").coalesce(1)
+    all_null = spark.createDataFrame([(9, None)], "id long, v array<double>")
+    key = "spark.ipes.pqDriverTrainMaxBytes"
+    if cap is not None:
+        spark.conf.set(key, cap)
+    try:
+        with pytest.raises(ValueError, match="_lloyd_centroid_list: 1 of 5 "):
+            _lloyd_centroid_list(emb, n_cells=2, n_iter=2)
+        q = emb.where("id = 1")
+        with pytest.raises(ValueError, match="ivfpq_topk: 1 of 5 "):
+            ivfpq_topk(emb, "id", "v", q, n_cells=2, n_probe=1, m=1, ksub=2)
+        assert ivfpq_topk(all_null, "id", "v", q, m=1, ksub=2).count() == 0
+    finally:
+        spark.conf.unset(key)
 
 
 def test_pq_fused_training_collect_matches_per_subspace(spark):

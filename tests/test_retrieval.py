@@ -61,20 +61,19 @@ def test_sq8_null_vector_rows_dropped(spark):
 
 
 def test_sq8_scan_plan_shape(spark):
-    # the PQ/ADC scan shape, round-9 form: bounds + query live as
-    # constant-folded literal arrays INSIDE the part expression, so
-    # the final action has NO join of any kind; per-dimension errors
-    # partially aggregate map-side, top-k is TakeOrderedAndProject,
-    # and nothing re-aggregates min/max (bounds were pre-collected).
+    # bounds are collected before the scan, so the final action is one
+    # corpus pass: ONE Python map node (the Arrow ADC kernel with its
+    # per-task top-k), TakeOrderedAndProject over the k-per-task digest,
+    # no join of any kind, and nothing re-aggregates min/max
     rows = [(i, [float(i), float(i * 2)]) for i in range(20)]
     df = _vec_df(spark, rows)
     plan = sq8_topk(
         df, "id", "v", df.filter(F.col("id") == 0), k=3
     )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
     assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan  # literal arrays, not a broadcast join
-    assert "partial_sum" in plan  # map-side combine before the exchange
-    assert "partial_min" not in plan  # bounds are literal arrays
+    assert "Join" not in plan
+    assert "partial_min" not in plan
     assert "partial_max" not in plan
 
 
@@ -261,33 +260,46 @@ def test_ann_topk_batch_compaction_is_lossless(spark):
     assert got == want and len(got) == 3
 
 
-def test_sq8_arrow_agrees_with_explode_shape(spark):
-    # the production Arrow kernel and the oracle-anchored explode shape
-    # share codes/reconstruction exactly; their per-part roundings
-    # differ by <= 1e-6 (decimal HALF_UP vs floor(x*1e6+0.5)), so on a
-    # random corpus the top-k ids coincide and distances agree to
-    # dim x 1e-6
+def test_sq8_matches_oracle_on_random_corpus(spark):
+    # the kernel's micro-unit distances are bit-identical to q162's SQL
+    # oracle run in DuckDB over the same corpus: same top-k ids, same
+    # doubles. Two constant dimensions (code 0) and a copy of the query
+    # (a distance tie at the top, broken by id) ride along.
+    import duckdb
     import numpy as np
+    import pyarrow as pa
 
-    from ipes_data_pipeline_spark.operators.similarity import sq8_topk_arrow
+    from ipes_data_pipeline_spark.queries.retrieval import _q162_oracle
 
     rng = np.random.default_rng(7)
-    rows = [(i, rng.standard_normal(8).tolist()) for i in range(200)]
-    df = _vec_df(spark, rows)
-    q = df.filter(F.col("id") == 0)
-    a = sq8_topk(df, "id", "v", q, k=10).collect()
-    b = sq8_topk_arrow(df, "id", "v", q, k=10).collect()
-    assert [r["id"] for r in a] == [r["id"] for r in b]
-    for ra, rb in zip(a, b):
-        assert abs(ra["adc_d2"] - rb["adc_d2"]) <= 8e-6 + 1e-12
+    mat = rng.standard_normal((200, 8))
+    mat[:, 2] = 0.25
+    mat[:, 5] = -3.0
+    mat[17] = mat[0]
+    ids = list(range(200))
+    df = _vec_df(spark, list(zip(ids, mat.tolist())))
+    got = [
+        (r["id"], r["adc_d2"])
+        for r in sq8_topk(df, "id", "v", df.filter(F.col("id") == 0), k=10)
+        .collect()
+    ]
+    table = pa.table(
+        {
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(mat.tolist(), pa.list_(pa.float64())),
+        }
+    )
+    with duckdb.connect() as con:
+        con.register("embeddings", table)
+        want = con.execute(_q162_oracle(dim=8, k=10, qid=0)).fetchall()
+    assert got == [(int(i), float(d)) for i, d in want]
+    assert [i for i, _ in got[:2]] == [0, 17] and len(got) == 10
 
 
-def test_sq8_arrow_compaction_is_lossless(spark):
+def test_sq8_compaction_is_lossless(spark):
     # force many Arrow batches per task so the running per-task top-k
     # truncation fires; results must match default batching exactly
     import numpy as np
-
-    from ipes_data_pipeline_spark.operators.similarity import sq8_topk_arrow
 
     rng = np.random.default_rng(11)
     df = _vec_df(
@@ -296,20 +308,19 @@ def test_sq8_arrow_compaction_is_lossless(spark):
     q = df.filter(F.col("id") == 0)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, "10000")
-    want = [(r["id"], r["adc_d2"]) for r in sq8_topk_arrow(df, "id", "v", q, k=5).collect()]
+    want = [(r["id"], r["adc_d2"]) for r in sq8_topk(df, "id", "v", q, k=5).collect()]
     try:
         spark.conf.set(key, "2")
-        got = [(r["id"], r["adc_d2"]) for r in sq8_topk_arrow(df, "id", "v", q, k=5).collect()]
+        got = [(r["id"], r["adc_d2"]) for r in sq8_topk(df, "id", "v", q, k=5).collect()]
     finally:
         spark.conf.set(key, old)
     assert got == want and len(got) == 5
 
 
-def test_sq8_arrow_contract_paths(spark):
-    # null-element rows are out of the scan (but not the bounds); a
-    # wrong-dim corpus fails loudly; multi-row query rejected
-    from ipes_data_pipeline_spark.operators.similarity import sq8_topk_arrow
-
+def test_sq8_contract_paths(spark):
+    # q162's contract: null-element rows are out of the scan (but not
+    # the bounds); a wrong-dim corpus fails loudly; multi-row query
+    # rejected; ids must be integral (they travel as int64)
     rows = [
         (0, [1.0, 2.0, 3.0, 4.0]),
         (1, [1.1, 2.1, 3.1, 4.1]),
@@ -317,13 +328,16 @@ def test_sq8_arrow_contract_paths(spark):
         (3, None),  # null vector: dropped everywhere
     ]
     df = _vec_df(spark, rows)
-    out = sq8_topk_arrow(df, "id", "v", df.filter(F.col("id") == 0), k=4).collect()
+    out = sq8_topk(df, "id", "v", df.filter(F.col("id") == 0), k=4).collect()
     assert [r["id"] for r in out] == [0, 1]
     with pytest.raises(ValueError, match="exactly one query row"):
-        sq8_topk_arrow(df, "id", "v", df.filter(F.col("id") < 2), k=2)
+        sq8_topk(df, "id", "v", df.filter(F.col("id") < 2), k=2)
     bad_dim = _vec_df(spark, [(9, [1.0, 2.0])])
     with pytest.raises(ValueError, match="query dim"):
-        sq8_topk_arrow(df, "id", "v", bad_dim, k=2)
+        sq8_topk(df, "id", "v", bad_dim, k=2)
+    str_ids = df.select(F.col("id").cast("string").alias("id"), "v")
+    with pytest.raises(ValueError, match="integral id"):
+        sq8_topk(str_ids, "id", "v", str_ids.limit(1), k=2)
 
 
 def test_ann_topk_batch_agrees_with_knn_graph(spark):
