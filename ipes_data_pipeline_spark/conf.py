@@ -43,12 +43,12 @@ _FORMS = {
 TABLE = {
     e.key.removeprefix("spark.ipes."): e
     for e in (
-        # Flips EVERY cut site to fault-tolerant checkpoints at once: a
-        # 100 TB operator chain assembled from library defaults would
-        # otherwise silently use localCheckpoint unless `reliable=True`
-        # were threaded through every call. Cluster side: set it to
-        # true (plus `setCheckpointDir` to HDFS/S3) and all operators
-        # run in the durable regime unmodified. A deployment setting.
+        # Flips EVERY cut site to fault-tolerant checkpoints at once (the
+        # only switch: cut() has no per-call flag), so a 100 TB operator
+        # chain assembled from library defaults needs no call-site
+        # threading. Cluster side: set it to true (plus
+        # `setCheckpointDir` to HDFS/S3) and all operators run in the
+        # durable regime unmodified. A deployment setting.
         Entry("spark.ipes.reliableCuts", "bool", False, "flag"),
         # Scratch root for parquet spills. On a multi-node cluster this
         # (or the session checkpoint dir) MUST point at a filesystem
@@ -77,12 +77,15 @@ TABLE = {
         # extra write job is pure overhead) below. Not yet verified at
         # sf10 (OPTIMIZATION_r11 §10).
         Entry("spark.ipes.edgeSpillMinInputBytes", "bytes", 8 << 20, "bytes"),
-        # Lloyd/PQ training sets whose estimated bytes (rows x dim x 8)
-        # fit under this cap are collected once and trained in numpy on
-        # the driver; above it every round is a distributed aggregate.
-        # A cluster with a fat driver can raise it; 0 pins every trainer
-        # to the distributed regime (the 100 TB path; tests/test_conf.py
-        # holds both regimes to identical rows).
+        # Read once per call, by similarity._lloyd_train (the one Lloyd
+        # trainer of q72, semdedup and ivfpq_topk). Training sets whose
+        # estimated bytes (rows x dim x 8) fit under this cap are
+        # collected once and every round runs the numpy round kernel on
+        # the driver; above it every round runs the same kernel per
+        # Arrow batch, then one aggregate for all codebooks. A cluster
+        # with a fat driver can raise it; 0 pins the distributed regime
+        # (the 100 TB path; tests/test_conf.py holds both regimes to
+        # identical rows).
         Entry("spark.ipes.pqDriverTrainMaxBytes", "bytes", 1 << 28, "bytes"),
         # Scan input bytes per initial AQE shuffle partition. Calibrated
         # on two anchors: the round-5 sf10 A/B (1.8 GB star; 256 initial

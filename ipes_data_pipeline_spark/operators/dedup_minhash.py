@@ -189,7 +189,6 @@ def minhash_lsh_pairs(
     bucket_cap: int | None = 256,
     shingles_df: DataFrame | None = None,
     materialize: bool = True,
-    reliable: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) sharing any LSH band.
 
@@ -222,10 +221,10 @@ def minhash_lsh_pairs(
         df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn, shingles_df
     )
     if bucket_cap is not None:
-        raw = cut(raw, reliable, via_parquet=spill)
+        raw = cut(raw, via_parquet=spill)
     bands = _cap_band_buckets(raw, bucket_cap)
     if materialize:
-        bands = cut(bands, reliable, via_parquet=spill)
+        bands = cut(bands, via_parquet=spill)
     # materialize=False relies on exchange reuse instead: the signature
     # aggregate's exchange is the identical subtree on both sides of the
     # self-join, so the hash pipeline still runs once — and the pair
@@ -258,7 +257,6 @@ def minhash_lsh_pairs_delta(
     corpus_bands: DataFrame | None = None,
     hash_fn: str = "xxhash64",
     bucket_cap: int | None = 256,
-    reliable: bool = False,
 ) -> DataFrame:
     """Incremental dedup: candidate pairs of a NEW batch against an
     existing corpus plus the batch itself — without ever re-pairing the
@@ -291,7 +289,6 @@ def minhash_lsh_pairs_delta(
         minhash_bands(
             new_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
         ),
-        reliable,
         via_parquet=spill_new,
     )
     if corpus_bands is None:
@@ -302,9 +299,7 @@ def minhash_lsh_pairs_delta(
             # same rule as the batch form: _cap_band_buckets reads the
             # union twice (sizes + join) — pin the hash-heavy corpus
             # lineage before capping, or it tokenizes twice
-            corpus_bands = cut(
-                corpus_bands, reliable, via_parquet=spill_corpus
-            )
+            corpus_bands = cut(corpus_bands, via_parquet=spill_corpus)
     others = _cap_band_buckets(
         corpus_bands.withColumn("is_new", F.lit(False)).unionByName(
             new_bands.withColumn("is_new", F.lit(True))
@@ -316,9 +311,7 @@ def minhash_lsh_pairs_delta(
     else:
         # pin the salted union once; the probe side is its is_new slice,
         # so both sides of the join carry the SAME sub-salt.
-        others = cut(
-            others, reliable, via_parquet=spill_new or spill_corpus
-        )
+        others = cut(others, via_parquet=spill_new or spill_corpus)
         probe = others.where(F.col("is_new")).drop("is_new")
     n, o = probe.alias("n"), others.alias("o")
     return (
@@ -347,7 +340,6 @@ def minhash_neardup_pairs(
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
     bucket_cap: int | None = 256,
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates refined by EXACT shingle-set
     Jaccard ≥ ``threshold``. Returns (id_a, id_b, jaccard).
@@ -383,7 +375,6 @@ def minhash_neardup_pairs(
         spread(df)
         .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
         .select("id", shingles(F.col("toks"), shingle_n).alias("sh")),
-        reliable,
         via_parquet=spill_worthwhile(df),
     )
     # materialize=False: the candidate set feeds exactly one consumer
@@ -403,7 +394,6 @@ def minhash_neardup_pairs(
         bucket_cap,
         shingles_df=sh_df,
         materialize=False,
-        reliable=reliable,
     )
     tokd = sh_df.select("id", F.col("sh").alias("dt"))
     a = tokd.select(F.col("id").alias("id_a"), F.col("dt").alias("dt_a"))

@@ -80,7 +80,6 @@ def pagerank(
     iterations: int = 3,
     damping_pct: int = 85,
     broadcast_ranks: bool = True,
-    reliable: bool = False,
 ) -> DataFrame:
     """Weighted PageRank over ``nodes(node)`` / ``edges(src, dst, w)``.
 
@@ -102,14 +101,14 @@ def pagerank(
     # whole caller lineage twice inside one job. Standard
     # iterative-graph practice (same cut GraphX/Pregel loops make each
     # superstep).
-    edges = cut(edges, reliable)
+    edges = cut(edges)
     out_w = edges.groupBy("src").agg(F.sum("w").cast("long").alias("out_w"))
     # out_w is |src nodes|-sized — under the same memory contract as the
     # rank broadcast it ships map-side; re-running the broadcast join
     # over checkpoint blocks per round beats a second materialization
     # barrier.
     ew = edges.join(F.broadcast(out_w) if broadcast_ranks else out_w, "src")
-    nodes = cut(nodes, reliable)
+    nodes = cut(nodes)
     # SPARSE rank carry (round-5 rework): the rank state between rounds
     # is the contribution table itself — only nodes that RECEIVED mass —
     # not the |nodes|-completed table. Nodes absent from it are exactly

@@ -34,7 +34,6 @@ def grouped_running_sum(
     val_col: str,
     out_col: str = "running_sum",
     num_shards: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """``df`` + ``out_col`` = running sum of ``val_col`` per
     ``group_col`` in ``order_col`` order, without ever materializing a
@@ -42,10 +41,11 @@ def grouped_running_sum(
 
     ``order_col`` must be unique per group (it is the sort key; a
     non-unique key would make "running" ill-defined). Sums are computed
-    exactly as BIGINT — cast upstream for decimals. ``reliable=True``
-    routes the mandatory shard materialization through a reliable
-    checkpoint (see :func:`~...operators.util.cut`) so a multi-hour run
-    survives executor loss.
+    exactly as BIGINT — cast upstream for decimals. With
+    ``spark.ipes.reliableCuts`` set, the mandatory shard materialization
+    goes through a reliable checkpoint (see
+    :func:`~...operators.util.cut`) so a multi-hour run survives
+    executor loss.
     """
     parts = num_shards or df.sparkSession.sparkContext.defaultParallelism
     # MATERIALIZE the sharded frame: both passes below consume it, and
@@ -57,8 +57,7 @@ def grouped_running_sum(
     sliced = cut(
         df.repartitionByRange(parts, group_col, order_col).withColumn(
             "__shard", F.spark_partition_id()
-        ),
-        reliable,
+        )
     )
     # pass 1: running sum WITHIN each (group, shard) slice — every
     # slice is one task's contiguous piece, so no single group

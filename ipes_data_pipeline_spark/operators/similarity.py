@@ -58,7 +58,10 @@ def knn_graph(
     ascending neighbor id. The plan is scan → mapInPandas: zero
     shuffles, and the query side scales out linearly with executors.
 
-    Self-pairs (same id on both sides) are excluded.
+    Self-pairs (same id on both sides) are excluded. Null vectors are
+    out of contract: the sizing job counts the corpus's, and a null
+    query vector fails its task, both with a ``ValueError`` naming
+    ``knn_graph``.
 
     GUARD: the broadcast regime collects the corpus to the driver, so
     the corpus size is bounded BEFORE any row moves — one distributed
@@ -76,13 +79,15 @@ def knn_graph(
     corpus = (corpus_df if corpus_df is not None else df).select(
         F.col(id_col), F.col(vec_col)
     )
-    # one distributed job sizes the corpus (count + dim together) — a
-    # separate count-then-head pair re-executed the corpus lineage twice
-    # before the collect even started. dim is read over non-null vectors
-    # only: size(null) is -1 with ANSI off, so a leading null vector
-    # would otherwise size the corpus at one dimension.
+    # one distributed job sizes the corpus (count + dim together) and
+    # counts its null vectors — a separate count-then-head pair
+    # re-executed the corpus lineage twice before the collect even
+    # started. dim is read over non-null vectors only: size(null) is -1
+    # with ANSI off, so a leading null vector would otherwise size the
+    # corpus at one dimension.
     stats = corpus.agg(
         F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col(vec_col).isNull(), 1)).alias("n_null"),
         F.max(
             F.when(F.col(vec_col).isNotNull(), F.size(F.col(vec_col)))
         ).alias("dim"),
@@ -101,6 +106,11 @@ def knn_graph(
             "(sign-LSH sharded, per-task memory = one bucket, approximate) "
             "or raise max_corpus_bytes if executors have the headroom."
         )
+    if stats["n_null"]:
+        raise ValueError(
+            f"knn_graph: {stats['n_null']} of {n_corpus} corpus vectors "
+            "are null; filter them out (v IS NOT NULL) first"
+        )
     rows = corpus.collect()
     c_ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
@@ -117,6 +127,12 @@ def knn_graph(
         for pdf in batches:
             if pdf.empty:
                 continue
+            n_null = int(pdf[vec_col].isna().sum())
+            if n_null:
+                raise ValueError(
+                    f"knn_graph: {n_null} query vectors are null; filter "
+                    "them out (v IS NOT NULL) first"
+                )
             q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             qn = np.linalg.norm(q, axis=1, keepdims=True)
             qn[qn == 0.0] = 1.0
@@ -357,7 +373,6 @@ def knn_graph_bucketed(
     k: int = 5,
     dims: tuple[int, ...] | None = (1, 9, 17, 25),
     multi_probe: bool = False,
-    reliable: bool = False,
     target_bucket: int = 256,
 ) -> DataFrame:
     """Approximate k-NN graph with a sign-LSH-sharded corpus — the
@@ -396,8 +411,7 @@ def knn_graph_bucketed(
             F.col(vec_col).alias("v"),
             sign_bucket(F.col(vec_col), dims).alias("bkt"),
             norm(F.col(vec_col)).alias("nrm"),
-        ),
-        reliable,
+        )
     )
     if multi_probe:
         nbits = len(dims)
@@ -519,7 +533,6 @@ def cosine_topk_pairs_lsh(
     vec_col: str,
     dims: tuple[int, ...] = (1, 9, 17, 25),
     k: int = 50,
-    reliable: bool = False,
 ) -> DataFrame:
     """Top-k most-similar pairs among sign-LSH bucket candidates."""
     # materialize: referenced on both sides of the self-join (avoids
@@ -532,8 +545,7 @@ def cosine_topk_pairs_lsh(
             F.col(vec_col).alias("v"),
             sign_bucket(F.col(vec_col), dims).alias("bkt"),
             norm(F.col(vec_col)).alias("nrm"),
-        ),
-        reliable,
+        )
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
@@ -670,34 +682,44 @@ def cosine_pairs_bucketed(
     )
 
 
-def _lloyd_centroid_list(
+def _lloyd_train(
     emb: DataFrame,
-    n_cells: int,
     n_iter: int,
+    n_cells: int | None = None,
+    m: int = 0,
+    ksub: int = 0,
+    residual: bool = False,
     train_limit: int | None = None,
-) -> list[tuple[int, list[float]]]:
-    """DETERMINISTIC Lloyd k-means: ``emb(id, v: array<double>)`` →
-    ``[(c_id, centroid)]`` sorted by c_id after ``n_iter`` assign+update
-    rounds.
+    stats: tuple[int, int] | None = None,
+) -> tuple[list | None, list[list]]:
+    """DETERMINISTIC Lloyd k-means, the one trainer behind every index:
+    ``emb(id, v: array<double>)`` → ``(coarse, books)``.
+
+    - ``coarse``: ``n_cells`` cells over the full vector as
+      ``[(c_id, centroid)]`` ascending by c_id (None when ``n_cells`` is
+      None) — what q72 and :func:`semdedup` ask for;
+    - ``books``: ``m`` codebooks of ``ksub`` codewords, codebook j
+      trained on columns ``[j·dsub, (j+1)·dsub)`` (``dsub = dim // m``)
+      of ``v``, or of ``v - coarse_centroid(cell(v))`` when
+      ``residual`` — the :func:`ivfpq_topk` index. The coarse rounds run
+      first, then all m codebooks train together, ``n_iter`` rounds
+      each.
 
     Every source of nondeterminism in library k-means is pinned, so the
     result is bit-stable in ANY engine (what lets q72, q130 and the PQ
     family carry cross-engine value oracles, which ``pyspark.ml``'s
     sampled init cannot):
 
-    - init = the ``n_cells`` smallest ids' vectors (content-fixed, no
-      sampling); centroid labels stay those seed ids across rounds;
+    - init = the smallest ids' vectors (content-fixed, no sampling);
+      centroid labels stay those seed ids across rounds;
     - assignment = argmin squared-L2 with ties broken on ascending
-      centroid id; the fold over dimensions is sequential in IEEE
-      double (``zip_with`` + ``aggregate``), bit-identical to DuckDB's
-      ``list_reduce`` (the q91 pattern);
+      centroid id, the fold over dimensions sequential in IEEE double
+      (:func:`_argmin_cells_blocked`, bit-identical to DuckDB's
+      ``list_reduce`` — the q91 pattern); a NaN distance ranks +inf;
     - update = element-wise mean via DECIMAL(18,6) sums — exact
       arithmetic, so summation ORDER cannot change the centroid;
     - empty cells simply drop their centroid row (identically in both
       engines — the group is absent).
-
-    Centroids live driver-side between rounds, so the plan never nests:
-    every round's lineage is scan → assign → one aggregate.
 
     ``train_limit`` bounds the TRAINING set to the ``train_limit``
     smallest-id rows (deterministic, SQL-expressible as ``ORDER BY id
@@ -706,75 +728,232 @@ def _lloyd_centroid_list(
     work is O(N × cells × dim), which the round-5 sf10 campaign
     measured turning the count-adaptive q130a twin QUADRATIC overall
     (632 s — worse than the fixed-cell form it was meant to fix) the
-    moment cells grew with N. Centroid init (smallest ``n_cells`` ids)
-    is a prefix of the training sample, so fixture-scale corpora under
-    the limit are bit-identical with or without it.
+    moment cells grew with N. The seeds are a prefix of the training
+    sample, so fixture-scale corpora under the limit are bit-identical
+    with or without it.
 
-    Two regimes, identical arithmetic (a pytest asserts they produce
-    the same list on the fixture corpus):
+    Every round in either regime is one call of the round kernel
+    :func:`_lloyd_partials` (count + exact micro-unit sums per
+    ``(sub_j, c_id)``) followed by :func:`_lloyd_update` (the means), so
+    the regimes agree by construction. The regime is chosen here, once,
+    by training bytes (rows × dim × 8) against ``pqDriverTrainMaxBytes``
+    (:data:`conf.TABLE`):
 
-    - **Driver regime** (training set ≤ ``pqDriverTrainMaxBytes`` in
-      :data:`conf.TABLE`, 256 MiB by default — estimated rows × dim × 8
-      by one stats job): collect the (id, v) projection
-      once and run every round in numpy. This is how production ANN
-      indexes train centroids anyway (a bounded corpus/sample, not the
-      full 100 TB), and it removes the per-round distributed-job
-      barrier that dominated q72/q130 at bench scale — an iterative
-      algorithm over 8 × 64 doubles has no business paying a Spark job
-      per round.
-    - **Distributed regime** (above the cap): per round, assignment
-      ships the centroid table as DATA via :func:`_with_cells`' one-row
-      broadcast crossJoin, and the update is one ``groupBy(c_id)`` with
-      a per-dimension ``element_at`` DECIMAL(18,6) sum — rows shuffled
-      per round = |cells| carrying dim+1 columns; the update collect IS
-      the round barrier the algorithm needs anyway.
+    - **driver**: ONE Arrow collect of the training set; each round is
+      one kernel call over the matrix. This is how production ANN
+      indexes train anyway (a bounded sample, not the full 100 TB), and
+      an iterative algorithm over 8 × 64 doubles has no business paying
+      a Spark job per round;
+    - **distributed**: the training set is cut once and its smallest
+      ``max(n_cells, ksub)`` rows collected as seeds; each round is one
+      ``mapInPandas`` of the kernel (map-side partials), one
+      ``groupBy(sub_j, c_id)`` sum and one collect — for every codebook
+      at once, so the job count does not grow with ``m``. Nothing larger
+      than the codebooks reaches the driver.
 
-    The contract above holds in both regimes: numpy loops per dimension
-    in the order of the ``zip_with``+``aggregate`` fold, argmin-first
-    over centroids kept in ascending-id order is the c_id tie-break, and
-    numpy replicates Spark's double→decimal cast (shortest-repr then
-    HALF_UP, i.e. Java ``BigDecimal.valueOf``) by quantizing
-    ``Decimal(repr(x))`` once per element, after which per-cell sums
-    are exact int64 adds.
-
-    Null vectors are out of contract: the one stats job that sizes the
-    training set also counts them, and a null among non-null vectors
-    raises ``ValueError`` before either regime starts (an all-null set
-    trains nothing, like an empty one).
-
-    Sharing the list (not a DataFrame) lets callers like
-    :func:`semdedup` skip a createDataFrame→collect round-trip.
+    ``stats`` is the caller's ``(rows, dim)`` from :func:`_vector_stats`
+    when it already ran that job; otherwise the training set's stats job
+    runs here. Null vectors are out of contract: a null among non-null
+    vectors raises ``ValueError`` before either regime starts (an
+    all-null set trains nothing, like an empty one).
     """
-    cap = conf.get(emb.sparkSession, "pqDriverTrainMaxBytes")
-    if train_limit is not None:
-        emb = emb.orderBy("id").limit(train_limit)
-    n_rows, dim = _vector_stats(emb, "_lloyd_centroid_list")
-    if not dim:  # no rows, or no non-null vector to train on
-        return []
-    if n_rows * dim * 8 <= cap:
-        return _lloyd_driver(emb, n_cells, n_iter)
-    # distributed regime: the caller's lineage is referenced by the
-    # seed collect and every round — cut it once or a derived frame
-    # (filter/join upstream) re-executes n_iter+1 times
-    emb = cut(emb)
-    cent = [
-        (r["id"], [float(x) for x in r["v"]])
-        for r in emb.orderBy("id").limit(n_cells).collect()
-    ]
-    aggs = [F.count(F.lit(1)).alias("n")] + [
-        F.sum(F.element_at("v", i + 1).cast("decimal(18,6)")).alias(f"s{i}")
-        for i in range(dim)
-    ]
-    for _ in range(n_iter):
-        rows = _with_cells(emb, cent).groupBy("c_id").agg(*aggs).collect()
-        cent = sorted(
-            (
-                r["c_id"],
-                [float(r[f"s{i}"]) / r["n"] for i in range(dim)],
-            )
-            for r in rows
+    import numpy as np
+
+    tr = emb if train_limit is None else emb.orderBy("id").limit(train_limit)
+    n_rows, dim = stats or _vector_stats(tr, "_lloyd_train")
+    n_train = n_rows if train_limit is None else min(n_rows, train_limit)
+    if not dim or not n_train:  # no rows, or no non-null vector to train on
+        return (None if n_cells is None else []), []
+    n_seeds = max(n_cells or 0, ksub)
+    if n_train * dim * 8 <= conf.get(tr.sparkSession, "pqDriverTrainMaxBytes"):
+        ids, mat = _collect_matrix(tr)
+        seed_ids, seed_mat = ids[:n_seeds], mat[:n_seeds]
+
+        def rounds(books, res):
+            x = mat if res is None else _residuals(mat, res)
+            units = _micro_units(x)
+            for _ in range(n_iter):
+                books = _lloyd_update(books, _lloyd_partials(x, units, books))
+            return books
+
+    else:
+        # the seed collect and every round read the training set: cut it
+        # once or its lineage (the ORDER BY id LIMIT, a caller's filter
+        # or join) re-executes n_iter + 1 times per stage
+        tr = cut(tr)
+        rows = tr.orderBy("id").limit(n_seeds).collect()
+        seed_ids = np.array([r["id"] for r in rows], dtype=np.int64)
+        seed_mat = np.array([r["v"] for r in rows], dtype=np.float64)
+
+        def rounds(books, res):
+            for _ in range(n_iter):
+                books = _lloyd_update(books, _lloyd_partials_spark(tr, books, res))
+            return books
+
+    coarse = books = None
+    if n_cells is not None:
+        (coarse,) = rounds([(0, seed_ids[:n_cells], seed_mat[:n_cells])], None)
+    if m:
+        res = coarse[2] if residual else None
+        seeds = seed_mat[:ksub] if res is None else _residuals(seed_mat[:ksub], res)
+        dsub = dim // m
+        books = rounds(
+            [
+                (j * dsub, seed_ids[:ksub], seeds[:, j * dsub : (j + 1) * dsub])
+                for j in range(m)
+            ],
+            res,
         )
-    return cent
+
+    def pairs(book):
+        _, c_ids, cmat = book
+        return [(int(c), [float(x) for x in row]) for c, row in zip(c_ids, cmat)]
+
+    return (
+        None if coarse is None else pairs(coarse),
+        [pairs(b) for b in books or []],
+    )
+
+
+def _micro_units(mat):
+    """``mat`` as exact DECIMAL(18,6) micro-units (int64): Spark's
+    double→decimal cast (shortest repr, then HALF_UP — Java
+    ``BigDecimal.valueOf``) × 1e6. Each element is quantized ONCE, so
+    per-cell sums are exact integer adds (order-free) and the mean
+    reproduces ``CAST(SUM(DECIMAL) AS DOUBLE) / COUNT(*)`` to the bit.
+
+    Vectorized half-up: ``floor(x·1e6 + 0.5)`` matches the exact
+    quantize everywhere except within float error of a .5 tie (and at
+    exact ties, where floor-based rounding disagrees with HALF_UP for
+    negatives); those rare elements are recomputed exactly. (The
+    all-Python Decimal loop was ~50 s at the training cap's 32M
+    elements; this is the same result in ~ms.)"""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    micro = Decimal("0.000001")
+    flt = mat * 1e6
+    units = np.floor(flt + 0.5).astype(np.int64)
+    # the suspect window must scale with magnitude: fl(x·1e6) carries
+    # relative error up to |x·1e6|·2⁻⁵³, which exceeds a fixed 1e-7 for
+    # |x| ≳ 900 — elements within the magnitude-aware window of a .5
+    # boundary (and exact ties) fall back to the exact Decimal quantize
+    near = np.abs(flt - np.floor(flt) - 0.5) <= np.maximum(
+        1e-7, np.abs(flt) * 4e-16
+    )
+    for idx in zip(*np.nonzero(near)):
+        units[idx] = int(
+            Decimal(repr(float(mat[idx])))
+            .quantize(micro, rounding=ROUND_HALF_UP)
+            .scaleb(6)
+        )
+    return units
+
+
+def _residuals(mat, cmat):
+    """``mat`` minus each row's nearest centroid of ``cmat`` (rows
+    ascending by c_id): the :func:`_argmin_cells_blocked` assignment,
+    then the elementwise IEEE subtraction :func:`_pq_encode_arrow`
+    applies to the encoded rows."""
+    return mat - cmat[_argmin_cells_blocked(mat, cmat)]
+
+
+def _lloyd_partials(mat, units, books):
+    """The Lloyd round kernel, shared by both training regimes.
+
+    ``books`` holds every codebook being trained as ``(col0, c_ids,
+    cmat)``: centroids ascending by id over columns ``col0 ..
+    col0 + width`` of ``mat``; ``units`` is :func:`_micro_units` of
+    ``mat``. Returns ``[(sub_j, c_id, n, sums)]`` for every non-empty
+    cell — ``sub_j`` the codebook's position in ``books``, ``sums`` the
+    exact int64 micro-unit sums of its rows — ready to be summed across
+    batches in any order."""
+    import numpy as np
+
+    out = []
+    for j, (c0, c_ids, cmat) in enumerate(books):
+        w = cmat.shape[1]
+        cell = _argmin_cells_blocked(mat[:, c0 : c0 + w], cmat)
+        n = np.bincount(cell, minlength=len(c_ids))
+        live = np.nonzero(n)[0]
+        order = np.argsort(cell, kind="stable")
+        starts = np.cumsum(n)[live] - n[live]
+        sums = np.add.reduceat(units[order, c0 : c0 + w], starts, axis=0)
+        out.extend(
+            (j, int(c_ids[i]), int(n[i]), s) for i, s in zip(live, sums)
+        )
+    return out
+
+
+def _lloyd_partials_spark(tr: DataFrame, books: list, res) -> list:
+    """One distributed round of :func:`_lloyd_partials` over ``tr(id,
+    v)``: the kernel per Arrow batch (after subtracting each row's
+    ``res`` centroid, when given), map-side partial sums, then ONE
+    ``groupBy(sub_j, c_id)`` and ONE collect for every codebook at once
+    (the codebooks of one call share a width: the full vector, or
+    ``dsub``). The sums travel as DECIMAL(38,0): a ``long`` sum wraps
+    silently with ANSI off."""
+    import numpy as np
+    import pandas as pd
+
+    cols = [f"s{i}" for i in range(books[0][2].shape[1])]
+
+    def part(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            if res is not None:
+                mat = _residuals(mat, res)
+            sub_j, c_id, n, sums = zip(
+                *_lloyd_partials(mat, _micro_units(mat), books)
+            )
+            out = pd.DataFrame(np.array(sums, dtype=np.int64), columns=cols)
+            out.insert(0, "sub_j", np.array(sub_j, dtype=np.int32))
+            out.insert(1, "c_id", np.array(c_id, dtype=np.int64))
+            out.insert(2, "n", np.array(n, dtype=np.int64))
+            yield out
+
+    schema = "sub_j int, c_id long, n long, " + ", ".join(
+        f"{c} long" for c in cols
+    )
+    agg = (
+        tr.mapInPandas(part, schema)
+        .groupBy("sub_j", "c_id")
+        .agg(
+            F.sum("n").alias("n"),
+            *[F.sum(F.col(c).cast("decimal(38,0)")).alias(c) for c in cols],
+        )
+    )
+    return [
+        (r["sub_j"], r["c_id"], r["n"], [r[c] for c in cols])
+        for r in agg.collect()
+    ]
+
+
+def _lloyd_update(books: list, partials) -> list:
+    """The next centroids of every codebook from one round's
+    ``(sub_j, c_id, n, sums)`` partials — the one mean line of both
+    regimes, ``CAST(SUM(DECIMAL(18,6)) AS DOUBLE) / COUNT(*)``. A cell
+    with no partial (no rows) drops."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    means: list[dict] = [{} for _ in books]
+    for j, c_id, n, sums in partials:
+        means[j][int(c_id)] = [
+            float(Decimal(int(s)).scaleb(-6)) / n for s in sums
+        ]
+    return [
+        (
+            c0,
+            np.array(sorted(got), dtype=np.int64),
+            np.array([got[c] for c in sorted(got)], dtype=np.float64),
+        )
+        for (c0, _, _), got in zip(books, means)
+    ]
 
 
 def _vector_stats(emb: DataFrame, op: str) -> tuple[int, int]:
@@ -782,7 +961,7 @@ def _vector_stats(emb: DataFrame, op: str) -> tuple[int, int]:
     the largest size over non-null vectors, 0 when there are none:
     ``size(null)`` is -1 with ANSI off, so a plain ``first(size(v))``
     reads a leading null vector as a dimension. Null vectors are out of
-    contract for the Lloyd trainers and the PQ encode, so a frame mixing
+    contract for the Lloyd trainer and the PQ encode, so a frame mixing
     null and non-null vectors raises ``ValueError`` naming ``op``, the
     same error whichever regime would have run."""
     stats = emb.agg(
@@ -812,170 +991,30 @@ def _collect_matrix(emb: DataFrame):
     pdf = emb.select("id", "v").toPandas()
     ids = pdf["id"].to_numpy(dtype=np.int64)
     order = np.argsort(ids, kind="stable")
-    if len(ids) == 0:
-        return ids, np.empty((0, 0), dtype=np.float64)
     mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
     return ids[order], mat[order]
 
 
-def _lloyd_driver(
-    emb: DataFrame, n_cells: int, n_iter: int
-) -> list[tuple[int, list[float]]]:
-    """Driver-regime Lloyd rounds — see :func:`_lloyd_centroid_list`
-    for the regime contract and the bit-stability argument."""
-    ids, mat = _collect_matrix(emb)
-    return _lloyd_driver_matrix(ids, mat, n_cells, n_iter)
-
-
-def _lloyd_driver_matrix(
-    ids, mat, n_cells: int, n_iter: int
-) -> list[tuple[int, list[float]]]:
-    """The numpy Lloyd core over an id-sorted (ids, matrix) pair.
-    Split out of :func:`_lloyd_driver` so the PQ family can collect its
-    training set ONCE and train all m subspace codebooks from numpy
-    slices (one Spark job instead of m sizing jobs + m collects — the
-    round-8 training-floor cut); numpy slicing of the collected full
-    vectors is value-identical to collecting F.slice projections."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    # exact scaled-integer view for the update sums: each element
-    # quantized ONCE to decimal(18,6)'s scale; per-cell sums are then
-    # exact int64 adds (order-free), and the mean reproduces
-    # CAST(SUM(DECIMAL) AS DOUBLE) / COUNT(*) to the bit
-    # vectorized half-up: floor(x·1e6 + 0.5) matches the exact quantize
-    # everywhere except within float error of a .5 tie (|x·1e6| ≲ 1e7 ⇒
-    # error ≲ 2e-9); those rare elements — and exact ties, where
-    # floor-based rounding disagrees with HALF_UP for negatives — are
-    # recomputed exactly. (The all-Python Decimal loop was ~50 s at the
-    # training cap's 32M elements; this is the same result in ~ms.)
-    micro = Decimal("0.000001")
-    flt = mat * 1e6
-    scaled = np.floor(flt + 0.5).astype(np.int64)
-    # the suspect window must scale with magnitude: fl(x·1e6) carries
-    # relative error up to |x·1e6|·2⁻⁵³, which exceeds a fixed 1e-7 for
-    # |x| ≳ 900 — elements within the magnitude-aware window of a .5
-    # boundary (and exact ties) fall back to the exact Decimal quantize
-    near = np.abs(flt - np.floor(flt) - 0.5) <= np.maximum(
-        1e-7, np.abs(flt) * 4e-16
-    )
-    for i, j in zip(*np.nonzero(near)):
-        scaled[i, j] = int(
-            Decimal(repr(float(mat[i, j])))
-            .quantize(micro, rounding=ROUND_HALF_UP)
-            .scaleb(6)
-        )
-    cents: list[tuple[int, np.ndarray]] = [
-        (int(ids[i]), mat[i].astype(np.float64))
-        for i in range(min(n_cells, len(ids)))
-    ]
-    for _ in range(n_iter):
-        if not cents:
-            break
-        cmat = np.stack([c for _, c in cents])
-        # d2 accumulates per-dimension IN ORDER — the exact IEEE fold of
-        # zip_with + aggregate (vectorized across rows, not across dims)
-        d2 = np.zeros((mat.shape[0], cmat.shape[0]))
-        for d in range(mat.shape[1]):
-            diff = mat[:, d : d + 1] - cmat[None, :, d]
-            d2 += diff * diff
-        # argmin takes the FIRST minimum: cents ascend by c_id, so ties
-        # break to the lower centroid id, matching the array_min struct
-        assign = np.argmin(d2, axis=1)
-        nxt = []
-        for j, (cid, _) in enumerate(cents):
-            mask = assign == j
-            cnt = int(mask.sum())
-            if cnt == 0:  # empty cell drops its centroid row
-                continue
-            sums = scaled[mask].sum(axis=0)
-            nxt.append(
-                (
-                    cid,
-                    np.array(
-                        [
-                            float(Decimal(int(s)).scaleb(-6)) / cnt
-                            for s in sums
-                        ]
-                    ),
-                )
-            )
-        cents = nxt
-    return [(cid, [float(x) for x in vec]) for cid, vec in cents]
-
-
-#: cell count above which assignment switches to the Arrow kernel —
-#: the HOF fold's interpreter cost is rows × cells × dim, fine at the
-#: oracle-pinned 8 cells but 2.8M interpreted 64-element folds for
-#: q130p's sqrt(N) cells at sf1 (measured 32 s; the Arrow kernel runs
-#: the same corpus in ~2 s). 16 keeps every 8-cell oracle query on the
-#: proven HOF plan while sqrt(N) sizing (>=23 even at 500 vectors)
-#: always takes the vectorized path.
-_ARROW_ASSIGN_MIN_CELLS = 16
-
-
 def _with_cells(emb: DataFrame, cent: list) -> DataFrame:
-    """``(id, c_id, v)``: nearest-cell assignment with the centroid
-    table shipped as ONE broadcast row holding an
-    ``array<struct<c_id, c_vec>>``.
+    """``(id, c_id, v)``: nearest-cell assignment of ``emb(id, v)``
+    against ``cent = [(c_id, centroid)]``, one Arrow batch at a time.
+    Centroids ride in the task closure (cells × dim doubles, driver-
+    sized like every centroid table here); ``mapInPandas`` is a map
+    stage, so there is no shuffle at any corpus scale, and ids pass
+    through with the caller's type.
 
-    Dispatches to :func:`_with_cells_arrow` when ``len(cent) >=
-    _ARROW_ASSIGN_MIN_CELLS`` — same argmin, same IEEE fold, same
-    tie-break, vectorized per Arrow batch instead of interpreted per
-    (row, centroid). A pytest pins the two paths value-identical.
-
-    Per input row, ``array_min`` over ``transform(cents, c ->
-    struct(d2(v, c.c_vec), c.c_id))`` picks the lexicographic minimum —
-    exactly argmin-squared-L2 with ties to the lower centroid id, and
-    the same sequential double fold as the SQL oracle. Two properties
-    matter:
-
-    - zero shuffle: the join is a broadcast of one row, assignment is a
-      map stage at any corpus scale;
-    - constant expression size: centroids travel as DATA, so codegen
-      compiles one small lambda regardless of cells × dim (inlining
-      them as literals produced a multi-thousand-node expression whose
-      per-round recompilation dominated the whole Lloyd loop at
-      fixture scale).
-    """
-    if len(cent) >= _ARROW_ASSIGN_MIN_CELLS:
-        return _with_cells_arrow(emb, cent)
-    spark = emb.sparkSession
-    cent_row = local_frame(
-        spark,
-        [(cent,)], "cents array<struct<c_id:long,c_vec:array<double>>>"
-    )
-
-    cand = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _d2_fold(F.col("v"), c["c_vec"]).alias("d2"),
-            c["c_id"].alias("c_id"),
-        ),
-    )
-    return emb.crossJoin(F.broadcast(cent_row)).select(
-        "id", F.array_min(cand)["c_id"].alias("c_id"), "v"
-    )
-
-
-def _with_cells_arrow(emb: DataFrame, cent: list) -> DataFrame:
-    """Vectorized twin of :func:`_with_cells`: centroids ride in the
-    task closure (cells × dim doubles — the same broadcast-scale
-    contract as the one-row HOF form), assignment is numpy per Arrow
-    batch. Still zero shuffle: ``mapInPandas`` is a map stage.
-
-    Value parity with the HOF form, argued term by term:
+    The argmin is :func:`_argmin_cells_blocked` — the fold the Lloyd
+    kernel and the PQ encode share — over centroids sorted ascending by
+    c_id:
 
     - d2 accumulates per-dimension IN ORDER (``acc += diff²`` for d =
-      0..dim-1) — the exact left-to-right double fold of the
-      ``zip_with`` + ``aggregate`` expression and of the SQL oracle;
-    - centroids are sorted ascending by c_id, so ``argmin``'s
-      first-minimum rule IS the (d2, c_id) lexicographic tie-break of
-      ``array_min`` (which is order-independent, making the defensive
-      sort safe for any caller);
-    - a NaN d2 (NaN vector component) ranks +inf — Spark orders NaN
-      above every double, so such a centroid loses to any finite one
-      and an all-NaN row falls to the lowest c_id, exactly array_min.
+      0..dim-1) — the exact left-to-right double fold of the SQL
+      oracle's ``list_reduce``;
+    - ``argmin``'s first-minimum rule is the (d2, c_id) lexicographic
+      tie-break;
+    - a NaN d2 (NaN vector component) ranks +inf — Spark and DuckDB
+      order NaN above every double, so such a centroid loses to any
+      finite one and an all-NaN row falls to the lowest c_id.
     """
     import numpy as np
     import pandas as pd
@@ -983,28 +1022,22 @@ def _with_cells_arrow(emb: DataFrame, cent: list) -> DataFrame:
     order = sorted(range(len(cent)), key=lambda i: cent[i][0])
     c_ids = np.array([cent[i][0] for i in order], dtype=np.int64)
     cmat = np.array([cent[i][1] for i in order], dtype=np.float64)
+    id_dt = emb.schema["id"].dataType.simpleString()
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "id": pd.array([], dtype="int64"),
-                        "c_id": pd.array([], dtype="int64"),
-                        "v": pdf["v"],
-                    }
-                )
                 continue
             mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             yield pd.DataFrame(
                 {
-                    "id": pdf["id"].to_numpy(),
+                    "id": pdf["id"],
                     "c_id": c_ids[_argmin_cells_blocked(mat, cmat)],
                     "v": pdf["v"],
                 }
             )
 
-    return emb.mapInPandas(assign, "id long, c_id long, v array<double>")
+    return emb.mapInPandas(assign, f"id {id_dt}, c_id long, v array<double>")
 
 
 def ann_topk_ivf_kmeans_lloyd(
@@ -1017,14 +1050,14 @@ def ann_topk_ivf_kmeans_lloyd(
     k: int = 10,
 ) -> DataFrame:
     """IVF ANN over deterministic Lloyd cells
-    (:func:`_lloyd_centroid_list`), value-checkable cross-engine (q72).
+    (:func:`_lloyd_train`), value-checkable cross-engine (q72).
     Same scale shape as :func:`ann_topk_ivf`: assignment is an
     equi-join on the cell id, the probe touches one cell, no cross
     join of the corpus."""
     emb = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    rows = _lloyd_centroid_list(emb, n_cells, n_iter)
+    rows, _ = _lloyd_train(emb, n_iter, n_cells=n_cells)
     if not rows:
         return local_frame(df.sparkSession, [], "id long, cos_sim double")
     q = query_df.select(
@@ -1069,12 +1102,11 @@ def semdedup(
     IS NULL``. The drop rule is a single anti-join pass (no iteration):
     deterministic, order-free, and exactly expressible in SQL — which
     is what lets the operator carry a cross-engine value oracle (q130)
-    on top of the :func:`_lloyd_centroid_list` cells q72 already
-    value-checks.
+    on top of the :func:`_lloyd_train` cells q72 already value-checks.
 
     Scale shape: clustering is the Lloyd loop (driver regime under the
-    training cap, broadcast-assign + (cell × dim)-bounded update
-    above it); the prune shuffles on the CLUSTER id only — one
+    training cap, one (cell × dim)-bounded aggregate per round above
+    it); the prune shuffles on the CLUSTER id only — one
     ``applyInPandas`` task per cell, so candidate pairs are Σ|cell|²,
     never |n|², and ``n_cells`` is the lever that caps per-task work
     (the paper's √n-clusters regime). Inside a cell the pairwise
@@ -1086,7 +1118,7 @@ def semdedup(
     (``_GRAM_CHUNK_CELLS``-capped), never |cell|².
 
     ``train_limit`` bounds Lloyd training to the smallest-id sample
-    (see :func:`_lloyd_centroid_list`) — mandatory once ``n_cells``
+    (see :func:`_lloyd_train`) — mandatory once ``n_cells``
     grows with the corpus, or training itself goes quadratic.
     """
     import numpy as np
@@ -1100,7 +1132,7 @@ def semdedup(
     rows = (
         centroids
         if centroids is not None
-        else _lloyd_centroid_list(emb, n_cells, n_iter, train_limit=train_limit)
+        else _lloyd_train(emb, n_iter, n_cells=n_cells, train_limit=train_limit)[0]
     )
     if not rows:  # empty input: one verdict row per input vector = none
         return local_frame(
@@ -1161,7 +1193,6 @@ def ann_topk_ivf(
     id_col: str,
     vec_col: str,
     query_df: DataFrame,
-    n_cells: int = 8,
     probe_dims: tuple[int, ...] = (1, 9, 17),
     k: int = 10,
 ) -> DataFrame:
@@ -1185,8 +1216,8 @@ def ann_topk_ivf(
 
 def _d2_fold(v, cv):
     """Sequential squared-L2 fold over paired arrays — the exact IEEE
-    op order of the SQL oracle's ``list_reduce`` (and of every other d2
-    in this module: see :func:`_with_cells`)."""
+    op order of the SQL oracle's ``list_reduce`` (and of every numpy d2
+    in this module: see :func:`_argmin_cells_blocked`)."""
     diff2 = F.zip_with(
         v,
         cv,
@@ -1223,9 +1254,9 @@ def _argmin_cells_blocked(mat, cmat):
     """Blocked argmin-squared-L2 of ``mat`` rows against ``cmat`` rows:
     per-dimension in-order accumulation, NaN→+inf, first-minimum
     tie-break over centroids the CALLER keeps ascending by id. The one
-    numpy fold behind :func:`_with_cells_arrow`, the fused PQ encode
-    kernel and the driver-regime residual assignment, so they cannot
-    drift.
+    assignment fold behind :func:`_with_cells`, the Lloyd round kernel
+    (:func:`_lloyd_partials`), the training residuals and the PQ
+    encode, so they cannot drift.
 
     Row-blocked with preallocated buffers: arithmetic is
     element-for-element identical to the naive ``d2 += diff * diff``
@@ -1272,18 +1303,18 @@ def _pq_encode_arrow(
     materializations per query where one scan suffices (guide §1.2:
     fix the pass count before the per-task work).
 
-    Value identity with :func:`_with_cells`, term by term:
+    Value identity with training and :func:`_with_cells`, term by term:
 
     - per-subspace assignment is :func:`_argmin_cells_blocked` over the
-      same ``F.slice`` column range — the identical per-dimension IEEE
-      fold, NaN and tie semantics of ``_with_cells_arrow`` (and of the
-      HOF form: the two are pytest-pinned equal);
+      subspace's column range — the identical per-dimension IEEE fold,
+      NaN and tie semantics of :func:`_with_cells` and of the Lloyd
+      kernel;
     - the fused coarse stage assigns on the FULL vector with the same
-      fold, filters ``cell ∈ probes`` exactly like the engine-side
-      ``isin``, and (``residual=True``) subtracts the own-cell centroid
-      elementwise in IEEE double — the numpy twin of the ``zip_with``
-      subtraction, applied after the probe filter (same surviving rows,
-      same values);
+      fold, filters ``cell ∈ probes``, and (``residual=True``) subtracts
+      the own-cell centroid elementwise in IEEE double — the
+      subtraction :func:`_residuals` applies to the training rows,
+      applied after the probe filter (same surviving rows, same
+      values);
     - ids pass through untouched (any Spark type), so downstream joins
       and the final top-k see exactly the rows a per-subspace plan
       would.
@@ -1361,51 +1392,39 @@ def _pq_query_dtab(
     each probed cell owns its own tables). ``qv_rows`` is
     ``[(cell_or_None, query_vector)]``. Each entry is computed ENGINE-
     side (``F.round(...).cast(decimal)``) so the decimal rounding
-    matches the SQL oracle's ROUND exactly — factored out of the
-    per-subspace loops so the fused and distributed paths share one
-    definition."""
+    matches the SQL oracle's ROUND exactly. All m codebooks and all
+    query slices are one frame each, joined on ``sub_j``, so the table
+    costs one broadcast whatever ``m`` is."""
     m = len(cents_by_sub)
-    parts = []
-    for j in range(m):
-        cent_df = local_frame(
-            spark,
-            cents_by_sub[j], "c_id long, c_vec array<double>"
-        )
-        if with_cell:
-            q_df = local_frame(
-                spark,
-                [(c, v[j * dsub : (j + 1) * dsub]) for c, v in qv_rows],
-                "cell long, qv array<double>",
-            )
-            cols = ["cell"]
-        else:
-            q_df = local_frame(
-                spark,
-                [(v[j * dsub : (j + 1) * dsub],) for _, v in qv_rows],
-                "qv array<double>",
-            )
-            cols = []
-        parts.append(
-            cent_df.crossJoin(F.broadcast(q_df)).select(
-                *cols,
-                F.lit(j).alias("sub_j"),
-                F.col("c_id").alias("code"),
-                F.round(_d2_fold(F.col("qv"), F.col("c_vec")), 6)
-                .cast("decimal(18,6)")
-                .alias("d2"),
-            )
-        )
-    dtab = parts[0]
-    for d in parts[1:]:
-        dtab = dtab.unionAll(d)
-    return dtab
+    books = local_frame(
+        spark,
+        [(j, c, v) for j, cent in enumerate(cents_by_sub) for c, v in cent],
+        "sub_j int, code long, c_vec array<double>",
+    )
+    q_df = local_frame(
+        spark,
+        [
+            (cell, j, v[j * dsub : (j + 1) * dsub])
+            for cell, v in qv_rows
+            for j in range(m)
+        ],
+        "cell long, sub_j int, qv array<double>",
+    )
+    return books.join(F.broadcast(q_df), "sub_j").select(
+        *(["cell"] if with_cell else []),
+        "sub_j",
+        "code",
+        F.round(_d2_fold(F.col("qv"), F.col("c_vec")), 6)
+        .cast("decimal(18,6)")
+        .alias("d2"),
+    )
 
 
 def _probe_cells(qv: list[float], coarse: list, n_probe: int) -> list[int]:
     """Rank cells driver-side with the pinned sequential fold (the SQL
     oracle's list_reduce order), ties to the lower c_id — the probe
     list is a pure function of (query, centroids). A NaN d2 ranks
-    +inf (the _with_cells_arrow rule and DuckDB's NULLS-LAST-like
+    +inf (the _argmin_cells_blocked rule and DuckDB's NULLS-LAST-like
     NaN ordering); Python tuple sort would otherwise place it
     arbitrarily because every NaN comparison is False."""
 
@@ -1459,7 +1478,7 @@ def ivfpq_topk(
 
     Index build: the coarse centroids and the m per-subspace codebooks
     of ``ksub`` codewords are the deterministic Lloyd chain of
-    :func:`_lloyd_centroid_list`, trained on the ``train_limit``
+    :func:`_lloyd_train`, trained on the ``train_limit``
     smallest-id rows (``ORDER BY id LIMIT train_limit``); every scanned
     vector is encoded as its m per-subspace nearest-codeword ids — 4
     small ints instead of 64 doubles, which is what makes a 100 TB
@@ -1478,19 +1497,10 @@ def ivfpq_topk(
     :func:`_probe_cells`, exact IEEE residual subtraction, and ADC sums
     in exact decimal (summation order cannot move them).
 
-    Two regimes, identical rows (tests/test_conf.py pins q159–q161
-    equal under both), chosen by training bytes (rows × dim × 8)
-    against ``pqDriverTrainMaxBytes`` (:data:`conf.TABLE`):
-
-    - **driver**: ONE Arrow collect of the training rows feeds numpy
-      coarse training, the probe ranking, the training residuals and all
-      m codebooks (:func:`_lloyd_driver_matrix` over column slices);
-    - **distributed** (training only): the corpus is cut once; coarse
-      training and each subspace's codebook train through
-      :func:`_lloyd_centroid_list` (residuals one broadcast-join map
-      stage) — nothing larger than a codebook ever reaches the driver.
-
-    The regime decides only where the codebooks train. Both then encode
+    Training is :func:`_lloyd_train` — one call for the coarse cells,
+    the residuals and all m codebooks, in whichever regime
+    ``pqDriverTrainMaxBytes`` picks there (tests/test_conf.py pins
+    q159–q161 row-identical under both). Both regimes then encode
     through the same :func:`_pq_encode_arrow` scan, which assigns cells,
     filters to the probes, subtracts residuals and encodes all m
     subspaces in ONE Arrow pass: codebooks and coarse centroids are
@@ -1528,64 +1538,13 @@ def ivfpq_topk(
     if len(qv) != dim:
         raise ValueError(f"query dim {len(qv)} != corpus dim {dim}")
     dsub = dim // m
-    n_train = n_rows if train_limit is None else min(n_rows, train_limit)
-    if not n_train:  # nothing to train codebooks on
+    coarse, cents_by_sub = _lloyd_train(
+        emb, n_iter, n_cells=n_cells, m=m, ksub=ksub, residual=residual,
+        train_limit=train_limit, stats=(n_rows, dim),
+    )
+    if not cents_by_sub:  # train_limit=0: nothing to train codebooks on
         return empty
-    spark = emb.sparkSession
-    coarse = probes = None
-    if n_train * dim * 8 <= conf.get(spark, "pqDriverTrainMaxBytes"):
-        import numpy as np
-
-        tr = emb if train_limit is None else emb.orderBy("id").limit(train_limit)
-        ids, mat = _collect_matrix(tr)
-        if n_cells is not None:
-            coarse = _lloyd_driver_matrix(ids, mat, n_cells, n_iter)
-            probes = _probe_cells(qv, coarse, n_probe)
-            if residual:  # residuals of the TRAINING rows only
-                c_mat = np.array([v for _, v in coarse], dtype=np.float64)
-                mat = mat - c_mat[_argmin_cells_blocked(mat, c_mat)]
-        cents_by_sub = [
-            _lloyd_driver_matrix(
-                ids, mat[:, j * dsub : (j + 1) * dsub], ksub, n_iter
-            )
-            for j in range(m)
-        ]
-    else:
-        emb = cut(emb)  # coarse training, m subspace trainings, the encode
-        train = emb
-        if n_cells is not None:
-            coarse = _lloyd_centroid_list(
-                emb, n_cells, n_iter, train_limit=train_limit
-            )
-            probes = _probe_cells(qv, coarse, n_probe)
-            if residual:
-                # one map stage against the broadcast centroid table
-                # (exact IEEE elementwise subtraction); cut once — the m
-                # subspace trainings each read it
-                cent_df = local_frame(
-                    spark, coarse, "c_id long, c_vec array<double>"
-                )
-                train = cut(
-                    _with_cells(emb, coarse)
-                    .join(F.broadcast(cent_df), "c_id")
-                    .select(
-                        "id",
-                        F.zip_with(
-                            "v",
-                            "c_vec",
-                            lambda a, b: a.cast("double") - b.cast("double"),
-                        ).alias("v"),
-                    )
-                )
-        cents_by_sub = [
-            _lloyd_centroid_list(
-                train.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
-                ksub,
-                n_iter,
-                train_limit=train_limit,
-            )
-            for j in range(m)
-        ]
+    probes = None if coarse is None else _probe_cells(qv, coarse, n_probe)
     codes = _pq_encode_arrow(
         emb, cents_by_sub, dsub, coarse=coarse, probes=probes,
         residual=residual,
@@ -1600,7 +1559,9 @@ def ivfpq_topk(
         ]
     else:
         q_rows = [(None, qv)]
-    dtab = _pq_query_dtab(spark, q_rows, cents_by_sub, dsub, with_cell=residual)
+    dtab = _pq_query_dtab(
+        emb.sparkSession, q_rows, cents_by_sub, dsub, with_cell=residual
+    )
     keys = ["cell", "sub_j", "code"] if residual else ["sub_j", "code"]
     return (
         codes.join(F.broadcast(dtab), keys)

@@ -97,30 +97,24 @@ def pin_pairs(src_df: DataFrame, pairs: DataFrame) -> DataFrame:
     return cut(pairs, via_parquet=spill_worthwhile(src_df, "edgeSpillMinInputBytes"))
 
 
-def cut(
-    df: DataFrame, reliable: bool = False, via_parquet: bool = False
-) -> DataFrame:
+def cut(df: DataFrame, via_parquet: bool = False) -> DataFrame:
     """Materialize ``df`` and truncate its lineage — the repo's standard
     barrier before a frame is referenced from multiple plan subtrees
     (self-joins, iterative rounds, multi-pass shards).
 
-    Two durability regimes:
+    Two durability regimes, chosen by the session conf
+    ``spark.ipes.reliableCuts`` (:data:`conf.TABLE`) for every cut in
+    the session at once, with no call-site flag:
 
-    - ``reliable=False`` (default): ``localCheckpoint(eager=True)``.
-      Blocks live on executor local store — fastest, and the right
-      default for interactive/bench work — but NOT fault-tolerant: lose
-      one executor mid-job and the lineage is gone, the job dies.
-    - ``reliable=True``: ``checkpoint(eager=True)`` to the session's
-      checkpoint directory (``spark.sparkContext.setCheckpointDir`` —
-      HDFS/S3 on a real cluster). Survives executor loss; this is the
-      regime a multi-hour 100 TB run must use on every operator that
-      cuts lineage, at the price of one distributed write+read.
-
-    The per-call flag is OR-ed with the session conf
-    ``spark.ipes.reliableCuts`` (default ``false``): setting the conf
-    to ``true`` promotes every cut in the session to the durable
-    regime without touching call sites. There is deliberately no
-    conf that *demotes* an explicit ``reliable=True``.
+    - ``false`` (default): ``localCheckpoint(eager=True)``. Blocks live
+      on executor local store — fastest, and the right default for
+      interactive/bench work — but NOT fault-tolerant: lose one
+      executor mid-job and the lineage is gone, the job dies.
+    - ``true``: ``checkpoint(eager=True)`` to the session's checkpoint
+      directory (``spark.sparkContext.setCheckpointDir`` — HDFS/S3 on a
+      real cluster). Survives executor loss; this is the regime a
+      multi-hour 100 TB run must use on every operator that cuts
+      lineage, at the price of one distributed write+read.
 
     Third regime, for LARGE intermediates: ``via_parquet=True`` spills
     the frame to a columnar scratch dir and returns the re-read —
@@ -139,18 +133,18 @@ def cut(
     1. ``spark.ipes.spillDir`` — set it to a scratch root on a shared
        filesystem (HDFS/S3) for any multi-node deployment. The spill
        then inherits that filesystem's durability, so ``via_parquet``
-       also satisfies an explicit or conf-driven ``reliable`` demand
-       (the conf is a declaration that the root is shared+durable).
+       also satisfies ``reliableCuts`` (the conf is a declaration that
+       the root is shared+durable).
     2. The session checkpoint dir, if set — same shared-FS reasoning.
     3. A driver-local temp dir — ONLY under a ``local[*]`` master,
        where driver and executors share one machine. On a cluster
        master with neither conf this raises instead of silently
        producing a scratch path the executors cannot all reach.
 
-    When the reliable regime is demanded (arg or conf) and the spill
-    root resolved to the driver-local fallback (3), the call honors the
-    durability contract by degrading to ``checkpoint(eager=True)``
-    rather than writing a non-durable spill.
+    When ``reliableCuts`` is set and the spill root resolved to the
+    driver-local fallback (3), the call honors the durability contract
+    by degrading to ``checkpoint(eager=True)`` rather than writing a
+    non-durable spill.
 
     Scratch dirs are freed at interpreter exit through the owning
     Hadoop FileSystem (or earlier via :func:`release_spills`).
@@ -166,7 +160,7 @@ def cut(
     shard contract — SCALING.md case study) holds identically.
     """
     spark = df.sparkSession
-    reliable = reliable or conf.get(spark, "reliableCuts")
+    reliable = conf.get(spark, "reliableCuts")
     if via_parquet:
         root = _spill_root(spark)
         if root is None:

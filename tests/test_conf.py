@@ -97,7 +97,7 @@ def test_malformed_cases_cover_every_entry():
 def _read_sites(spark, name):
     """The package calls that read ``name``."""
     from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
+        _lloyd_train,
         ivfpq_topk,
     )
     from ipes_data_pipeline_spark.operators.util import (
@@ -117,7 +117,7 @@ def _read_sites(spark, name):
         "spillMinInputBytes": [lambda: spill_worthwhile(df)],
         "edgeSpillMinInputBytes": [lambda: pin_pairs(df, df)],
         "pqDriverTrainMaxBytes": [
-            lambda: _lloyd_centroid_list(emb, 1, 1),
+            lambda: _lloyd_train(emb, 1, n_cells=1),
             lambda: ivfpq_topk(
                 emb, "id", "v", emb.limit(1), n_cells=None, m=1, ksub=1,
                 n_iter=1,

@@ -113,6 +113,30 @@ def test_knn_graph_guards_driver_memory(spark):
         knn_graph(lead_null, "vec_id", "embedding", k=3, max_corpus_bytes=3000)
 
 
+def test_knn_graph_null_vectors_raise_a_named_error(spark):
+    """A null corpus vector that passes the byte guard is counted by the
+    sizing job and raises a ValueError naming knn_graph and the count
+    (it used to reach the driver-side matrix build and fail with numpy's
+    "inhomogeneous shape" error); a null query-side vector against a
+    separate corpus fails its task with the same named error."""
+    import pytest
+
+    from ipes_data_pipeline_spark.operators.similarity import knn_graph
+
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, None)], schema
+    )
+    with pytest.raises(ValueError, match="knn_graph: 2 of 4 corpus vectors"):
+        knn_graph(df, "vec_id", "embedding", k=1)
+    corpus = df.where("embedding IS NOT NULL")
+    with pytest.raises(Exception, match="knn_graph: 1 query vectors are null"):
+        knn_graph(
+            df.where("vec_id <= 2").coalesce(1), "vec_id", "embedding", k=1,
+            corpus_df=corpus,
+        ).collect()
+
+
 def test_knn_graph_disjoint_corpus_keeps_all_slots(spark):
     """Query-vs-corpus mode with DISJOINT ids: no query row occupies a
     corpus column, so no self slot is subtracted — a 1-row corpus yields
@@ -481,13 +505,11 @@ def test_semdedup_within_cluster_prune(spark):
 
 
 def test_lloyd_driver_and_distributed_regimes_agree(spark):
-    """_lloyd_centroid_list has two physical regimes (driver numpy under
-    the training cap, distributed rounds above it) that must be
+    """_lloyd_train has two physical regimes (driver numpy under the
+    training cap, distributed rounds above it) that must be
     BIT-IDENTICAL — the q72/q130 oracles only check whichever regime
     the fixture size selects, so this pins the other one."""
-    from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
-    )
+    from ipes_data_pipeline_spark.operators.similarity import _lloyd_train
     from pyspark.sql import functions as F
 
     emb = (
@@ -497,10 +519,10 @@ def test_lloyd_driver_and_distributed_regimes_agree(spark):
             F.col("embedding").cast("array<double>").alias("v"),
         )
     )
-    driver = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
+    driver, _ = _lloyd_train(emb, 3, n_cells=8)
     spark.conf.set("spark.ipes.pqDriverTrainMaxBytes", "0")  # distributed
     try:
-        dist = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
+        dist, _ = _lloyd_train(emb, 3, n_cells=8)
     finally:
         spark.conf.unset("spark.ipes.pqDriverTrainMaxBytes")
     assert [c for c, _ in driver] == [c for c, _ in dist]
@@ -517,7 +539,7 @@ def test_null_vectors_raise_the_same_error_in_both_regimes(spark, cap):
     raises it before it branches, and an all-null corpus still returns
     zero rows."""
     from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
+        _lloyd_train,
         ivfpq_topk,
     )
 
@@ -529,8 +551,8 @@ def test_null_vectors_raise_the_same_error_in_both_regimes(spark, cap):
     if cap is not None:
         spark.conf.set(key, cap)
     try:
-        with pytest.raises(ValueError, match="_lloyd_centroid_list: 1 of 5 "):
-            _lloyd_centroid_list(emb, n_cells=2, n_iter=2)
+        with pytest.raises(ValueError, match="_lloyd_train: 1 of 5 "):
+            _lloyd_train(emb, 2, n_cells=2)
         q = emb.where("id = 1")
         with pytest.raises(ValueError, match="ivfpq_topk: 1 of 5 "):
             ivfpq_topk(emb, "id", "v", q, n_cells=2, n_probe=1, m=1, ksub=2)
@@ -540,41 +562,72 @@ def test_null_vectors_raise_the_same_error_in_both_regimes(spark, cap):
 
 
 def test_pq_fused_training_collect_matches_per_subspace(spark):
-    """ivfpq_topk's driver branch (one collect, all m codebooks from
-    numpy slices of the full matrix) must be BIT-IDENTICAL to the
-    per-subspace _lloyd_centroid_list training of its distributed
-    branch — this pins the numpy-slice == F.slice-collect claim
-    directly, codebook by codebook."""
+    """_lloyd_train trains all m PQ codebooks in ONE aggregate per
+    round, keyed by (sub_j, c_id). In the distributed regime that pass
+    must be BIT-IDENTICAL, codebook by codebook, to m separate
+    single-codebook trainings on the F.slice projections — and the
+    driver regime's one-pass training must equal it too."""
     from pyspark.sql import functions as F
 
-    from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
-        _lloyd_driver_matrix,
-    )
-    import numpy as np
+    from ipes_data_pipeline_spark.operators.similarity import _lloyd_train
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
     m, dsub, ksub, n_iter = 4, 16, 16, 3
-    rows = emb.select("id", "v").collect()
-    ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)[order]
+    _, driver = _lloyd_train(emb, n_iter, m=m, ksub=ksub)
+    key = "spark.ipes.pqDriverTrainMaxBytes"
+    spark.conf.set(key, "0")
+    try:
+        _, fused = _lloyd_train(emb, n_iter, m=m, ksub=ksub)
+        per_sub = [
+            _lloyd_train(
+                emb.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
+                n_iter,
+                n_cells=ksub,
+            )[0]
+            for j in range(m)
+        ]
+    finally:
+        spark.conf.unset(key)
+    assert len(fused) == m
     for j in range(m):
-        fused = _lloyd_driver_matrix(
-            ids, mat[:, j * dsub : (j + 1) * dsub], ksub, n_iter
-        )
-        per_sub = _lloyd_centroid_list(
-            emb.select("id", F.slice("v", j * dsub + 1, dsub).alias("v")),
-            ksub,
-            n_iter,
-        )
-        assert [c for c, _ in fused] == [c for c, _ in per_sub]
-        for (_, fv), (_, pv) in zip(fused, per_sub):
+        assert [c for c, _ in fused[j]] == [c for c, _ in per_sub[j]]
+        for (_, fv), (_, pv) in zip(fused[j], per_sub[j]):
             assert fv == pv  # exact float equality per element
+    assert driver == fused
+
+
+def test_micro_units_match_spark_decimal_cast(spark):
+    """The Lloyd kernel quantizes every element to DECIMAL(18,6) in
+    numpy (shortest repr, then HALF_UP). Both regimes run that numpy
+    quantize now, so pin it against Spark's own cast: random doubles,
+    exact +-.5 micro-unit ties, magnitudes up to ~1e6 and tiny values
+    must give the same scaled integer, exactly."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from ipes_data_pipeline_spark.operators.similarity import _micro_units
+
+    rng = np.random.RandomState(11)
+    vals = list(rng.randn(300))
+    vals += list(rng.uniform(-1e6, 1e6, 300))
+    vals += list(rng.randn(100) * 1e-7) + [5e-7, -5e-7, 1.5e-6, 0.0, -0.0]
+    # exact decimal ties: k + 0.5 micro-units, both signs, all scales
+    for mag in (1, 1e2, 1e4, 1e6):
+        for k in rng.randint(0, 10**6, 50):
+            t = float(f"{int(mag * rng.rand())}.{int(k):06d}5")
+            vals += [t, -t]
+    vals = [float(v) for v in vals]
+    got = _micro_units(np.array(vals, dtype=np.float64)[:, None])[:, 0]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, x double")
+    want = {
+        r["i"]: int(r["d"].scaleb(6))
+        for r in df.select("i", F.col("x").cast("decimal(18,6)").alias("d")).collect()
+    }
+    bad = [(vals[i], int(got[i]), want[i]) for i in range(len(vals)) if int(got[i]) != want[i]]
+    assert not bad, bad[:10]
 
 
 def test_minhash_empty_shingle_docs_band_on_null_components(spark):
@@ -677,56 +730,12 @@ def test_q121p_capped_twin_subset_recall_vs_q121(spark):
     assert capped  # the valve doesn't empty the result
 
 
-def test_with_cells_arrow_matches_hof_assignment(spark):
-    """_with_cells dispatches to the numpy Arrow kernel above
-    _ARROW_ASSIGN_MIN_CELLS; below it, the interpreted-HOF fold. The
-    two must be VALUE-IDENTICAL (same argmin, same IEEE per-dimension
-    fold, same (d2, c_id) tie-break, same NaN-loses rule) — q130p's
-    sqrt(N) sizing always takes the Arrow path while the 8-cell oracle
-    queries take the HOF path, so neither gate covers the other."""
-    from pyspark.sql import functions as F
-
-    from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
-        _with_cells,
-        _with_cells_arrow,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    # 23 = ceil(sqrt(500)): q130p's sizing at this fixture, and enough
-    # cells that equidistant ties + empty cells actually occur
-    cent = _lloyd_centroid_list(emb, n_cells=23, n_iter=2)
-    # force the HOF body for the same centroid list by moving the
-    # dispatch threshold out of the way
-    import ipes_data_pipeline_spark.operators.similarity as sim
-
-    old = sim._ARROW_ASSIGN_MIN_CELLS
-    try:
-        sim._ARROW_ASSIGN_MIN_CELLS = 10**9  # force HOF
-        hof_rows = sorted(
-            (r["id"], r["c_id"]) for r in _with_cells(emb, cent).collect()
-        )
-    finally:
-        sim._ARROW_ASSIGN_MIN_CELLS = old
-    arrow_rows = sorted(
-        (r["id"], r["c_id"]) for r in _with_cells_arrow(emb, cent).collect()
-    )
-    assert hof_rows == arrow_rows
-
-
 def test_with_cells_arrow_nan_and_tie_semantics(spark):
     """Synthetic pins of the two subtle rules: a NaN-component vector
     must fall to the LOWEST c_id (every d2 NaN -> all rank +inf,
     array_min's NaN-is-greatest + c_id tie-break), and an exactly
     equidistant vector must pick the lower c_id."""
-    from ipes_data_pipeline_spark.operators.similarity import (
-        _with_cells_arrow,
-    )
+    from ipes_data_pipeline_spark.operators.similarity import _with_cells
 
     emb = spark.createDataFrame(
         [
@@ -737,7 +746,7 @@ def test_with_cells_arrow_nan_and_tie_semantics(spark):
         "id long, v array<double>",
     )
     cent = [(10, [1.0, 0.0]), (20, [0.0, 1.0])]
-    got = {r["id"]: r["c_id"] for r in _with_cells_arrow(emb, cent).collect()}
+    got = {r["id"]: r["c_id"] for r in _with_cells(emb, cent).collect()}
     assert got == {1: 10, 2: 10, 3: 10}
 
 
@@ -853,9 +862,7 @@ def test_lloyd_train_limit_is_smallest_id_prefix_and_fixture_noop(spark):
     bit-identical-at-fixture-scale claim both production twins make."""
     import numpy as np
 
-    from ipes_data_pipeline_spark.operators.similarity import (
-        _lloyd_centroid_list,
-    )
+    from ipes_data_pipeline_spark.operators.similarity import _lloyd_train
 
     rng = np.random.RandomState(3)
     rows = [
@@ -863,14 +870,12 @@ def test_lloyd_train_limit_is_smallest_id_prefix_and_fixture_noop(spark):
     ]
     emb = spark.createDataFrame(rows, "id long, v array<double>")
 
-    limited = _lloyd_centroid_list(emb, n_cells=10, n_iter=2, train_limit=150)
-    manual = _lloyd_centroid_list(
-        emb.filter("id < 150"), n_cells=10, n_iter=2
-    )
+    limited = _lloyd_train(emb, 2, n_cells=10, train_limit=150)
+    manual = _lloyd_train(emb.filter("id < 150"), 2, n_cells=10)
     assert limited == manual
 
-    noop = _lloyd_centroid_list(emb, n_cells=10, n_iter=2, train_limit=1000)
-    full = _lloyd_centroid_list(emb, n_cells=10, n_iter=2)
+    noop = _lloyd_train(emb, 2, n_cells=10, train_limit=1000)
+    full = _lloyd_train(emb, 2, n_cells=10)
     assert noop == full
 
 

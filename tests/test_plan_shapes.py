@@ -315,18 +315,16 @@ def test_winsorize_band_join_is_broadcast(spark, sf_dir):
     assert_broadcast_join(q(spark, "q141_winsorize", sf_dir), forbid_smj=True)
 
 
-def test_cell_assignment_is_single_broadcast_row(spark):
-    # cell assignment broadcasts ONE centroid row (array<struct>) and
-    # scores map-side: the plan must be a broadcast nested-loop of one
-    # row, never an exchange of the corpus (q130/q72's assignment stage;
-    # the query-level plan hides it behind the localCheckpoint cut)
+def test_cell_assignment_has_no_exchange(spark):
+    # cell assignment ships the centroids in the task closure and
+    # scores map-side: the plan must never exchange the corpus
+    # (q130/q72's assignment stage)
     from ipes_data_pipeline_spark.operators.similarity import _with_cells
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, v array<double>"
     )
     plan = formatted_plan(_with_cells(emb, [(1, [1.0, 0.0]), (2, [0.0, 1.0])]))
-    assert "BroadcastNestedLoopJoin" in plan
     assert "Exchange hashpartitioning" not in plan
 
 

@@ -1,17 +1,20 @@
-"""reliable=True lineage cuts: operators that materialize through
-operators.util.cut must produce ROW-IDENTICAL output when the cut goes
-through a reliable checkpoint (spark.sparkContext.setCheckpointDir)
-instead of executor-local blocks.
+"""Reliable lineage cuts: operators that materialize through
+operators.util.cut must produce ROW-IDENTICAL output when the session
+conf spark.ipes.reliableCuts sends every cut through a reliable
+checkpoint (spark.sparkContext.setCheckpointDir) instead of
+executor-local blocks.
 
 Why this exists: localCheckpoint blocks live on executor local store —
 lose one executor on a multi-hour 100 TB job and the lineage is
-unrecoverable. reliable=True is the fault-tolerant regime such a run
-must use; these tests pin that flipping the switch changes durability
-only, never values (including the spark_partition_id-derived shard
-assignment inside grouped_running_sum).
+unrecoverable. The reliable regime is what such a run must use; these
+tests pin that flipping the switch changes durability only, never
+values (including the spark_partition_id-derived shard assignment
+inside grouped_running_sum).
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +30,16 @@ def _rows(df, *order):
     return [tuple(r) for r in df.orderBy(*order).collect()]
 
 
+@contextmanager
+def _reliable(spark):
+    """Every cut made inside the block is a reliable checkpoint."""
+    spark.conf.set("spark.ipes.reliableCuts", "true")
+    try:
+        yield
+    finally:
+        spark.conf.unset("spark.ipes.reliableCuts")
+
+
 def test_grouped_running_sum_reliable_matches_local(spark, ckdir):
     from ipes_data_pipeline_spark.operators.prefix import grouped_running_sum
 
@@ -36,7 +49,8 @@ def test_grouped_running_sum_reliable_matches_local(spark, ckdir):
         (F.col("id") % 7).alias("v"),
     )
     local = grouped_running_sum(df, "g", "o", "v", num_shards=8)
-    reli = grouped_running_sum(df, "g", "o", "v", num_shards=8, reliable=True)
+    with _reliable(spark):
+        reli = grouped_running_sum(df, "g", "o", "v", num_shards=8)
     assert _rows(local, "g", "o") == _rows(reli, "g", "o")
 
 
@@ -47,9 +61,8 @@ def test_minhash_pairs_reliable_matches_local(spark, ckdir):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     local = minhash_neardup_pairs(docs, "doc_id", "text", bucket_cap=50)
-    reli = minhash_neardup_pairs(
-        docs, "doc_id", "text", bucket_cap=50, reliable=True
-    )
+    with _reliable(spark):
+        reli = minhash_neardup_pairs(docs, "doc_id", "text", bucket_cap=50)
     assert _rows(local, "id_a", "id_b") == _rows(reli, "id_a", "id_b")
 
 
@@ -61,7 +74,8 @@ def test_pagerank_reliable_matches_local(spark, ckdir):
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "node long")
     local = pagerank(nodes, edges, iterations=3)
-    reli = pagerank(nodes, edges, iterations=3, reliable=True)
+    with _reliable(spark):
+        reli = pagerank(nodes, edges, iterations=3)
     assert _rows(local, "node") == _rows(reli, "node")
 
 
@@ -70,7 +84,8 @@ def test_knn_bucketed_reliable_matches_local(spark, ckdir):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     local = knn_graph_bucketed(emb, "vec_id", "embedding", k=3)
-    reli = knn_graph_bucketed(emb, "vec_id", "embedding", k=3, reliable=True)
+    with _reliable(spark):
+        reli = knn_graph_bucketed(emb, "vec_id", "embedding", k=3)
     assert _rows(local, "id", "neighbor_id") == _rows(reli, "id", "neighbor_id")
 
 
@@ -83,19 +98,16 @@ def _ck_files(ckdir):
 def test_cut_honors_session_conf(spark, ckdir):
     """spark.ipes.reliableCuts=true promotes a default cut() to a REAL
     checkpoint (files land in the checkpoint dir); off → local blocks
-    only. The per-call reliable=True is never demoted by the conf."""
+    only."""
     from ipes_data_pipeline_spark.operators.util import cut
 
     df = spark.range(100)
     before = _ck_files(ckdir)
     cut(df)
     assert _ck_files(ckdir) == before  # default: localCheckpoint, no files
-    spark.conf.set("spark.ipes.reliableCuts", "true")
-    try:
+    with _reliable(spark):
         cut(df)
-        assert _ck_files(ckdir) > before  # conf promoted the cut
-    finally:
-        spark.conf.unset("spark.ipes.reliableCuts")
+    assert _ck_files(ckdir) > before  # conf promoted the cut
 
 
 def test_cut_via_parquet_preserves_values_off_heap(spark, ckdir):
@@ -154,9 +166,9 @@ def test_cut_via_parquet_spill_dir_conf_and_release(spark, tmp_path):
 
 
 def test_cut_via_parquet_honors_reliable_without_shared_root(spark, tmp_path):
-    """reliable + via_parquet with NO shared spill root must not write a
-    non-durable local spill: the call degrades to the checkpoint regime
-    (files in the checkpoint dir, none in a temp scratch)."""
+    """reliableCuts + via_parquet with NO shared spill root must not
+    write a non-durable local spill: the call degrades to the checkpoint
+    regime (files in the checkpoint dir, none in a temp scratch)."""
     from ipes_data_pipeline_spark.operators.util import _SPILL_DIRS, cut
 
     # fresh checkpoint dir, set AFTER resolution order matters: unset
@@ -166,14 +178,15 @@ def test_cut_via_parquet_honors_reliable_without_shared_root(spark, tmp_path):
     # resolution rule 3 applies only when getCheckpointDir() is None.
     if spark.sparkContext.getCheckpointDir() is None:
         before = len(_SPILL_DIRS)
-        with pytest.raises(Exception):
+        with _reliable(spark), pytest.raises(Exception):
             # no checkpoint dir set either -> checkpoint(eager) raises
             # its own clear error instead of spilling non-durably
-            cut(spark.range(5), reliable=True, via_parquet=True)
+            cut(spark.range(5), via_parquet=True)
         assert len(_SPILL_DIRS) == before
     else:
         ck = spark.sparkContext.getCheckpointDir()
-        out = cut(spark.range(5), reliable=True, via_parquet=True)
+        with _reliable(spark):
+            out = cut(spark.range(5), via_parquet=True)
         assert out.count() == 5
         assert _SPILL_DIRS[-1].removeprefix("file:").startswith(
             ck.removeprefix("file:")
@@ -202,12 +215,9 @@ def test_session_conf_runs_queries_reliably_with_identical_values(spark, ckdir):
         df = REGISTRY[n].spark(spark, sf)
         baseline[n] = [tuple(r) for r in df.orderBy(*df.columns).collect()]
     before = _ck_files(ckdir)
-    spark.conf.set("spark.ipes.reliableCuts", "true")
-    try:
+    with _reliable(spark):
         for n in names:
             df = REGISTRY[n].spark(spark, sf)
             rows = [tuple(r) for r in df.orderBy(*df.columns).collect()]
             assert rows == baseline[n], n
-        assert _ck_files(ckdir) > before  # the cuts really checkpointed
-    finally:
-        spark.conf.unset("spark.ipes.reliableCuts")
+    assert _ck_files(ckdir) > before  # the cuts really checkpointed
