@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ipes_data_pipeline_spark.operators.util import sub_salt
+
 
 def _keyed(
     df: DataFrame,
@@ -45,19 +47,7 @@ def _keyed(
         F.col(name_col).alias("name"),
         block_expr.alias("blk"),
     )
-    if block_cap is None:
-        return keyed.withColumn("sub", F.lit(0))
-    # Sizes via a map-side-combined groupBy broadcast back — a window
-    # over blk would itself serialize on the skewed block (the lesson
-    # measured on the simhash valve, SCALING.md).
-    sizes = keyed.groupBy("blk").agg(F.count(F.lit(1)).alias("bsz"))
-    n_sub = F.greatest(F.lit(1), F.ceil(F.col("bsz") / block_cap))
-    salt = (
-        F.conv(F.substring(F.md5(F.col("node").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % n_sub
-    )
-    return keyed.join(F.broadcast(sizes), "blk").withColumn("sub", salt).drop("bsz")
+    return sub_salt(keyed, ["blk"], block_cap, "node")
 
 
 def candidate_pairs(
@@ -74,8 +64,8 @@ def candidate_pairs(
     blocks. At 100 TB the block key is the shuffle key — choose it so the
     largest block fits one task (salt or refine the key if skewed).
 
-    ``block_cap`` is the skew valve (the q42p/_cap_band_buckets pattern,
-    dedup_minhash.py): a block larger than the cap is deterministically
+    ``block_cap`` is the skew valve (``util.sub_salt``, the q42p
+    pattern): a block larger than the cap is deterministically
     sub-salted by ``md5(node) % ceil(bsz / cap)`` and pairs form only
     within a sub-block — in-block levenshtein work drops from O(b²) to
     O(b·cap) at the price of recall for pairs the salt separates, in

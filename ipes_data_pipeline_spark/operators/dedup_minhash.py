@@ -31,7 +31,12 @@ from ipes_data_pipeline_spark.functions.text import (
     token_hashes,
     tokens,
 )
-from ipes_data_pipeline_spark.operators.util import cut, spill_worthwhile, spread
+from ipes_data_pipeline_spark.operators.util import (
+    cut,
+    spill_worthwhile,
+    spread,
+    sub_salt,
+)
 
 
 def minhash_bands(
@@ -144,40 +149,6 @@ def minhash_bands(
     )
 
 
-def _cap_band_buckets(bands: DataFrame, bucket_cap: int | None) -> DataFrame:
-    """Attach a ``sub`` column sub-partitioning oversized band buckets.
-
-    The MinHash twin of the simhash skew valve: on boilerplate-heavy
-    corpora many documents share identical band keys and candidate
-    pairs grow quadratically in bucket size. Any bucket larger than
-    ``bucket_cap`` is deterministically sub-salted by a hash of the id
-    (≤ ~cap rows per sub-bucket); pairs later form only within a
-    sub-bucket, bounding per-task work at the price of recall in
-    exactly the capped buckets. ``bucket_cap=None`` ⇒ ``sub`` is a
-    constant and behavior is unchanged.
-
-    Bucket sizes come from a map-side-combined groupBy (NOT a window
-    partitioned by the band value, which would inherit the skew), and
-    the tiny size table broadcasts back.
-    """
-    if bucket_cap is None:
-        return bands.withColumn("sub", F.lit(0))
-    sizes = bands.groupBy("band_idx", "band_key").agg(
-        F.count(F.lit(1)).alias("bsz")
-    )
-    n_sub = F.greatest(F.lit(1), F.ceil(F.col("bsz") / bucket_cap))
-    salt = (
-        F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % n_sub
-    )
-    return (
-        bands.join(F.broadcast(sizes), ["band_idx", "band_key"])
-        .withColumn("sub", salt)
-        .drop("bsz")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -195,16 +166,16 @@ def minhash_lsh_pairs(
     The band join shuffles on (band_idx, band_key) — bucket-local work
     only. Callers typically refine with exact Jaccard on the candidates.
     ``hash_fn`` / ``bucket_cap``: see :func:`minhash_bands` /
-    :func:`_cap_band_buckets` (production default xxhash64; oracle
-    queries pin md5; the cap — ON by default at 256 — bounds quadratic
-    buckets on boilerplate-heavy corpora; pass ``None`` for lossless
-    blocking).
+    :func:`~ipes_data_pipeline_spark.operators.util.sub_salt`
+    (production default xxhash64; oracle queries pin md5; the cap — ON
+    by default at 256 — bounds quadratic buckets on boilerplate-heavy
+    corpora; pass ``None`` for lossless blocking).
     """
     # Eager checkpoint: `bands` sits on BOTH sides of the self-join, and
     # without materialization the hash-heavy signature pipeline executes
     # twice (once per alias). The band table is tiny (n_docs × n_bands
     # short rows) — always worth pinning. With a bucket_cap the RAW
-    # bands are pinned FIRST: _cap_band_buckets references its input
+    # bands are pinned FIRST: sub_salt references its input
     # twice (sizes aggregate + join), and capping an un-materialized
     # plan would run tokenize+shingle+hash twice — exactly the cost
     # this checkpoint exists to avoid.
@@ -222,7 +193,7 @@ def minhash_lsh_pairs(
     )
     if bucket_cap is not None:
         raw = cut(raw, via_parquet=spill)
-    bands = _cap_band_buckets(raw, bucket_cap)
+    bands = sub_salt(raw, ["band_idx", "band_key"], bucket_cap, "id")
     if materialize:
         bands = cut(bands, via_parquet=spill)
     # materialize=False relies on exchange reuse instead: the signature
@@ -296,15 +267,17 @@ def minhash_lsh_pairs_delta(
             corpus_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
         )
         if bucket_cap is not None:
-            # same rule as the batch form: _cap_band_buckets reads the
+            # same rule as the batch form: sub_salt reads the
             # union twice (sizes + join) — pin the hash-heavy corpus
             # lineage before capping, or it tokenizes twice
             corpus_bands = cut(corpus_bands, via_parquet=spill_corpus)
-    others = _cap_band_buckets(
+    others = sub_salt(
         corpus_bands.withColumn("is_new", F.lit(False)).unionByName(
             new_bands.withColumn("is_new", F.lit(True))
         ),
+        ["band_idx", "band_key"],
         bucket_cap,
+        "id",
     )
     if bucket_cap is None:
         probe = new_bands.withColumn("sub", F.lit(0))
@@ -548,33 +521,11 @@ def simhash_neardup_pairs(
             )
         ).alias("b"),
     ).select("id", *sim_cols, F.col("b.band_idx"), F.col("b.band_bits"))
+    bands = sub_salt(bands, ["band_idx", "band_bits"], bucket_cap, "id")
     if bucket_cap is not None:
-        # Bucket sizes via groupBy, NOT a window: a window partitioned
-        # by the band value inherits the very skew being mitigated (the
-        # giant bucket's window computes on one task), while groupBy's
-        # map-side combine reduces per-partition before the exchange —
-        # the shuffle carries one row per distinct band value. The tiny
-        # size table broadcasts back; bands themselves never shuffle
-        # before the (salted, now-balanced) pair join.
-        sizes = bands.groupBy("band_idx", "band_bits").agg(
-            F.count(F.lit(1)).alias("bsz")
-        )
-        n_sub = F.greatest(F.lit(1), F.ceil(F.col("bsz") / bucket_cap))
-        salt = (
-            F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % n_sub
-        )
-        bands = (
-            bands.join(F.broadcast(sizes), ["band_idx", "band_bits"])
-            .withColumn("sub", salt)
-            .drop("bsz")
-            # pin: the salted band table sits on BOTH sides of the
-            # self-join — materialize once instead of per alias.
-            .transform(cut)
-        )
-    else:
-        bands = bands.withColumn("sub", F.lit(0))
+        # pin: the salted band table sits on BOTH sides of the
+        # self-join — materialize once instead of per alias.
+        bands = cut(bands)
     a, b = bands.alias("a"), bands.alias("b")
     hamming = sum(
         F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}")))

@@ -1,12 +1,38 @@
-"""Similarity search over embedding columns.
+"""Similarity search and embedding-pair operators.
 
-- :func:`ann_topk_bruteforce` — exact cosine top-k against one query
-  vector. One scan + TakeOrderedAndProject; the correctness baseline.
-- :func:`cosine_topk_pairs_lsh` — sign-LSH bucketed pair generation +
-  exact refine; the scale path (shuffle key = bucket, no cross join).
-- :func:`ann_topk_ivf` — IVF-style: assign vectors to the nearest of k
-  deterministic centroid vectors (bucketing), probe only the query's
-  cells. Demonstrates the partition-pruned ANN shape on the same API.
+Exact scoring:
+
+- :func:`ann_topk_bruteforce` — cosine top-k against one query vector;
+  one scan + TakeOrderedAndProject, the correctness baseline.
+- :func:`knn_graph` — exact k-NN graph; the corpus is collected,
+  normalized and broadcast, the query side streams through one numpy
+  matmul per Arrow batch.
+- :func:`ann_topk_batch` — exact top-k for a set of queries; the query
+  matrix is broadcast and the corpus streams.
+
+Sign-bucket and cell pair family — candidates form only inside a
+sign-LSH bucket (:func:`auto_plane_count` sizes the plane count) or a
+Lloyd cell, and every operator scores one bucket per Arrow task through
+the one in-order Gram fold :func:`_cos_blocks`:
+
+- :func:`knn_graph_bucketed` — approximate k-NN graph (top-k per row);
+- :func:`cosine_topk_pairs_lsh` — the k most similar pairs overall;
+- :func:`cosine_pairs_bucketed` — every pair at or above a threshold;
+- :func:`semdedup` — SemDeDup's per-cell first dominator;
+- :func:`mine_triplets` — batch-hard positive and negative per anchor.
+
+Indexed ANN gears:
+
+- :func:`ann_topk_ivf` — flat IVF whose cells are sign buckets;
+- :func:`ann_topk_ivf_kmeans_lloyd` — flat IVF over deterministic Lloyd
+  cells;
+- :func:`ivfpq_topk` — product quantization, optionally behind an IVF
+  coarse stage;
+- :func:`sq8_topk` — 8-bit scalar quantization;
+- :func:`binary_sign_ann` — one sign bit per dimension, Hamming scan
+  plus exact rerank;
+- :func:`mmr_rerank` — maximal-marginal-relevance re-rank of cosine
+  candidates.
 """
 
 from __future__ import annotations
@@ -15,8 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ipes_data_pipeline_spark import conf
-from ipes_data_pipeline_spark.functions.vectors import cosine, dot, norm, sign_bucket
-from ipes_data_pipeline_spark.operators.util import cut, local_frame
+from ipes_data_pipeline_spark.functions.vectors import cosine, norm, sign_bucket
+from ipes_data_pipeline_spark.operators.util import cut, local_frame, sub_salt
 
 
 def ann_topk_bruteforce(
@@ -49,8 +75,8 @@ def knn_graph(
     corpus side is collected once, L2-normalized into one float64
     matrix, and broadcast to every executor — the same memory contract
     as a broadcast hash join (corpus fits per-executor; when it does
-    not, shard the corpus by IVF cell / LSH bucket and union per-shard
-    graphs — see :func:`ann_topk_ivf` / :func:`cosine_topk_pairs_lsh`).
+    not, shard the corpus by sign-LSH bucket — see
+    :func:`knn_graph_bucketed`).
     The query side streams through ``mapInPandas`` in Arrow batches:
     one numpy matmul scores the whole batch against the corpus
     (vectorized — orders of magnitude over a per-pair fold),
@@ -202,7 +228,7 @@ def ann_topk_batch(
     it can never enter the global top-k.
 
     Determinism (q168 value-check): dots accumulate per-dimension IN
-    ORDER (:func:`_gram_blocks`' fold — bit-identical to the oracle's
+    ORDER (:func:`_cos_blocks`' fold — bit-identical to the oracle's
     ``list_reduce``), norms via :func:`_bucket_norms` (same fold as
     ``sqrt(dot(v,v))``), ranks compare RAW doubles, ties break on
     ascending corpus id, only the emitted cos_sim is rounded.
@@ -248,6 +274,7 @@ def ann_topk_batch(
     if len(q_ids) == 0:
         return local_frame(df.sparkSession, [], final_schema)
     bc = df.sparkSession.sparkContext.broadcast((q_ids, Qm, qn))
+    chunk_cells = _GRAM_CHUNK_CELLS  # closure-captured (worker re-imports)
 
     def score(batches):
         import pandas as pd
@@ -283,13 +310,11 @@ def ann_topk_batch(
                 c_ids, V, vn = c_ids[live], V[live], vn[live]
             if len(c_ids) == 0:
                 continue
-            # per-dimension in-order fold (the _gram_blocks rule);
-            # block is |batch| x |queries| — queries are few, so one
-            # chunk is far under _GRAM_CHUNK_CELLS
-            block = np.zeros((len(c_ids), len(ids_q)))
-            for d in range(V.shape[1]):
-                block += np.outer(V[:, d], Q[:, d])
-            cos = block / np.outer(vn, nq_)
+            # |batch| x |queries| cosines; queries are few, so this is
+            # one block unless the batch is huge
+            cos = np.concatenate(
+                [c for _, _, c in _cos_blocks(V, Q, vn, nq_, chunk_cells)]
+            )
             for j in range(len(ids_q)):
                 col = cos[:, j]
                 keep = c_ids != ids_q[j]  # self-pair drops
@@ -366,13 +391,97 @@ def auto_plane_count(n: int, target_bucket: int = 256) -> int:
     return min(len(_AUTO_PLANES), max(4, math.ceil(math.log2(n / float(target_bucket)))))
 
 
+#: row-block budget of :func:`_cos_blocks`: a block is chunk × |bucket|
+#: doubles, capped at 2^25 cells (256 MB) so a hot bucket bounds task
+#: memory instead of allocating |bucket|² at once
+_GRAM_CHUNK_CELLS = 1 << 25
+
+
+def _bucket_norms(mat):
+    """Per-vector L2 norms with the same per-dimension accumulation
+    order as ``dot(v, v)`` (and the Gram diagonal)."""
+    import numpy as np
+
+    nrm2 = np.zeros(mat.shape[0])
+    for d in range(mat.shape[1]):
+        nrm2 += mat[:, d] * mat[:, d]
+    return np.sqrt(nrm2)
+
+
+def _cos_blocks(P, C, p_nrm, c_nrm, chunk_cells):
+    """Yield ``(a, b, cos)``: row blocks of the ``P[a:b] × C`` cosine
+    matrix — the one scoring kernel of the bucketed pair family.
+
+    Dots accumulate per dimension IN ORDER, ``block += outer(P[:, d],
+    C[:, d])``: the exact IEEE fold of :func:`dot`'s ``zip_with`` +
+    ``aggregate`` (and of the SQL oracles' ``list_reduce``), vectorized
+    across pairs, so values stay bit-identical cross-engine while
+    running ~100× faster than an interpreted per-pair fold. The divisor
+    is ``p_nrm[i] · c_nrm[j]`` (:func:`_bucket_norms`, the fold of
+    ``sqrt(dot(v, v))``); a zero-norm pair is 0/0 = NaN, where Spark's
+    division yields NULL. Products commute, so over ``C = P`` a row
+    block holds the same bits as the matching column block (the Gram is
+    exactly symmetric). A block holds at most ``chunk_cells`` cells —
+    a hot bucket costs more blocks, never more memory; callers capture
+    ``_GRAM_CHUNK_CELLS`` on the driver, because workers re-import this
+    module and would not see a test's override.
+    """
+    import numpy as np
+
+    n_c = C.shape[0]
+    step = max(1, chunk_cells // max(n_c, 1))
+    for a in range(0, P.shape[0], step):
+        b = min(a + step, P.shape[0])
+        block = np.zeros((b - a, n_c))
+        for d in range(P.shape[1]):
+            block += np.outer(P[a:b, d], C[:, d])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = block / np.outer(p_nrm[a:b], c_nrm)
+        yield a, b, cos
+
+
+def _by_id(pdf):
+    """``(order, ids, V)``: one bucket's rows in ascending-id order (so
+    a first-hit argmax or a stable sort breaks ties toward the lower
+    id) and its ``v`` column as a float64 matrix. A NULL vector becomes
+    a zero row: it scores NaN against every row, as Spark's NULL dot
+    does."""
+    import numpy as np
+
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    vs = pdf["v"].to_numpy()[order]
+    dim = max((len(v) for v in vs if v is not None), default=0)
+    V = np.stack([np.zeros(dim) if v is None else v for v in vs])
+    return order, ids[order], V.astype(np.float64)
+
+
+def _sign_keyed(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dims: tuple[int, ...] | None,
+    target_bucket: int = 256,
+) -> DataFrame:
+    """``(id, v: array<double>, bkt)``: the keying step of the sign-bucket
+    operators. ``dims=None`` takes the first :func:`auto_plane_count`
+    planes of ``_AUTO_PLANES`` (one count job); the count only picks a
+    PLAN, the way AQE sizes shuffles at runtime."""
+    if dims is None:
+        dims = _AUTO_PLANES[: auto_plane_count(df.count(), target_bucket)]
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        sign_bucket(F.col(vec_col), dims).alias("bkt"),
+    )
+
+
 def knn_graph_bucketed(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     k: int = 5,
     dims: tuple[int, ...] | None = (1, 9, 17, 25),
-    multi_probe: bool = False,
     target_bucket: int = 256,
 ) -> DataFrame:
     """Approximate k-NN graph with a sign-LSH-sharded corpus — the
@@ -380,18 +489,17 @@ def knn_graph_bucketed(
     per-executor.
 
     Candidates form only inside a bucket, so the shuffle key is the
-    bucket id and each task scores one bucket's candidates — corpus
-    memory per task is |bucket|, not |corpus|. Recall is traded for
-    that bound (neighbors straddling a sign plane are missed).
-    ``multi_probe=True`` is the recall lever: the QUERY side also
-    probes every bucket at hamming distance 1 (one sign flipped), so a
-    neighbor straddling a single plane is found — candidates grow
-    ~(1+len(dims))×, per-task memory is still one bucket. The corpus
-    index itself is untouched (flips happen probe-side only), matching
-    how multi-probe LSH avoids replicating the stored index.
-    Deterministic either way: same bucketing + fold order in any
-    engine, so unlike most ANN indexes the single-probe form carries a
-    value-level SQL oracle (q118).
+    bucket id and each task scores one bucket through
+    :func:`_cos_blocks` — corpus memory per task is |bucket|, not
+    |corpus|. Recall is traded for that bound (neighbors straddling a
+    sign plane are missed). Each task pre-reduces to k candidates per
+    row with Spark's ordering (NaN-first desc cos, asc neighbor id), so
+    the shuffle carries ≤ k rows per row, not the pair set, and the
+    final window's verdicts match a per-pair JVM join bit for bit —
+    which is why this approximate index still carries a value-level
+    SQL oracle (q118). The join form it replaced paid an interpreted
+    fold per pair: 136 s at 20k vectors in 16 buckets, 4× slower than
+    brute force.
 
     ``dims=None`` (the production setting, q118a) picks the plane count
     from the corpus: P = :func:`auto_plane_count` planes taken as a
@@ -399,108 +507,28 @@ def knn_graph_bucketed(
     sf10 failure mode — 16 buckets over 200k vectors put ~12.5k rows
     per bucket and the in-bucket Gram grew exactly N²/16 (149× wall for
     10× rows, BENCH_sf10.json); adaptive P holds bucket size at
-    ~target_bucket so total pair work is ~N·target_bucket — linear. The
-    count() here is one cheap metadata-bound job and its value only
-    picks a PLAN, mirroring how AQE sizes shuffles at runtime.
+    ~target_bucket so total pair work is ~N·target_bucket — linear.
     """
-    if dims is None:
-        dims = _AUTO_PLANES[: auto_plane_count(df.count(), target_bucket)]
-    keyed = cut(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            sign_bucket(F.col(vec_col), dims).alias("bkt"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
-    )
-    if multi_probe:
-        nbits = len(dims)
-        flips = [F.col("bkt")] + [
-            F.concat(
-                F.substring("bkt", 1, i),
-                F.when(
-                    F.substring("bkt", i + 1, 1) == "1", F.lit("0")
-                ).otherwise(F.lit("1")),
-                F.substring("bkt", i + 2, nbits - i - 1),
-            )
-            for i in range(nbits)
-        ]
-    # Round-5 rework: score each bucket in ONE Arrow task (numpy Gram,
-    # probe-chunked) instead of a per-pair JVM join. The join form paid
-    # an INTERPRETED zip_with+aggregate fold per candidate pair — at 10×
-    # the fixture corpus (20k vecs, 16 buckets ⇒ 25M in-bucket pairs)
-    # that was 136 s, 4× slower than the brute-force baseline it exists
-    # to replace (scripts: sf1 scaling bench, round 5). The kernel
-    # accumulates per-dimension in order (the exact IEEE fold of dot())
-    # and pre-reduces to k candidates per probe per bucket with Spark's
-    # ordering semantics (NaN-first desc cos, asc neighbor id), so the
-    # emitted values and the final window's verdicts are bit-identical
-    # to the join form — the q118 SQL oracle is unchanged. Per-task
-    # memory: chunk × |bucket| doubles (see _GRAM_CHUNK_CELLS); the
-    # shuffle carries ≤ k rows per probe per bucket, not the pair set.
-    # (At larger corpora ALSO grow `dims` — bucket count must scale
-    # with |corpus| / target_bucket_size or in-bucket Gram work grows
-    # quadratically, 136 s → this kernel only flattens the constant.)
     import numpy as np
     import pandas as pd
 
-    corpus = keyed.select("id", "v", "nrm", "bkt").withColumn(
-        "is_corpus", F.lit(True)
-    )
-    if multi_probe:
-        # home-bucket rows serve both roles; flipped copies (flips[0] is
-        # the identity — skip it) probe that bucket without joining it
-        extra = keyed.select(
-            "id", "v", "nrm", F.explode(F.array(*flips[1:])).alias("bkt")
-        ).withColumn("is_corpus", F.lit(False))
-        union = corpus.unionByName(extra)
-    else:
-        union = corpus
-
-    kk = k
     chunk_cells = _GRAM_CHUNK_CELLS
 
     def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        is_c = pdf["is_corpus"].to_numpy()
-        c_ids = pdf["id"].to_numpy(dtype=np.int64)[is_c]
-        if len(c_ids) == 0:
-            return pd.DataFrame(
-                {"id": pd.array([], dtype="int64"),
-                 "neighbor_id": pd.array([], dtype="int64"),
-                 "cos_sim": pd.array([], dtype="float64")}
-            )
-        # ascending-id corpus order makes the stable top-k sort break
-        # cosine ties toward the LOWER neighbor id, like the window
-        c_ord = np.argsort(c_ids, kind="stable")
-        c_ids = c_ids[c_ord]
-        C = np.stack(pdf["v"].to_numpy()[is_c][c_ord]).astype(np.float64)
-        c_nrm = pdf["nrm"].to_numpy(dtype=np.float64)[is_c][c_ord]
-        p_ids_all = pdf["id"].to_numpy(dtype=np.int64)
-        P_all = pdf["v"].to_numpy()
-        p_nrm_all = pdf["nrm"].to_numpy(dtype=np.float64)
+        _, ids, V = _by_id(pdf)
+        nrm = _bucket_norms(V)
         out_id, out_nb, out_cos = [], [], []
-        n_c = len(c_ids)
-        chunk = max(1, chunk_cells // max(n_c, 1))
-        for a0 in range(0, len(p_ids_all), chunk):
-            b0 = min(a0 + chunk, len(p_ids_all))
-            p_ids = p_ids_all[a0:b0]
-            P = np.stack(P_all[a0:b0]).astype(np.float64)
-            # per-dimension accumulation IN ORDER — dot()'s exact fold
-            block = np.zeros((len(p_ids), n_c))
-            for d in range(P.shape[1]):
-                block += np.outer(P[:, d], C[:, d])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = block / np.outer(p_nrm_all[a0:b0], c_nrm)
+        for a, b, cos in _cos_blocks(V, V, nrm, nrm, chunk_cells):
             # Spark sorts NaN ABOVE every double under desc — rank NaN
-            # as +inf; the emitted cos stays NaN
+            # as +inf; ascending-id columns make the stable sort break
+            # cosine ties toward the LOWER neighbor id, like the window
             rank = np.where(np.isnan(cos), np.inf, cos)
-            rank[p_ids[:, None] == c_ids[None, :]] = -np.inf  # self
-            top = np.argsort(-rank, axis=1, kind="stable")[:, :kk]
-            rows = np.arange(len(p_ids))[:, None]
-            sel_rank = rank[rows, top]
-            valid = sel_rank > -np.inf
-            out_id.append(np.repeat(p_ids, valid.sum(axis=1)))
-            out_nb.append(c_ids[top][valid])
+            rank[ids[a:b, None] == ids[None, :]] = -np.inf  # self
+            top = np.argsort(-rank, axis=1, kind="stable")[:, :k]
+            rows = np.arange(b - a)[:, None]
+            valid = rank[rows, top] > -np.inf
+            out_id.append(np.repeat(ids[a:b], valid.sum(axis=1)))
+            out_nb.append(ids[top][valid])
             out_cos.append(cos[rows, top][valid])
         return pd.DataFrame(
             {
@@ -510,13 +538,11 @@ def knn_graph_bucketed(
             }
         )
 
-    candidates = union.groupBy("bkt").applyInPandas(
-        bucket_topk, "id long, neighbor_id long, cos_sim double"
+    candidates = (
+        _sign_keyed(df, id_col, vec_col, dims, target_bucket)
+        .groupBy("bkt")
+        .applyInPandas(bucket_topk, "id long, neighbor_id long, cos_sim double")
     )
-    if multi_probe:
-        # a (probe, neighbor) pair can surface from several probed
-        # buckets with the identical cosine — keep one
-        candidates = candidates.dropDuplicates(["id", "neighbor_id"])
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy("id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -534,69 +560,55 @@ def cosine_topk_pairs_lsh(
     dims: tuple[int, ...] = (1, 9, 17, 25),
     k: int = 50,
 ) -> DataFrame:
-    """Top-k most-similar pairs among sign-LSH bucket candidates."""
-    # materialize: referenced on both sides of the self-join (avoids
-    # recomputing the scan + bucket per alias). Norms precompute per
-    # VECTOR, not per pair — higher-order array folds don't codegen, so
-    # paying |V| folds instead of 2|pairs| is the dominant win here.
-    keyed = cut(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            sign_bucket(F.col(vec_col), dims).alias("bkt"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
-    )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = a.join(
-        b, on=[F.col("a.bkt") == F.col("b.bkt"), F.col("a.id") < F.col("b.id")]
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        (dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))).alias(
-            "cos_sim"
-        ),
+    """Top-k most-similar pairs ``(id_a, id_b, cos_sim)``, ``id_a <
+    id_b``, among sign-LSH bucket candidates, ranked by ``cos_sim``
+    DESC, then ``id_a``, ``id_b``.
+
+    One ``applyInPandas`` task per bucket scores its pairs through
+    :func:`_cos_blocks` and keeps only its own top k — lossless, since
+    a dropped pair has k better pairs in its own bucket — and one global
+    ``orderBy(...).limit(k)`` merges the buckets. The values are the
+    bits of the per-pair JVM fold ``dot(a, b) / (nrm_a · nrm_b)`` (same
+    fold order, same norm product). A pair with a zero-norm or NULL
+    vector is NULL, as Spark's division by zero is, and ranks after
+    every value.
+    """
+    import numpy as np
+    import pandas as pd
+
+    chunk_cells = _GRAM_CHUNK_CELLS
+
+    def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        _, ids, V = _by_id(pdf)
+        nrm = _bucket_norms(V)
+        top_a, top_b, top_c, top_key = ids[:0], ids[:0], np.zeros(0), np.zeros(0)
+        for a, b, cos in _cos_blocks(V, V, nrm, nrm, chunk_cells):
+            # ascending key = Spark's DESC order with NULL (NaN) last;
+            # NaN key = not a pair (needs id_a < id_b)
+            key = np.where(np.isnan(cos), np.inf, -cos)
+            key[ids[a:b, None] >= ids[None, :]] = np.nan
+            if key.size > k:
+                # the k-th best key bounds the survivors (ties kept);
+                # np.partition sorts NaN last, so a NaN k-th key means
+                # the block holds fewer than k pairs
+                kth = np.partition(key.ravel(), k - 1)[k - 1]
+                if not np.isnan(kth):
+                    key[key > kth] = np.nan
+            ii, jj = np.nonzero(~np.isnan(key))
+            id_a = np.concatenate([top_a, ids[a + ii]])
+            id_b = np.concatenate([top_b, ids[jj]])
+            c = np.concatenate([top_c, cos[ii, jj]])
+            kk = np.concatenate([top_key, key[ii, jj]])
+            sel = np.lexsort((id_b, id_a, kk))[:k]
+            top_a, top_b, top_c, top_key = id_a[sel], id_b[sel], c[sel], kk[sel]
+        return pd.DataFrame({"id_a": top_a, "id_b": top_b, "cos_sim": top_c})
+
+    pairs = (
+        _sign_keyed(df, id_col, vec_col, dims)
+        .groupBy("bkt")
+        .applyInPandas(bucket_topk, "id_a long, id_b long, cos_sim double")
     )
     return pairs.orderBy(F.desc("cos_sim"), F.asc("id_a"), F.asc("id_b")).limit(k)
-
-
-#: column-chunk budget for the per-bucket Gram kernels: blocks are
-#: |bucket| × chunk doubles, capped at 2^25 cells (256 MB) so a hot
-#: bucket bounds task memory instead of allocating |bucket|² at once
-_GRAM_CHUNK_CELLS = 1 << 25
-
-
-def _bucket_norms(mat):
-    """Per-vector L2 norms with the same per-dimension accumulation
-    order as ``dot(v, v)`` (and the Gram diagonal)."""
-    import numpy as np
-
-    nrm2 = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        nrm2 += mat[:, d] * mat[:, d]
-    return np.sqrt(nrm2)
-
-
-def _gram_blocks(mat, chunk_cells=None):
-    """Yield ``(a, b, block)`` column blocks of the Gram matrix,
-    accumulated per-dimension IN ORDER (the exact IEEE fold of
-    ``zip_with`` + ``aggregate``, vectorized across pairs). Peak memory
-    is |rows| × chunk ≤ ``chunk_cells`` doubles — a hot bucket costs
-    more passes, never more memory. (``chunk_cells`` defaults to the
-    module's ``_GRAM_CHUNK_CELLS``, read at call time so tests can
-    shrink it.)"""
-    import numpy as np
-
-    if chunk_cells is None:
-        chunk_cells = _GRAM_CHUNK_CELLS
-    n, dim = mat.shape
-    chunk = max(1, chunk_cells // max(n, 1))
-    for a in range(0, n, chunk):
-        b = min(a + chunk, n)
-        block = np.zeros((n, b - a))
-        for d in range(dim):
-            block += np.outer(mat[:, d], mat[a:b, d])
-        yield a, b, block
 
 
 def cosine_pairs_bucketed(
@@ -610,20 +622,14 @@ def cosine_pairs_bucketed(
     """All same-sign-bucket pairs with cosine ≥ ``threshold``:
     ``(id_a, id_b, cos_sim)`` with ``id_a < id_b``.
 
-    The blocked embedding-pair family (q45/q133's building block) as
-    ONE ``applyInPandas`` task per bucket: per-bucket pairwise cosines
-    come from column-chunked, per-dimension-accumulated Gram blocks
-    (:func:`_gram_blocks`) — the exact IEEE fold order of ``dot()``'s
-    ``zip_with`` + ``aggregate`` (and the SQL oracle's ``list_reduce``),
-    vectorized across pairs — so the output value-checks cross-engine
-    while running ~100× faster than an interpreted per-pair fold.
-    Shuffle key = bucket; per-task memory = |bucket| × chunk (capped,
-    see ``_GRAM_CHUNK_CELLS``) — qualifying PAIRS stream out per chunk,
-    so only the ≥ threshold survivors are ever held.
+    q133's building block as ONE ``applyInPandas`` task per bucket
+    scoring through :func:`_cos_blocks`, so the output value-checks
+    cross-engine. Shuffle key = bucket; per-task memory = one capped
+    block (``_GRAM_CHUNK_CELLS``) — qualifying PAIRS stream out per
+    block, so only the ≥ threshold survivors are ever held.
 
     ``dims=None`` picks the plane count from the corpus exactly like
-    :func:`knn_graph_bucketed` (P = :func:`auto_plane_count`, planes a
-    prefix of ``_AUTO_PLANES``): fixed plane counts are the measured
+    :func:`knn_graph_bucketed`: fixed plane counts are the measured
     sf10 failure mode for this family too — 16 buckets over 200k
     vectors made q133's embedding stage the round-6 scaling campaign's
     heaviest remaining quadratic. At small N (P clamps to 4) auto mode
@@ -632,53 +638,34 @@ def cosine_pairs_bucketed(
     import numpy as np
     import pandas as pd
 
-    if dims is None:
-        dims = _AUTO_PLANES[: auto_plane_count(df.count(), target_bucket)]
-
-    keyed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        sign_bucket(F.col(vec_col), dims).alias("bkt"),
-    )
-    # captured DRIVER-side: the udf body runs in worker processes that
-    # re-import this module, so the closure (not the worker's module
-    # global) must carry the chunk budget for tests to shrink it
     chunk_cells = _GRAM_CHUNK_CELLS
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        n = mat.shape[0]
+        _, ids, mat = _by_id(pdf)
         nrm = _bucket_norms(mat)
         out_a, out_b, out_c = [], [], []
-        rows = np.arange(n)[:, None]
-        for a, b, block in _gram_blocks(mat, chunk_cells):
-            # zero-norm vectors: 0/0 → NaN, and NaN >= threshold is
-            # False — the same exclusion the SQL fold produces
-            # (NULL-div in Spark, NaN in DuckDB)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = block / np.outer(nrm, nrm[a:b])
-            with np.errstate(invalid="ignore"):
-                hit = cos >= threshold
-            hit &= rows < np.arange(a, b)[None, :]  # strict i < j only
+        for a, b, cos in _cos_blocks(mat, mat, nrm, nrm, chunk_cells):
+            # zero-norm vectors: NaN >= threshold is False — the same
+            # exclusion the SQL fold produces (NULL-div in Spark, NaN
+            # in DuckDB); strict i < j only
+            hit = cos >= threshold
+            hit &= np.arange(a, b)[:, None] < np.arange(len(ids))[None, :]
             ii, jj = np.nonzero(hit)
-            out_a.append(ids[ii])
-            out_b.append(ids[a + jj])
+            out_a.append(ids[a + ii])
+            out_b.append(ids[jj])
             out_c.append(cos[ii, jj])
         return pd.DataFrame(
             {
-                "id_a": np.concatenate(out_a) if out_a else ids[:0],
-                "id_b": np.concatenate(out_b) if out_b else ids[:0],
-                "cos_sim": np.concatenate(out_c)
-                if out_c
-                else np.zeros(0),
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cos_sim": np.concatenate(out_c),
             }
         )
 
-    return keyed.groupBy("bkt").applyInPandas(
-        pairs, "id_a long, id_b long, cos_sim double"
+    return (
+        _sign_keyed(df, id_col, vec_col, dims, target_bucket)
+        .groupBy("bkt")
+        .applyInPandas(pairs, "id_a long, id_b long, cos_sim double")
     )
 
 
@@ -1110,12 +1097,11 @@ def semdedup(
     ``applyInPandas`` task per cell, so candidate pairs are Σ|cell|²,
     never |n|², and ``n_cells`` is the lever that caps per-task work
     (the paper's √n-clusters regime). Inside a cell the pairwise
-    cosines are column-chunked per-dimension-accumulated Gram blocks in
-    numpy — the Arrow-batched form of the same left-to-right double
-    fold the SQL oracle runs (an interpreted per-pair ``aggregate``
-    fold was measured 100× slower at 250k pairs), so the verdicts stay
-    bit-identical cross-engine while task memory stays |cell| × chunk
-    (``_GRAM_CHUNK_CELLS``-capped), never |cell|².
+    cosines come from :func:`_cos_blocks` — the Arrow-batched form of
+    the same left-to-right double fold the SQL oracle runs (an
+    interpreted per-pair ``aggregate`` fold was measured 100× slower at
+    250k pairs), so the verdicts stay bit-identical cross-engine while
+    task memory stays one capped block, never |cell|².
 
     ``train_limit`` bounds Lloyd training to the smallest-id sample
     (see :func:`_lloyd_train`) — mandatory once ``n_cells``
@@ -1143,32 +1129,21 @@ def semdedup(
     chunk_cells = _GRAM_CHUNK_CELLS  # closure-captured (worker re-imports)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        n = mat.shape[0]
-        # norms + column-chunked Gram blocks, both accumulated
-        # per-dimension IN ORDER — the exact IEEE fold of dot()'s
-        # zip_with + aggregate; chunking bounds task memory at
-        # |cell| × chunk instead of |cell|² (see _GRAM_CHUNK_CELLS)
+        order, ids, mat = _by_id(pdf)
+        n = len(ids)
         nrm = _bucket_norms(mat)
         has = np.zeros(n, dtype=bool)
         first = np.zeros(n, dtype=np.int64)
-        rows = np.arange(n)[:, None]
-        for a, b, block in _gram_blocks(mat, chunk_cells):
-            # zero-norm vectors: 0/0 → NaN; NaN >= threshold is False,
-            # the same never-dominates verdict the SQL fold produces
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = block / np.outer(nrm, nrm[a:b])
-            # dominator[j] = smallest-id i < j with cos >= threshold;
-            # ids ascend with the row index, so it is the first
-            # qualifying row strictly above the diagonal
-            with np.errstate(invalid="ignore"):
-                hit = cos >= threshold
-            hit &= rows < np.arange(a, b)[None, :]
-            has[a:b] = hit.any(axis=0)
-            first[a:b] = hit.argmax(axis=0)  # first True row (0 if none)
+        for a, b, cos in _cos_blocks(mat, mat, nrm, nrm, chunk_cells):
+            # dominator[j] = smallest-id i < j with cos >= threshold; the
+            # Gram is symmetric and ids ascend with the index, so it is
+            # row j's first qualifying column left of the diagonal.
+            # Zero-norm vectors: NaN >= threshold is False, the same
+            # never-dominates verdict the SQL fold produces.
+            hit = cos >= threshold
+            hit &= np.arange(n)[None, :] < np.arange(a, b)[:, None]
+            has[a:b] = hit.any(axis=1)
+            first[a:b] = hit.argmax(axis=1)  # first True column (0 if none)
         dom = np.where(has, ids[first], 0)
         return pd.DataFrame(
             {
@@ -1845,16 +1820,14 @@ def mine_triplets(
     deterministic sub-batch). Every salt term is ANSI-SQL-expressible,
     so the q165 oracle parameterizes the SAME cap and the firing regime
     is value-checked in tests. Each (bucket, sub) group scores in ONE
-    Arrow task: a numpy Gram accumulated per-dimension IN ORDER (the
-    exact IEEE fold of :func:`dot` — :func:`knn_graph_bucketed`'s
-    kernel trick, so values stay bit-identical to the SQL oracle's
-    ``list_reduce``), hardest positive/negative reduced in-kernel to
+    Arrow task scoring through :func:`_cos_blocks` (values stay
+    bit-identical to the SQL oracle's ``list_reduce``), hardest positive/negative reduced in-kernel to
     ≤1 output row per anchor. The first cut formed pairs with a JVM
     self-join + per-pair ``cosine()`` fold + two windows: at sf10 that
     paid ~51M interpreted HOF folds — 289 s vs this kernel (the q162
     HOF lesson at pair cardinality). The shuffle carries each group's
-    vectors once (not the pair set), per-task memory is one chunk ×
-    group Gram block (``_GRAM_CHUNK_CELLS``), and the exchange out is
+    vectors once (not the pair set), per-task memory is one capped
+    block (``_GRAM_CHUNK_CELLS``), and the exchange out is
     one row per anchor. Mining is blocked-approximate by design
     (exactly like production batch-hard mining, which only sees its
     own batch): anchors whose group holds no same-label or no
@@ -1883,20 +1856,7 @@ def mine_triplets(
     # a DESC window while the kernel excludes it — filter before bucket
     # sizing so both engines see identical buckets (q165 oracle mirrors
     # this predicate in its e CTE).
-    e = e.where(F.col("nrm") > 0)
-    if bucket_cap is not None:
-        # sizes via map-side-combined groupBy broadcast back (a window
-        # over bkt would serialize on the skewed bucket — SCALING.md)
-        sizes = e.groupBy("bkt").agg(F.count(F.lit(1)).alias("bsz"))
-        n_sub = F.greatest(F.lit(1), F.ceil(F.col("bsz") / bucket_cap))
-        salt = (
-            F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % n_sub
-        )
-        e = e.join(F.broadcast(sizes), "bkt").withColumn("sub", salt).drop("bsz")
-    else:
-        e = e.withColumn("sub", F.lit(0))
+    e = sub_salt(e.where(F.col("nrm") > 0), ["bkt"], bucket_cap, "id")
     chunk_cells = _GRAM_CHUNK_CELLS
 
     def hardest(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1912,23 +1872,11 @@ def mine_triplets(
         )
         if n < 2:
             return empty
-        ids_raw = pdf["id"].to_numpy(dtype=np.int64)
-        ordr = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[ordr]
-        V = np.stack(pdf["v"].to_numpy()[ordr]).astype(np.float64)
+        ordr, ids, V = _by_id(pdf)
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)[ordr]
         labs = pdf["lab"].to_numpy()[ordr]
         out = []
-        chunk = max(1, chunk_cells // n)
-        for a0 in range(0, n, chunk):
-            b0 = min(a0 + chunk, n)
-            A = V[a0:b0]
-            # per-dimension accumulation IN ORDER — dot()'s exact fold
-            block = np.zeros((b0 - a0, n))
-            for d in range(V.shape[1]):
-                block += np.outer(A[:, d], V[:, d])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = block / np.outer(nrm[a0:b0], nrm)
+        for a0, b0, cos in _cos_blocks(V, V, nrm, nrm, chunk_cells):
             same = labs[a0:b0, None] == labs[None, :]
             selfm = ids[a0:b0, None] == ids[None, :]
             # hardest positive: ORDER BY sim ASC, id ASC over same-label

@@ -9,6 +9,7 @@ import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ipes_data_pipeline_spark import conf
@@ -233,3 +234,33 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def sub_salt(
+    df: DataFrame, keys: list[str], cap: int | None, id_col: str
+) -> DataFrame:
+    """Attach ``sub``: the one skew valve of the blocked pair operators.
+
+    A group of ``keys`` holding more than ``cap`` rows splits into
+    ``ceil(size / cap)`` sub-groups by ``md5(id)[:8] % n``, and pairs
+    then form only inside one sub-group: per-task pair work drops from
+    O(size²) to O(size·cap), at the price of recall in exactly the
+    capped groups. ``cap=None`` gives ``sub = 0`` everywhere. Every
+    term is ANSI-SQL-expressible, so an oracle can repeat the salt and
+    check the valve in its firing regime.
+
+    Group sizes come from a map-side-combined ``groupBy`` broadcast
+    back — a window partitioned by the keys would itself serialize on
+    the skewed group (measured on the simhash valve, SCALING.md), while
+    the ``groupBy`` shuffles one row per distinct key.
+    """
+    if cap is None:
+        return df.withColumn("sub", F.lit(0))
+    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsz"))
+    n_sub = F.greatest(F.lit(1), F.ceil(F.col("bsz") / cap))
+    salt = (
+        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+        .cast("long")
+        % n_sub
+    )
+    return df.join(F.broadcast(sizes), keys).withColumn("sub", salt).drop("bsz")

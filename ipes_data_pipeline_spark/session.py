@@ -79,6 +79,21 @@ def _initial_partitions(cpus: int, per_bytes: int) -> int:
     return max(cpus, min(1024, _dir_bytes(sf_dir) // per_bytes))
 
 
+def cpu_count() -> int:
+    """Cores the local session plans for: ``$SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on (what ``nproc`` prints). A
+    malformed value raises ``ValueError`` naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer core count, got {raw!r}"
+        ) from None
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to a session we did not necessarily create."""
     for k, v in _RUNTIME_CONFS.items():
@@ -86,10 +101,7 @@ def tune(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some builds
             pass
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:  # pragma: no cover - malformed harness env
-        cpus = 32
+    cpus = cpu_count()
     per = conf.get(spark, "initialPartitionsPerBytes")
     try:
         spark.conf.set(
@@ -99,12 +111,9 @@ def tune(spark: SparkSession) -> SparkSession:
     except Exception:  # pragma: no cover - conf may be static in some builds
         pass
     # Local mode: shuffle partitions ~ cores. On a real cluster AQE
-    # coalescing makes a higher initial number safe; 32 matches the
-    # local[32] test substrate and is a fine AQE starting point.
+    # coalescing makes a higher initial number safe.
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     except Exception:  # pragma: no cover
         pass
     return spark
@@ -115,13 +124,13 @@ def get_session(app_name: str = "ipes_data_pipeline_spark") -> SparkSession:
 
     On a real cluster the same confs apply; only master/memory change.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpu_count()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

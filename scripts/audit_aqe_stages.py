@@ -44,6 +44,9 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from ipes_data_pipeline_spark.session import cpu_count  # noqa: E402
 
 CONF_MODES = {
     # the session default (session.py _RUNTIME_CONFS)
@@ -74,9 +77,9 @@ CHILD = r"""
 import os, sys, time
 sys.path.insert(0, {root!r})
 from pyspark.sql import SparkSession
-from ipes_data_pipeline_spark.session import _RUNTIME_CONFS
+from ipes_data_pipeline_spark.session import _RUNTIME_CONFS, cpu_count
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+cpus = cpu_count()
 builder = (
     SparkSession.builder.master(f"local[{{cpus}}]")
     .appName("aqe-audit")
@@ -153,7 +156,7 @@ def parse_event_log(path: str) -> dict:
                 "Executor CPU Time", 0
             ) / 1e6  # ns -> ms
             task_n[sid] = task_n.get(sid, 0) + 1
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cpu_count()
     rows = []
     for sid, s in sorted(stages.items()):
         run_ms = task_run.get(sid, 0.0)

@@ -20,13 +20,14 @@ import duckdb
 
 from bench import HEADLINE
 from ipes_data_pipeline_spark.queries import REGISTRY, TABLES, load_all
+from ipes_data_pipeline_spark.session import cpu_count
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     load_all()
     con = duckdb.connect()
-    con.execute(f"SET threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads={cpu_count()}")
     for name in TABLES:
         # partial fixtures (e.g. the embeddings-only sf100 dir) register
         # only the tables present; queries touching absent ones error out

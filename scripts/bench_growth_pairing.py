@@ -37,9 +37,9 @@ CHILD = r"""
 import os, sys, time
 sys.path.insert(0, {root!r})
 from pyspark.sql import SparkSession
-from ipes_data_pipeline_spark.session import _RUNTIME_CONFS
+from ipes_data_pipeline_spark.session import _RUNTIME_CONFS, cpu_count
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+cpus = cpu_count()
 builder = (
     SparkSession.builder.master(f"local[{{cpus}}]")
     .appName("growth-pairing")

@@ -34,7 +34,7 @@ import duckdb
 
 from bench import HEADLINE
 from ipes_data_pipeline_spark.queries import REGISTRY, TABLES, load_all
-from ipes_data_pipeline_spark.session import get_session
+from ipes_data_pipeline_spark.session import cpu_count, get_session
 
 RUNS = 3
 DUCK_CAP_S = float(os.environ.get("SPARK_GRAFT_DUCK_QUERY_CAP", "180") or 0)
@@ -49,7 +49,7 @@ def main() -> None:
     spark = get_session("bench-pairing")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    con.execute(f"SET threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads={cpu_count()}")
     for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"

@@ -1,6 +1,6 @@
 """The ``spark.ipes.*`` conf table: every adaptive regime returns the
 rows of its default twin, and every malformed value fails loudly at the
-site that reads it."""
+site that reads it. Also the one reader of ``$SPARK_GRAFT_CPUS``."""
 
 from __future__ import annotations
 
@@ -140,3 +140,17 @@ def test_malformed_value_raises_at_read_site(spark, name, value):
             assert repr(value) in str(err.value)
     finally:
         spark.conf.unset(key)
+
+
+def test_cpu_count_unset_set_and_malformed(monkeypatch):
+    import os
+
+    from ipes_data_pipeline_spark.session import cpu_count
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert cpu_count() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert cpu_count() == 4
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "abc")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS.*'abc'"):
+        cpu_count()

@@ -326,36 +326,35 @@ def test_asof_join_numeric_epoch_timestamps(spark):
 
 
 def test_gram_chunking_is_value_identical(spark, monkeypatch):
-    """cosine_pairs_bucketed and semdedup must produce bit-identical
-    results when the Gram kernel is forced into many tiny column
-    chunks — chunking bounds memory, never changes values (the per-dim
-    accumulation order is per PAIR, independent of the chunk cut)."""
+    """Every operator scoring through the one Gram kernel must return
+    bit-identical rows when the kernel is forced into many tiny row
+    blocks — chunking bounds memory, never changes values (the
+    per-dim accumulation order is per PAIR, independent of the cut)."""
+    from pyspark.sql import functions as F
+
     from ipes_data_pipeline_spark.operators import similarity as S
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    full_pairs = sorted(
-        tuple(r)
-        for r in S.cosine_pairs_bucketed(
-            emb, "vec_id", "embedding", (1, 9, 17, 25), 0.3
-        ).collect()
-    )
-    full_sem = sorted(
-        tuple(r)
-        for r in S.semdedup(emb, "vec_id", "embedding", threshold=0.3).collect()
-    )
+    queries = emb.where(F.col("vec_id") % 7 == 0)
+
+    def run_all():
+        calls = [
+            S.cosine_pairs_bucketed(
+                emb, "vec_id", "embedding", (1, 9, 17, 25), 0.3
+            ),
+            S.semdedup(emb, "vec_id", "embedding", threshold=0.3),
+            S.cosine_topk_pairs_lsh(emb, "vec_id", "embedding", k=50),
+            S.knn_graph_bucketed(emb, "vec_id", "embedding", k=5),
+            S.mine_triplets(emb, "vec_id", "embedding", "label"),
+            S.ann_topk_batch(emb, "vec_id", "embedding", queries, "vec_id", k=5),
+        ]
+        return [sorted(tuple(r) for r in df.collect()) for df in calls]
+
+    full = run_all()
     monkeypatch.setattr(S, "_GRAM_CHUNK_CELLS", 64)  # force many chunks
-    chunked_pairs = sorted(
-        tuple(r)
-        for r in S.cosine_pairs_bucketed(
-            emb, "vec_id", "embedding", (1, 9, 17, 25), 0.3
-        ).collect()
-    )
-    chunked_sem = sorted(
-        tuple(r)
-        for r in S.semdedup(emb, "vec_id", "embedding", threshold=0.3).collect()
-    )
-    assert chunked_pairs == full_pairs
-    assert chunked_sem == full_sem
+    chunked = run_all()
+    assert all(full)  # every operator returned rows
+    assert chunked == full
 
 
 def test_snapshot_diff_classifies_with_null_safety(spark):

@@ -79,16 +79,6 @@ def test_pagerank_reliable_matches_local(spark, ckdir):
     assert _rows(local, "node") == _rows(reli, "node")
 
 
-def test_knn_bucketed_reliable_matches_local(spark, ckdir):
-    from ipes_data_pipeline_spark.operators.similarity import knn_graph_bucketed
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    local = knn_graph_bucketed(emb, "vec_id", "embedding", k=3)
-    with _reliable(spark):
-        reli = knn_graph_bucketed(emb, "vec_id", "embedding", k=3)
-    assert _rows(local, "id", "neighbor_id") == _rows(reli, "id", "neighbor_id")
-
-
 def _ck_files(ckdir):
     import os
 

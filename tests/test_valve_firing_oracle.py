@@ -46,7 +46,7 @@ DOCS = (
 
 def _capped_q42_pairs_sql(cap: int) -> str:
     """q42's md5 band construction + the SAME sub-salt the Spark valve
-    computes (_cap_band_buckets): n_sub = ceil(bsz / cap), salt =
+    computes (util.sub_salt): n_sub = ceil(bsz / cap), salt =
     first-8-hex of md5(id) mod n_sub, pairs require sub equality."""
     base = _q42_oracle().strip().removeprefix("WITH").rsplit("SELECT DISTINCT", 1)[0]
     salt = "('0x' || substr(md5(CAST(b.id AS VARCHAR)), 1, 8))::BIGINT"
