@@ -66,16 +66,18 @@ TABLE = {
         # A/B). 256 MiB ~ the sf1/sf10 boundary for the documents
         # corpus. Not yet verified at sf10 (OPTIMIZATION_r11 §10).
         Entry("spark.ipes.spillMinInputBytes", "bytes", 256 << 20, "bytes"),
-        # Lower threshold for PAIR-PROPORTIONAL intermediates (the LSH
-        # edge sets util.pin_pairs pins before a propagation loop),
-        # compared with the SOURCE corpus estimate: edges grow with
-        # in-bucket pair counts, 1-2 orders of magnitude past the input
-        # (q39's blocked levenshtein graph: 4.3M edges from 15k rows at
-        # sf0.1, 213M at sf10), so the store must flip well before the
-        # input itself is spill-sized. sf10's +182 s localCheckpoint
-        # regime sits far above 8 MiB, sf0.1/sf1 (where the spill's
-        # extra write job is pure overhead) below. Not yet verified at
-        # sf10 (OPTIMIZATION_r11 §10).
+        # Lower threshold for PAIR-PROPORTIONAL intermediates, compared
+        # with the SOURCE corpus estimate: edges grow with in-bucket
+        # pair counts, 1-2 orders of magnitude past the input, so the
+        # store must flip well before the input itself is spill-sized.
+        # Its remaining users are the LSH edge sets util.pin_pairs pins
+        # before a propagation loop. The figures are historical: they
+        # were measured on q39's blocked levenshtein graph (4.3M edges
+        # from 15k rows at sf0.1, 213M at sf10), which fuzzy dedup no
+        # longer builds. sf10's +182 s localCheckpoint regime sits far
+        # above 8 MiB, sf0.1/sf1 (where the spill's extra write job is
+        # pure overhead) below. Not yet verified at sf10
+        # (OPTIMIZATION_r11 §10).
         Entry("spark.ipes.edgeSpillMinInputBytes", "bytes", 8 << 20, "bytes"),
         # Read once per call, by similarity._lloyd_train (the one Lloyd
         # trainer of q72, semdedup and ivfpq_topk). Training sets whose

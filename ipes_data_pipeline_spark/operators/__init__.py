@@ -7,7 +7,6 @@ from ipes_data_pipeline_spark.operators.classify import (  # noqa: F401
     is_individual,
 )
 from ipes_data_pipeline_spark.operators.dedup_fuzzy import (  # noqa: F401
-    candidate_pairs,
     dedupe_fuzzy,
     min_label_components,
 )

@@ -3,20 +3,24 @@
 The reference implements fuzzy dedup as an O(n²) all-pairs Python loop with
 order-dependent merging (reference ``code/structure_data.py:155-211``). That
 caps out around 10³ entities. The scalable re-expression is the classic
-three-stage shape:
+three-stage shape, run as one grouped pass with one shuffle:
 
 1. **Block**: a cheap deterministic key (first token, prefix, soundex,
    MinHash band) so candidate pairs only form within a block. Turns the
    O(n²) cross join into Σ O(b²) over blocks — with well-sized blocks this
-   is linear-ish and each block's pairs co-locate on one shuffle partition.
-2. **Refine**: `levenshtein(a, b) <= max_edits` on candidate pairs
-   (JVM-side built-in, whole-stage codegen).
-3. **Resolve**: connected components inside each block. Edges form only
-   within one ``(blk, sub)`` group and every node has exactly one group,
-   so every component lies inside one group: a single grouped
-   ``applyInArrow`` over ``(blk, sub)`` runs numpy min-label propagation
-   with pointer jumping on each group's edge list — one shuffle, exact
-   components of any diameter, no driver collect, no lineage to cut.
+   is linear-ish. The block key and its ``util.sub_salt`` sub-block are
+   the shuffle key: one ``applyInArrow`` call per ``(blk, sub)`` group.
+2. **Refine**: inside the call, one numpy kernel scores every ``i < j``
+   pair of the group's rows — Ukkonen's banded edit-distance DP,
+   vectorized across pairs (:func:`_banded_edit_distance`). Only the cells
+   within ``max_edits`` of the diagonal are computed, pairs go through in
+   chunks so a block's memory stays bounded, and distances count code
+   points, as Spark's ``levenshtein`` does.
+3. **Resolve**: connected components of the group's close pairs by numpy
+   min-label propagation with pointer jumping (:func:`_min_labels`).
+   Pairs form only within one group and every node has exactly one group,
+   so every component lies inside one group: exact components of any
+   diameter, no edge row in Spark, no driver collect, no lineage to cut.
 
 Canonical id = component minimum ⇒ order-independent, unlike the
 reference's scan-order merge (SURVEY.md §2.3.5 documents the divergence).
@@ -29,94 +33,96 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from ipes_data_pipeline_spark.operators.util import sub_salt
 
+#: pair cells (pairs × padded name width) per kernel call: bounds the
+#: memory of any block and keeps a chunk's rows in cache
+_CHUNK_CELLS = 1 << 18
 
-def _keyed(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_expr: Column,
-    block_cap: int | None,
-) -> DataFrame:
-    """``(node, name, blk, sub)``: every row with its block and sub-block."""
-    keyed = df.select(
-        F.col(id_col).alias("node"),
-        F.col(name_col).alias("name"),
-        block_expr.alias("blk"),
+
+def _code_points(names: list[str], k: int) -> tuple[np.ndarray, np.ndarray]:
+    """``(codes, lens)``: column ``r`` of the ``uint32`` matrix holds
+    name ``r``'s code points in rows ``k + 1 .. k + lens[r]``, zero
+    elsewhere, in ``max(lens) + 2k + 1`` rows. Names lie along columns
+    so that a kernel row (one position, every pair) is contiguous."""
+    lens = np.fromiter(map(len, names), np.int64, len(names))
+    rows = np.arange(lens.max(initial=0) + 2 * k + 1)
+    codes = np.zeros((len(names), len(rows)), np.uint32)
+    codes[(rows > k) & (rows <= k + lens[:, None])] = np.frombuffer(
+        "".join(names).encode("utf-32-le"), np.uint32
     )
-    return sub_salt(keyed, ["blk"], block_cap, "node")
+    return codes.T.copy(), lens
 
 
-def candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_expr: Column,
-    max_edits: int = 2,
-    block_cap: int | None = None,
-) -> DataFrame:
-    """Blocked levenshtein half edges ``(blk, sub, src, dst)``, ``src < dst``.
+def _banded_edit_distance(
+    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray, k: int
+) -> np.ndarray:
+    """``min(levenshtein, k + 1)`` of each pair: Ukkonen's banded DP
+    (1985), vectorized across pairs. Every pair needs ``|la − lb| ≤ k``.
 
-    ``block_expr`` is evaluated per-row; pairs form only within equal
-    blocks. At 100 TB the block key is the shuffle key — choose it so the
-    largest block fits one task (salt or refine the key if skewed).
-
-    ``block_cap`` is the skew valve (``util.sub_salt``, the q42p
-    pattern): a block larger than the cap is deterministically
-    sub-salted by ``md5(node) % ceil(bsz / cap)`` and pairs form only
-    within a sub-block — in-block levenshtein work drops from O(b²) to
-    O(b·cap) at the price of recall for pairs the salt separates, in
-    exactly the oversized blocks. Every term (md5, ceil, mod) is
-    ANSI-SQL-expressible, so unlike the MinHash valve this one is
-    value-checked by the q39p oracle IN the regime where it fires.
-    ``None`` ⇒ lossless blocking (``sub`` is 0 everywhere).
+    Column ``p`` of ``a`` and of ``b`` holds pair ``p``'s two names as
+    :func:`_code_points` lays them out, so DP row ``i`` compares
+    ``a[k + i]`` with the band ``b[i : i + 2k + 1]``. Band row ``t`` of
+    DP row ``i`` is ``D[i][i + t − k]``; a cell off the matrix, or
+    farther than ``k``, reads ``k + 1``. Cells past a name's end hold
+    garbage, whatever the padding, because no cell ``D[i][j]`` with
+    ``i ≤ la, j ≤ lb`` reads them; a pair's answer ``D[la][lb]`` is read
+    when the sweep reaches DP row ``la``.
     """
-    keyed = _keyed(df, id_col, name_col, block_expr, block_cap)
-    # Round-robin the probe side: under a broadcast-hash join the probe
-    # inherits the scan's partitioning (often 1 file = 1 task), which
-    # serializes the whole O(Σb²) levenshtein work. With a shuffled probe
-    # side every core gets a slice regardless of block skew.
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    a = keyed.repartition(n_parts).alias("a")
-    b = keyed.alias("b")
-    # 3-arg levenshtein early-exits the DP once the distance exceeds the
-    # threshold (returns -1 then) — ~2× cheaper on the refine hot path
-    lev = F.levenshtein(F.col("a.name"), F.col("b.name"), max_edits)
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.blk") == F.col("b.blk"),
-                F.col("a.sub") == F.col("b.sub"),
-                F.col("a.node") < F.col("b.node"),
-            ],
-        )
-        .where((lev >= 0) & (lev <= max_edits))
-        .select(
-            F.col("a.blk").alias("blk"),
-            F.col("a.sub").alias("sub"),
-            F.col("a.node").alias("src"),
-            F.col("b.node").alias("dst"),
-        )
-    )
+    cap, band = k + 1, 2 * k + 1
+    dt = np.min_scalar_type(k + 3)  # holds cap + 2, the largest sum
+    t = np.arange(band)
+    row0 = np.where(t >= k, t - k, cap).astype(dt)  # D[0][j] = j
+    prev = np.repeat(row0[:, None], len(la), 1)
+    at = lb - la + k
+    out = np.full(len(la), cap, dt)
+    for i in range(int(la.max(initial=0)) + 1):
+        if i:
+            cur = prev + (a[k + i] != b[i : i + band])
+            np.minimum(cur[:-1], prev[1:] + 1, out=cur[:-1])
+            if i <= k:  # D[i][0] = i, and j < 0 is off the matrix
+                cur[: k - i] = cap
+                cur[k - i] = i
+            for c in range(1, band):
+                np.minimum(cur[c], cur[c - 1] + 1, out=cur[c])
+            prev = np.minimum(cur, cap, out=cur)
+        done = np.flatnonzero(la == i)
+        out[done] = prev[at[done], done]
+    return out
 
 
-def _block_components(tbl: pa.Table) -> pa.Table:
-    """``(node, canonical_id)`` for one block's edge list, which holds a
-    self edge per node. Nodes are ranked by Arrow's sort — on strings
-    the UTF-8 byte order Spark's ``min`` uses — so the minimum rank is
-    the minimum id. Each round takes the min label over every edge in
-    both directions, then pointer-jumps labels to their own labels
-    (a label never exceeds its node, so jumping only lowers it)."""
-    src, dst = tbl.column("src"), tbl.column("dst")
-    ids = pc.unique(src)
-    ids = ids.take(pc.sort_indices(ids))
-    s = pc.index_in(src, value_set=ids).to_numpy()
-    d = pc.index_in(dst, value_set=ids).to_numpy()
-    lab = np.arange(len(ids))
+def _close_pairs(names: list[str], k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Index pairs ``i < j`` of ``names`` at most ``k`` edits apart. The
+    ``i < j`` pairs are enumerated a chunk at a time, never as one
+    triangle, and pairs whose lengths differ by more than ``k`` are
+    dropped before the kernel."""
+    n = len(names)
+    if k < 0 or n < 2:  # Spark's levenshtein links nothing below 0
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    codes, lens = _code_points(names, k)
+    per_row = np.arange(n - 1, -1, -1)
+    first = np.cumsum(per_row) - per_row  # pair index of (i, i + 1)
+    total, step = n * (n - 1) // 2, max(1, _CHUNK_CELLS // len(codes))
+    src, dst = [], []
+    for p0 in range(0, total, step):
+        p = np.arange(p0, min(p0 + step, total))
+        i = np.searchsorted(first, p, side="right") - 1
+        j = p - first[i] + i + 1
+        near = np.abs(lens[i] - lens[j]) <= k
+        i, j = i[near], j[near]
+        d = _banded_edit_distance(codes[:, i], lens[i], codes[:, j], lens[j], k)
+        src.append(i[d <= k])
+        dst.append(j[d <= k])
+    return np.concatenate(src), np.concatenate(dst)
+
+
+def _min_labels(n: int, s: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Each node's component minimum, for nodes ``0..n-1`` joined by the
+    edges ``s[e] – d[e]``. Each round takes the min label over every edge
+    in both directions, then pointer-jumps labels to their own labels (a
+    label never exceeds its node, so jumping only lowers it)."""
+    lab = np.arange(n)
     while True:
         new = lab.copy()
         np.minimum.at(new, s, lab[d])
@@ -125,9 +131,24 @@ def _block_components(tbl: pa.Table) -> pa.Table:
         while not np.array_equal(jumped, new):
             new, jumped = jumped, jumped[jumped]
         if np.array_equal(new, lab):
-            break
+            return lab
         lab = new
-    return pa.table({"node": ids, "canonical_id": ids.take(pa.array(lab))})
+
+
+def _block_labels(tbl: pa.Table, max_edits: int) -> pa.Table:
+    """``(node, canonical_id)`` for one ``(blk, sub)`` group. Rows are
+    sorted by Arrow's order — on strings the UTF-8 byte order Spark's
+    ``min`` uses — so the minimum index is the minimum id."""
+    tbl = tbl.take(pc.sort_indices(tbl.column("node")))
+    name = tbl.column("name")
+    # a null name pairs with nothing, nor does a row of a NULL block
+    # (SQL's a.blk = b.blk never matches NULL)
+    paired = name.is_valid().to_numpy() & (tbl.column("blk").null_count == 0)
+    named = np.flatnonzero(paired)
+    s, d = _close_pairs(name.take(named).to_pylist(), max_edits)
+    lab = _min_labels(tbl.num_rows, named[s], named[d])
+    ids = tbl.column("node")
+    return pa.table({"node": ids, "canonical_id": ids.take(lab)})
 
 
 def min_label_components(
@@ -172,39 +193,46 @@ def dedupe_fuzzy(
 ) -> DataFrame:
     """Full blocked fuzzy dedup: returns ``(<id_col>, canonical_id)``,
     where ``canonical_id`` is the minimum id of the row's connected
-    component of near-duplicate names (exact, any diameter).
+    component of names at most ``max_edits`` code-point edits apart
+    (exact, any diameter).
 
-    ``id_col`` must be a key: one row per id. Default block = first
-    whitespace token of the name (the reference's implicit blocking is
-    none at all; first-token blocking is the cheapest key that keeps true
-    duplicates together for entity-name data). A null name joins no edge
-    and stays a singleton. ``block_cap``: the oversized-block skew valve
-    — see :func:`candidate_pairs`.
+    ``id_col`` must be a key: one row per id. ``block_expr`` is evaluated
+    per row, and pairs form only within equal non-null blocks. Default
+    block = first whitespace token of the name (the reference's implicit
+    blocking is none at all; first-token blocking is the cheapest key
+    that keeps true duplicates together for entity-name data). A null
+    name joins no pair and stays a singleton. At 100 TB the block key is
+    the shuffle key, and a block's pairs are scored in its one task —
+    choose the key so the largest block fits one task.
+
+    ``block_cap`` is the skew valve (``util.sub_salt``, the q42p
+    pattern): a block larger than the cap is deterministically
+    sub-salted by ``md5(node) % ceil(bsz / cap)`` and pairs form only
+    within a sub-block — in-block pair work drops from O(b²) to O(b·cap)
+    at the price of recall for pairs the salt separates, in exactly the
+    oversized blocks. Every term (md5, ceil, mod) is ANSI-SQL-expressible,
+    so unlike the MinHash valve this one is value-checked by the q39p
+    oracle IN the regime where it fires. ``None`` ⇒ lossless blocking
+    (``sub`` is 0 everywhere).
     """
-    block = (
-        block_expr
-        if block_expr is not None
-        else F.element_at(F.split(F.col(name_col), r"\s+"), 1)
+    if block_expr is None:
+        block_expr = F.element_at(F.split(F.col(name_col), r"\s+"), 1)
+    keyed = df.select(
+        F.col(id_col).alias("node"),
+        F.col(name_col).alias("name"),
+        block_expr.alias("blk"),
     )
-    selfs = _keyed(df, id_col, name_col, block, block_cap).select(
-        "blk", "sub", F.col("node").alias("src"), F.col("node").alias("dst")
-    )
-    # Group on a 64-bit hash of (blk, sub): one long per edge crosses to
-    # Python instead of the block string (q39 at a generated sf1 on 4
-    # cores: resolve-stage task time ~60 → ~37 s), and a collision only
-    # hands two blocks' edge lists to one call — no edge joins them, so
-    # their components stay apart.
-    edges = (
-        candidate_pairs(df, id_col, name_col, block, max_edits, block_cap)
-        .unionByName(selfs)
-        .select(F.xxhash64("blk", "sub").alias("grp"), "src", "dst")
-    )
-    id_type = df.schema[id_col].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("canonical_id", id_type)]
-    )
+    t = df.schema[id_col].dataType.simpleString()
+    # The grouping exchange takes its partition count from the cores:
+    # the node shuffle is small next to the O(b²) pair work behind it,
+    # and AQE would coalesce it by bytes into one task (q39 at sf0.1 and
+    # at a generated sf1 on 4 cores: one task for 15 and 150 blocks).
     return (
-        edges.groupBy("grp")
-        .applyInArrow(_block_components, schema)
+        sub_salt(keyed, ["blk"], block_cap, "node")
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, "blk", "sub")
+        .groupBy("blk", "sub")
+        .applyInArrow(
+            lambda tbl: _block_labels(tbl, max_edits), f"node {t}, canonical_id {t}"
+        )
         .select(F.col("node").alias(id_col), "canonical_id")
     )

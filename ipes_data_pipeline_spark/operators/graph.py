@@ -1,8 +1,9 @@
 """Iterative graph algorithms as bounded DataFrame loops.
 
-Connected components live in ``dedup_fuzzy`` (per-block resolution
-inside ``dedupe_fuzzy``; ``min_label_components`` for LSH graphs whose
-edges cross buckets); this module adds weighted PageRank — the
+Connected components live in ``dedup_fuzzy`` (per-block resolution of
+the close pairs each ``dedupe_fuzzy`` group scores itself;
+``min_label_components`` for LSH graphs whose edges cross buckets);
+this module adds weighted PageRank — the
 influence/centrality rollup warehouses run over interaction graphs
 (who-buys-from-whom, citation, link graphs).
 

@@ -493,7 +493,7 @@ def knn_graph_bucketed(
     :func:`_cos_blocks` — corpus memory per task is |bucket|, not
     |corpus|. Recall is traded for that bound (neighbors straddling a
     sign plane are missed). Each task pre-reduces to k candidates per
-    row with Spark's ordering (NaN-first desc cos, asc neighbor id), so
+    row with Spark's ordering (desc cos with NULL last, asc neighbor id), so
     the shuffle carries ≤ k rows per row, not the pair set, and the
     final window's verdicts match a per-pair JVM join bit for bit —
     which is why this approximate index still carries a value-level
@@ -519,10 +519,11 @@ def knn_graph_bucketed(
         nrm = _bucket_norms(V)
         out_id, out_nb, out_cos = [], [], []
         for a, b, cos in _cos_blocks(V, V, nrm, nrm, chunk_cells):
-            # Spark sorts NaN ABOVE every double under desc — rank NaN
-            # as +inf; ascending-id columns make the stable sort break
-            # cosine ties toward the LOWER neighbor id, like the window
-            rank = np.where(np.isnan(cos), np.inf, cos)
+            # a NaN cosine reaches Spark as NULL, which the final window
+            # ranks after every real cosine: rank it below them but
+            # above the self mask; ascending-id columns make the stable
+            # sort break ties toward the LOWER neighbor id, like the window
+            rank = np.where(np.isnan(cos), np.finfo(cos.dtype).min, cos)
             rank[ids[a:b, None] == ids[None, :]] = -np.inf  # self
             top = np.argsort(-rank, axis=1, kind="stable")[:, :k]
             rows = np.arange(b - a)[:, None]

@@ -867,8 +867,8 @@ def _q39_oracle(block_cap: int | None = None, n_rounds: int = 3) -> str:
         cap_ctes = ""
     else:
         # The SAME deterministic sub-salt the Spark valve computes
-        # (candidate_pairs block_cap): md5 of the node id, first 8 hex
-        # chars as an unsigned 32-bit int, mod ceil(block_size / cap).
+        # (util.sub_salt): md5 of the node id, first 8 hex chars as an
+        # unsigned 32-bit int, mod ceil(block_size / cap).
         cap_ctes = f""",
 sz AS (SELECT blk, count(*) AS bsz FROM c GROUP BY blk),
 cs AS (

@@ -213,6 +213,24 @@ def test_lsh_topk_pairs_score_zero_and_null_vectors_null_and_last(spark):
     ]
 
 
+def test_bucketed_knn_ranks_zero_vector_last(spark):
+    """A zero vector's cosines are NULL, and NULL ranks after every real
+    cosine: no other row takes it as a neighbour, and its own neighbour
+    is the lowest id, as in a per-pair join with ``try_divide`` and the
+    same window (desc cos, asc neighbour id)."""
+    from ipes_data_pipeline_spark.operators.similarity import knn_graph_bucketed
+
+    df = spark.createDataFrame(
+        [(1, [-1.0, 2.0]), (2, [0.0, 0.0]), (3, [-2.0, 1.0]), (4, [-2.0, 2.0])],
+        "id long, v array<double>",
+    )
+    import math
+
+    got = sorted(tuple(r) for r in knn_graph_bucketed(df, "id", "v", 1, (1,)).collect())
+    c = 6 / (math.sqrt(5) * math.sqrt(8))  # each kept pair: dot 6, norms √5, √8
+    assert got == [(1, 4, c), (2, 1, None), (3, 4, c), (4, 1, c)]
+
+
 def test_bucketed_knn_recall_vs_exact(spark):
     """The sharded graph's neighbors are a subset-quality check: measure
     recall@5 against the exact graph on real testdata. Sign-LSH on 4

@@ -425,3 +425,30 @@ def test_q157_first_occurrence_is_partial_aggregate(spark, sf_dir):
     plan = formatted_plan(q(spark, "q157_paragraph_dedup", sf_dir))
     assert "partial_min" in plan
     assert "row_number" not in plan
+
+
+def test_fuzzy_dedup_is_one_grouped_pass(spark, sf_dir):
+    # q39 scores each block's pairs inside its grouped Arrow call: the
+    # one shuffle is the (blk, sub) exchange, with no pair join and no
+    # levenshtein expression, and its partition count is fixed so AQE
+    # cannot coalesce the pair work into one task. q39p's valve adds
+    # only util.sub_salt's block-size aggregate and the broadcast join
+    # that attaches it.
+    import re
+
+    def shape(name):
+        plan = formatted_plan(q(spark, name, sf_dir))
+        assert "levenshtein" not in plan, plan
+        assert "hashpartitioning(blk" in plan and "REPARTITION_BY_NUM" in plan, plan
+        ops = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+        keys = re.findall(r"hashpartitioning\(([\w#, ]+), \d+\)", plan)
+        return ops, sorted(re.sub(r"#\d+L?", "", k) for k in keys)
+
+    ops, keys = shape("q39_fuzzy_dedup")
+    # without a cap, sub is the literal 0 and may be folded into the key
+    assert ops.count("Exchange") == 1 and keys in (["blk, sub"], ["blk, 0"]), ops
+    assert not [op for op in ops if "Join" in op], ops
+    ops, keys = shape("q39p_fuzzy_dedup_capped")
+    assert ops.count("Exchange") == 2 and keys == ["blk", "blk, sub"], ops
+    assert ops.count("BroadcastExchange") == 1, ops
+    assert [op for op in ops if "Join" in op] == ["BroadcastHashJoin"], ops

@@ -70,45 +70,38 @@ def test_dedup_canonical_order_invariant(spark, perm):
 
 
 def test_dedup_block_cap_valve(spark):
-    """The block_cap skew valve (q39p): capped edges are a subset of the
-    lossless edges (recall traded only inside oversized blocks), the
-    capped output is still a valid partition into components, and a cap
-    larger than every block is a no-op (bit-identical labels)."""
-    from ipes_data_pipeline_spark.operators.dedup_fuzzy import candidate_pairs
-
+    """The block_cap skew valve (q39p), checked on labels: capping only
+    splits lossless components (recall traded inside the oversized
+    block), a block under the cap keeps its pair, and a cap larger than
+    every block is a no-op (bit-identical labels)."""
     # one giant block of 40 near-identical names + a small distinct block
     rows = [(i, f"acme corp {i:03d}") for i in range(40)] + [
         (100, "zorp inc"), (101, "zorp incx")
     ]
     df = spark.createDataFrame(rows, "id int, name string")
-    blk = F.element_at(F.split(F.col("name"), r"\s+"), 1)
 
-    def edges(cap):
-        rows = candidate_pairs(
-            df, "id", "name", blk, max_edits=2, block_cap=cap
-        ).collect()
-        # half edges, each tagged with the one (blk, sub) group it lies in
-        assert all(r["src"] < r["dst"] for r in rows)
-        return {(r["src"], r["dst"]) for r in rows}, {
-            (r["blk"], r["sub"]) for r in rows
+    def labels(cap):
+        return {
+            r["id"]: r["canonical_id"]
+            for r in dedupe_fuzzy(
+                df, "id", "name", max_edits=2, block_cap=cap
+            ).collect()
         }
 
-    (lossless, groups), (capped, capped_groups) = edges(None), edges(8)
-    assert groups == {("acme", 0), ("zorp", 0)}
-    assert capped < lossless  # strictly fewer: the 40-block sub-salted
-    assert len(capped_groups) > len(groups)
-    # the small block is under every cap: its edge survives intact
-    assert (100, 101) in capped
-    # cap >= max block size => valve provably inert
-    assert edges(64)[0] == lossless
-
-    full = {
-        r["id"]: r["canonical_id"]
-        for r in dedupe_fuzzy(df, "id", "name", max_edits=2, block_cap=8).collect()
-    }
-    assert set(full) == {i for i, _ in rows}  # every node labeled once
+    lossless, capped = labels(None), labels(8)
+    assert set(lossless) == set(capped) == {i for i, _ in rows}
     # canonical ids are component members (a partition, not dangling labels)
-    assert set(full.values()) <= set(full)
+    assert all(capped[c] == c for c in capped.values())
+    # every capped component lies inside one lossless component
+    assert all(lossless[i] == lossless[c] for i, c in capped.items())
+    # the 40-name block is one component, split by the sub-salt
+    acme = range(40)
+    assert len({lossless[i] for i in acme}) == 1
+    assert len({capped[i] for i in acme}) > 1
+    # the small block is under every cap: its pair survives intact
+    assert capped[100] == capped[101] == 100
+    # cap >= max block size => valve provably inert
+    assert labels(64) == lossless
 
 
 def test_nest_unnest_roundtrip(spark):
