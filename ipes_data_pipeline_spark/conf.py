@@ -57,8 +57,9 @@ TABLE = {
         # checkpoint dir, then the local fallback (see util.cut).
         Entry("spark.ipes.spillDir", "path", None, "path"),
         # Catalyst input-size estimate at or above which an
-        # INPUT-PROPORTIONAL intermediate (minhash band/shingle tables)
-        # is spilled to parquet instead of localCheckpoint-ed. The spill
+        # INPUT-PROPORTIONAL intermediate (minhash_neardup_pairs' shingle
+        # table, its one user) is spilled to parquet instead of
+        # localCheckpoint-ed. The spill
         # is the right store when the frame is big (the round-9 sf10 A/B
         # measured localCheckpoint's deserialized row blocks at +182 s
         # vs +26 s for the spill on the 213M-row set) but costs an extra

@@ -9,7 +9,8 @@ three-stage shape, run as one grouped pass with one shuffle:
    MinHash band) so candidate pairs only form within a block. Turns the
    O(n²) cross join into Σ O(b²) over blocks — with well-sized blocks this
    is linear-ish. The block key and its ``util.sub_salt`` sub-block are
-   the shuffle key: one ``applyInArrow`` call per ``(blk, sub)`` group.
+   the shuffle key: each ``(blk, sub)`` group reaches one
+   ``util.group_apply`` call whole.
 2. **Refine**: inside the call, one numpy kernel scores every ``i < j``
    pair of the group's rows — Ukkonen's banded edit-distance DP,
    vectorized across pairs (:func:`_banded_edit_distance`). Only the cells
@@ -34,11 +35,13 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ipes_data_pipeline_spark.operators.util import sub_salt
-
-#: pair cells (pairs × padded name width) per kernel call: bounds the
-#: memory of any block and keeps a chunk's rows in cache
-_CHUNK_CELLS = 1 << 18
+from ipes_data_pipeline_spark.operators.util import (
+    CHUNK_CELLS as _CHUNK_CELLS,
+    group_apply,
+    group_ends,
+    pair_chunks,
+    sub_salt,
+)
 
 
 def _code_points(names: list[str], k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -101,14 +104,8 @@ def _close_pairs(names: list[str], k: int) -> tuple[np.ndarray, np.ndarray]:
     if k < 0 or n < 2:  # Spark's levenshtein links nothing below 0
         return np.empty(0, np.int64), np.empty(0, np.int64)
     codes, lens = _code_points(names, k)
-    per_row = np.arange(n - 1, -1, -1)
-    first = np.cumsum(per_row) - per_row  # pair index of (i, i + 1)
-    total, step = n * (n - 1) // 2, max(1, _CHUNK_CELLS // len(codes))
     src, dst = [], []
-    for p0 in range(0, total, step):
-        p = np.arange(p0, min(p0 + step, total))
-        i = np.searchsorted(first, p, side="right") - 1
-        j = p - first[i] + i + 1
+    for i, j in pair_chunks(np.full(n, n), _CHUNK_CELLS // len(codes)):
         near = np.abs(lens[i] - lens[j]) <= k
         i, j = i[near], j[near]
         d = _banded_edit_distance(codes[:, i], lens[i], codes[:, j], lens[j], k)
@@ -136,17 +133,24 @@ def _min_labels(n: int, s: np.ndarray, d: np.ndarray) -> np.ndarray:
 
 
 def _block_labels(tbl: pa.Table, max_edits: int) -> pa.Table:
-    """``(node, canonical_id)`` for one ``(blk, sub)`` group. Rows are
+    """``(node, canonical_id)`` for whole ``(blk, sub)`` groups. Rows are
     sorted by Arrow's order — on strings the UTF-8 byte order Spark's
-    ``min`` uses — so the minimum index is the minimum id."""
-    tbl = tbl.take(pc.sort_indices(tbl.column("node")))
+    ``min`` uses — so within a group the minimum index is the minimum id."""
+    order = [(c, "ascending") for c in ("blk", "sub", "node")]
+    tbl = tbl.take(pc.sort_indices(tbl, order))
+    ends = group_ends(tbl, ["blk", "sub"])
     name = tbl.column("name")
     # a null name pairs with nothing, nor does a row of a NULL block
     # (SQL's a.blk = b.blk never matches NULL)
-    paired = name.is_valid().to_numpy() & (tbl.column("blk").null_count == 0)
-    named = np.flatnonzero(paired)
-    s, d = _close_pairs(name.take(named).to_pylist(), max_edits)
-    lab = _min_labels(tbl.num_rows, named[s], named[d])
+    paired = name.is_valid().to_numpy() & tbl.column("blk").is_valid().to_numpy()
+    src, dst, lo = [np.empty(0, np.int64)], [np.empty(0, np.int64)], 0
+    while lo < tbl.num_rows:
+        named = lo + np.flatnonzero(paired[lo : ends[lo]])
+        s, d = _close_pairs(name.take(named).to_pylist(), max_edits)
+        src.append(named[s])
+        dst.append(named[d])
+        lo = ends[lo]
+    lab = _min_labels(tbl.num_rows, np.concatenate(src), np.concatenate(dst))
     ids = tbl.column("node")
     return pa.table({"node": ids, "canonical_id": ids.take(lab)})
 
@@ -223,16 +227,9 @@ def dedupe_fuzzy(
         block_expr.alias("blk"),
     )
     t = df.schema[id_col].dataType.simpleString()
-    # The grouping exchange takes its partition count from the cores:
-    # the node shuffle is small next to the O(b²) pair work behind it,
-    # and AQE would coalesce it by bytes into one task (q39 at sf0.1 and
-    # at a generated sf1 on 4 cores: one task for 15 and 150 blocks).
-    return (
-        sub_salt(keyed, ["blk"], block_cap, "node")
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "blk", "sub")
-        .groupBy("blk", "sub")
-        .applyInArrow(
-            lambda tbl: _block_labels(tbl, max_edits), f"node {t}, canonical_id {t}"
-        )
-        .select(F.col("node").alias(id_col), "canonical_id")
-    )
+    return group_apply(
+        sub_salt(keyed, ["blk"], block_cap, "node"),
+        ["blk", "sub"],
+        lambda tbl: _block_labels(tbl, max_edits),
+        f"node {t}, canonical_id {t}",
+    ).select(F.col("node").alias(id_col), "canonical_id")

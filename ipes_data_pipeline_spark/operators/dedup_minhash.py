@@ -1,10 +1,22 @@
 """Near-duplicate detection: MinHash-LSH, SimHash, n-gram Jaccard.
 
-Scale design: every variant is *blocked* — candidate pairs only form
-inside an LSH bucket (band or signature equality), so the shuffle key is
-the bucket id and no O(n²) cross join ever materializes. The refine step
-(exact Jaccard / hamming) touches only candidates. All expressions are
-JVM-side higher-order functions; oracle twins in queries/dataops.py.
+Scale design: every pair operator is *blocked* and runs as one grouped
+pass (``util.group_apply``, the shape :mod:`.dedup_fuzzy` uses). Rows
+shuffle once on their bucket key — an LSH band value ``(band_idx,
+band_key, sub)`` or the n-gram block — and each Arrow call takes whole
+buckets, enumerates every bucket's ``i < j`` pairs in chunks
+(``util.pair_chunks``) and scores them in numpy (:func:`_bucket_pairs`).
+No O(n²) cross join and no band self-join ever materializes.
+
+Each band row carries its document's whole band vector: the integer
+band components (``bk``) and, when capped, every band's ``sub``. A pair
+leaves only the lowest band where both rows share key and ``sub``, so
+the pair set is duplicate-free without a ``.distinct()``. A refine whose
+payload is one small value per row runs in the same call: hamming over
+SimHash's 48-bit chunks, token-set Jaccard over per-bucket bitsets.
+MinHash's exact shingle Jaccard stays two id-keyed joins. Signatures are
+JVM-side (min aggregates, array folds); oracle twins in
+queries/dataops.py.
 
 Skew valves default ON: every pair API ships with ``bucket_cap=256``,
 so a boilerplate-heavy corpus (many documents sharing one band value)
@@ -19,7 +31,12 @@ cap-independent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ipes_data_pipeline_spark.functions.text import (
@@ -32,7 +49,11 @@ from ipes_data_pipeline_spark.functions.text import (
     tokens,
 )
 from ipes_data_pipeline_spark.operators.util import (
+    CHUNK_CELLS,
     cut,
+    group_apply,
+    group_ends,
+    pair_chunks,
     spill_worthwhile,
     spread,
     sub_salt,
@@ -49,7 +70,9 @@ def minhash_bands(
     hash_fn: str = "xxhash64",
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, band_idx, band_key) — one row per LSH band per document.
+    """(id, band_idx, band_key, bk) — one row per LSH band per document;
+    ``bk`` holds the document's banded MinHash components as integers
+    (the pair kernel's band vector).
 
     Tokens → shingles → salted shingle hashes → signatures are *staged
     projections* so each array computes once per row. Pass
@@ -90,6 +113,9 @@ def minhash_bands(
         def piece(salt, k):
             return F.substring(F.col(f"h{salt}"), k * 8 + 1, 8)
 
+        def as_long(c):
+            return F.conv(c, 16, 10).cast("long")
+
     elif hash_fn == "xxhash64":
         per_pass = 2
 
@@ -100,6 +126,9 @@ def minhash_bands(
             if k == 0:
                 return F.shiftrightunsigned(F.col(f"h{salt}"), 32)
             return F.col(f"h{salt}").bitwiseAND(F.lit(0xFFFFFFFF))
+
+        def as_long(c):
+            return c
 
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
@@ -144,9 +173,162 @@ def minhash_bands(
             for b in range(n_bands)
         ]
     )
-    return with_sig.select("id", F.explode(bands).alias("b")).select(
-        "id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key")
+    # bk: the banded components as integers, NULL (an empty shingle
+    # set) as -1, so the pair kernel compares band keys without strings
+    bk = F.array(
+        *[
+            F.coalesce(as_long(F.col(f"mh{i}")), F.lit(-1))
+            for i in range(n_bands * band_size)
+        ]
     )
+    return with_sig.select("id", bk.alias("bk"), F.explode(bands).alias("b")).select(
+        "id",
+        F.col("b.band_idx").alias("band_idx"),
+        F.col("b.band_key").alias("band_key"),
+        "bk",
+    )
+
+
+def _set_bits(x: np.ndarray) -> np.ndarray:
+    """Set bits in each row of an integer matrix."""
+    return np.unpackbits(x.view(np.uint8), axis=1).sum(1, dtype=np.int64)
+
+
+def _longs(tbl: pa.Table, col: str) -> np.ndarray:
+    """A fixed-length ``array<bigint>`` column as an ``(n, width)`` matrix."""
+    return pc.list_flatten(tbl.column(col)).to_numpy().reshape(tbl.num_rows, -1)
+
+
+def _hamming(max_hamming: int):
+    """Refine: bits differing between the rows' 48-bit ``sim`` chunks,
+    kept at most ``max_hamming``."""
+
+    def prep(tbl):
+        x = _longs(tbl, "sim")
+
+        def score(i, j):
+            h = _set_bits(x[i] ^ x[j]).astype(np.int32)
+            return h <= max_hamming, h
+
+        return x.shape[1], score
+
+    return prep
+
+
+def _jaccard(threshold: float):
+    """Refine: token-set Jaccard of the rows' ``toks``, kept at or above
+    ``threshold``. Each row's set is a bitset over the call's distinct
+    tokens, so a chunk of pairs scores with one AND and bit count."""
+
+    def prep(tbl):
+        toks = tbl.column("toks").combine_chunks()
+        size = pc.list_value_length(toks).fill_null(0).to_numpy()
+        code = pc.dictionary_encode(pc.list_flatten(toks)).indices.to_numpy()
+        bits = np.zeros((len(size), code.max(initial=0) // 8 + 1), np.uint8)
+        rows = np.repeat(np.arange(len(size)), size)
+        bit = (1 << code % 8).astype(np.uint8)
+        np.bitwise_or.at(bits, (rows, code // 8), bit)
+        # a NULL set pairs with nothing, nor do two empty sets (0 / 0)
+        valid = toks.is_valid().to_numpy(zero_copy_only=False)
+
+        def score(i, j):
+            inter = _set_bits(bits[i] & bits[j])
+            union = size[i] + size[j] - inter
+            ok = valid[i] & valid[j] & (union > 0)
+            jac = inter / np.where(ok, union, 1).astype(np.float64)
+            return ok & (jac >= threshold), jac
+
+        return bits.shape[1], score
+
+    return prep
+
+
+def _bucket_pairs(
+    tbl: pa.Table, keys: list[str], band_w: int, refine, score_name: str
+) -> pa.Table:
+    """``(id_a, id_b[, score])`` of whole bucket groups: each group's
+    ``i < j`` rows in id order, enumerated a chunk at a time
+    (``util.pair_chunks``).
+
+    - A group with a NULL key pairs nothing (SQL's ``a.k = b.k``).
+    - Rows flagged ``is_new`` are probes: they sort first in their group
+      and pair with each later row, so ``id_a`` is the probe and no two
+      other rows pair.
+    - Banded rows carry ``bk`` (every band's integer components,
+      ``band_w`` per band) and, when capped, ``subs`` (every band's
+      sub). A pair is kept only if no lower band puts both rows in one
+      bucket, so each pair leaves exactly one group: the lowest it shares.
+    - ``refine(tbl)`` gives ``(cells per pair, score)``; ``score(i, j)``
+      gives the keep mask and the pair scores, output as ``score_name``.
+    """
+    cols = tbl.column_names
+    probe = "is_new" in cols
+    order = [(k, "ascending") for k in keys] + [("is_new", "descending")] * probe
+    tbl = tbl.take(pc.sort_indices(tbl, order + [("id", "ascending")]))
+    ids, n = tbl.column("id"), tbl.num_rows
+    rank = pc.rank(ids, tiebreaker="dense").to_numpy()
+    alone = np.any([tbl.column(k).is_null().to_numpy() for k in keys], 0)
+    if probe:  # a row that is not new starts no pair
+        alone |= ~tbl.column("is_new").to_numpy()
+    ends = np.where(alone, np.arange(1, n + 1), group_ends(tbl, keys))
+    n_bands = 0
+    if "bk" in cols:
+        bk = _longs(tbl, "bk")
+        subs = _longs(tbl, "subs") if "subs" in cols else None
+        n_bands = bk.shape[1] // band_w
+        below = np.arange(n_bands) < tbl.column("band_idx").to_numpy()[:, None]
+    width, score = refine(tbl) if refine else (0, None)
+    e = np.empty(0, np.int64)
+    out_i, out_j, out_s = [e], [e], [score(e, e)[1]] if score else []
+    for i, j in pair_chunks(ends, CHUNK_CELLS // (1 + n_bands * band_w + width)):
+        if score:  # first: the refine keeps few of a skewed bucket's pairs
+            keep, s = score(i, j)
+            i, j, s = i[keep], j[keep], s[keep]
+        keep = rank[i] != rank[j]
+        if n_bands:  # drop the pairs that a lower band shares
+            same = (bk[i] == bk[j]).reshape(len(i), n_bands, band_w).all(2)
+            if subs is not None:
+                same &= subs[i] == subs[j]
+            keep &= ~(same & below[i]).any(1)
+        out_i.append(i[keep])
+        out_j.append(j[keep])
+        if score:
+            out_s.append(s[keep])
+    out = {
+        "id_a": ids.take(np.concatenate(out_i)),
+        "id_b": ids.take(np.concatenate(out_j)),
+    }
+    if score:
+        out[score_name] = np.concatenate(out_s)
+    return pa.table(out)
+
+
+def _pairs(
+    rows: DataFrame, keys: list[str], band_w: int = 0, refine=None, score: str = ""
+) -> DataFrame:
+    """The grouped pair pass over ``rows`` (``id`` plus the payload
+    :func:`_bucket_pairs` reads): ``(id_a, id_b[, <score>])``, where
+    ``score`` is the refine's output column as DDL (``"hamming int"``)."""
+    t = rows.schema["id"].dataType.simpleString()
+    name = score.split(" ")[0]
+    kernel = partial(
+        _bucket_pairs, keys=keys, band_w=band_w, refine=refine, score_name=name
+    )
+    schema = f"id_a {t}, id_b {t}" + (f", {score}" if score else "")
+    return group_apply(rows, keys, kernel, schema)
+
+
+def _salted(bands: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """``util.sub_salt`` over one-row-per-band rows. When capped, each row
+    also carries ``subs``, the sub of every band of its document in band
+    order, for :func:`_bucket_pairs`' lowest-band rule. The window runs
+    inside the partitions of the signature rows, already hashed by id."""
+    salted = sub_salt(bands, keys, cap, "id")
+    if cap is None:
+        return salted
+    doc = Window.partitionBy(*[c for c in ("id", "is_new") if c in bands.columns])
+    by_band = F.sort_array(F.collect_list(F.struct("band_idx", "sub")).over(doc))
+    return salted.withColumn("subs", by_band.getField("sub"))
 
 
 def minhash_lsh_pairs(
@@ -159,62 +341,24 @@ def minhash_lsh_pairs(
     hash_fn: str = "xxhash64",
     bucket_cap: int | None = 256,
     shingles_df: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) sharing any LSH band.
 
-    The band join shuffles on (band_idx, band_key) — bucket-local work
-    only. Callers typically refine with exact Jaccard on the candidates.
+    One grouped pass: band rows shuffle once on ``(band_idx, band_key,
+    sub)``, each bucket enumerates its own pairs, and a pair leaves only
+    the lowest band its documents share, so the set is duplicate-free.
+    Callers typically refine with exact Jaccard on the candidates.
     ``hash_fn`` / ``bucket_cap``: see :func:`minhash_bands` /
     :func:`~ipes_data_pipeline_spark.operators.util.sub_salt`
     (production default xxhash64; oracle queries pin md5; the cap — ON
     by default at 256 — bounds quadratic buckets on boilerplate-heavy
     corpora; pass ``None`` for lossless blocking).
     """
-    # Eager checkpoint: `bands` sits on BOTH sides of the self-join, and
-    # without materialization the hash-heavy signature pipeline executes
-    # twice (once per alias). The band table is tiny (n_docs × n_bands
-    # short rows) — always worth pinning. With a bucket_cap the RAW
-    # bands are pinned FIRST: sub_salt references its input
-    # twice (sizes aggregate + join), and capping an un-materialized
-    # plan would run tokenize+shingle+hash twice — exactly the cost
-    # this checkpoint exists to avoid.
-    # Band tables are data-proportional (n_docs × n_bands string-keyed
-    # rows): store them via the columnar parquet spill ONCE THE INPUT IS
-    # BIG — the r9 q39 edge-store lesson (SCALING.md: +182 s heap
-    # thrash vs +26 s spill at 213M rows) — but the spill's extra write
-    # job costs ~0.4 s/query where localCheckpoint is free (round-10
-    # sf0.1 A/B), so the store regime follows the input-size estimate
-    # (util.spill_worthwhile; spark.ipes.spillMinInputBytes). No
-    # spark_partition_id consumer anywhere downstream.
-    spill = spill_worthwhile(df)
-    raw = minhash_bands(
+    bands = minhash_bands(
         df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn, shingles_df
     )
-    if bucket_cap is not None:
-        raw = cut(raw, via_parquet=spill)
-    bands = sub_salt(raw, ["band_idx", "band_key"], bucket_cap, "id")
-    if materialize:
-        bands = cut(bands, via_parquet=spill)
-    # materialize=False relies on exchange reuse instead: the signature
-    # aggregate's exchange is the identical subtree on both sides of the
-    # self-join, so the hash pipeline still runs once — and the pair
-    # join lands in the CALLER's job, overlapping with sibling subtrees
-    # (q133 runs both pair families inside one union job this way).
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col("a.sub") == F.col("b.sub"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    keys = ["band_idx", "band_key", "sub"]
+    return _pairs(_salted(bands, keys[:2], bucket_cap), keys, band_size)
 
 
 def minhash_lsh_pairs_delta(
@@ -234,72 +378,32 @@ def minhash_lsh_pairs_delta(
     corpus against the corpus.
 
     The production shape for continuously-ingested corpora: the corpus
-    band index is a stored artifact (pass ``corpus_bands`` to reuse a
-    previously materialized/banded table — it MUST have been built with
-    the same ``hash_fn``; then only the new batch pays tokenize+hash),
-    the join probes it with the new batch's bands, and the candidate
-    count scales with |new|, not |corpus|. Pairs: (new_id, other_id)
-    where other is any corpus doc sharing a band, or a LATER new doc
-    (new-new pairs ordered once, corpus-new pairs in new→corpus
-    direction only).
+    band index is a stored artifact (pass ``corpus_bands``, a stored
+    :func:`minhash_bands` output — it MUST have been built with the same
+    ``hash_fn`` and ``band_size``; then only the new batch pays
+    tokenize+hash). Inside each bucket the batch's rows pair with every
+    other row once, so the candidate count scales with |new|, not
+    |corpus|. Pairs: (new_id, other_id) where other is any corpus doc
+    sharing a band, or a LATER new doc (new-new pairs ordered once,
+    corpus-new pairs in new→corpus direction only).
 
     ``bucket_cap`` caps the COMBINED (corpus ∪ new) band buckets: sizes
     are counted over the union so a boilerplate band key that is huge in
     the corpus gets sub-salted even when the new batch's share is small.
     """
-    # corpus/batch-proportional band tables: parquet-spill store once
-    # the input is big (the r9 edge-store rule, input-adaptive — see
-    # minhash_lsh_pairs)
-    spill_new = spill_worthwhile(new_df)
-    # corpus_df may be None when a stored corpus_bands is passed; size
-    # the corpus side from whichever frame actually exists
-    spill_corpus = spill_worthwhile(
-        corpus_df if corpus_bands is None else corpus_bands
-    )
-    new_bands = cut(
-        minhash_bands(
-            new_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
-        ),
-        via_parquet=spill_new,
+    new_bands = minhash_bands(
+        new_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
     )
     if corpus_bands is None:
         corpus_bands = minhash_bands(
             corpus_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
         )
-        if bucket_cap is not None:
-            # same rule as the batch form: sub_salt reads the
-            # union twice (sizes + join) — pin the hash-heavy corpus
-            # lineage before capping, or it tokenizes twice
-            corpus_bands = cut(corpus_bands, via_parquet=spill_corpus)
-    others = sub_salt(
-        corpus_bands.withColumn("is_new", F.lit(False)).unionByName(
-            new_bands.withColumn("is_new", F.lit(True))
-        ),
-        ["band_idx", "band_key"],
-        bucket_cap,
-        "id",
+    rows = corpus_bands.withColumn("is_new", F.lit(False)).unionByName(
+        new_bands.withColumn("is_new", F.lit(True))
     )
-    if bucket_cap is None:
-        probe = new_bands.withColumn("sub", F.lit(0))
-    else:
-        # pin the salted union once; the probe side is its is_new slice,
-        # so both sides of the join carry the SAME sub-salt.
-        others = cut(others, via_parquet=spill_new or spill_corpus)
-        probe = others.where(F.col("is_new")).drop("is_new")
-    n, o = probe.alias("n"), others.alias("o")
-    return (
-        n.join(
-            o,
-            on=[
-                F.col("n.band_idx") == F.col("o.band_idx"),
-                F.col("n.band_key") == F.col("o.band_key"),
-                F.col("n.sub") == F.col("o.sub"),
-                F.col("n.id") != F.col("o.id"),
-            ],
-        )
-        .where(~F.col("o.is_new") | (F.col("o.id") > F.col("n.id")))
-        .select(F.col("n.id").alias("new_id"), F.col("o.id").alias("other_id"))
-        .distinct()
+    keys = ["band_idx", "band_key", "sub"]
+    return _pairs(_salted(rows, keys[:2], bucket_cap), keys, band_size).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("other_id")
     )
 
 
@@ -318,13 +422,13 @@ def minhash_neardup_pairs(
     Jaccard ≥ ``threshold``. Returns (id_a, id_b, jaccard).
 
     This is the shipped dedup decision (candidates alone over-report):
-    the LSH stage bounds pair generation (bucket-keyed shuffle, no
-    O(n²)), the refine touches only candidates — two joins keyed on the
-    pair ids against the shingle projection. The refine granularity
-    deliberately MATCHES the blocking granularity (the same ``shingle_n``
-    sets MinHash sketches): a threshold on a different similarity (e.g.
-    token Jaccard) would admit pairs the sketch cannot see — scrambled-
-    word documents share ~all tokens but ~no 3-shingles — making output
+    the LSH stage bounds pair generation (:func:`minhash_lsh_pairs`' one
+    bucket-keyed pass, no O(n²)), the refine touches only candidates —
+    two joins keyed on the pair ids against the shingle projection. The
+    refine granularity deliberately MATCHES the blocking granularity (the
+    same ``shingle_n`` sets MinHash sketches): a threshold on a different
+    similarity (e.g. token Jaccard) would admit pairs the sketch cannot
+    see — scrambled-word documents share ~all tokens but ~no 3-shingles — making output
     depend on band-collision luck. On the same granularity the refine
     verdict is hash-independent and both hash families converge on the
     same output wherever both catch the ≥θ pairs (the property the
@@ -342,20 +446,17 @@ def minhash_neardup_pairs(
     # remaining q42p suspect — "the sf10 shingle-array cut()
     # materialization breathing with memory pressure"); below the
     # threshold localCheckpoint skips the spill's write job (round-10
-    # sf0.1 A/B — see minhash_lsh_pairs). Referenced by the band stage
-    # and both refine joins; no spark_partition_id consumer.
+    # sf0.1 A/B: the spill's extra write job cost ~0.4 s/query).
+    # Referenced by the band stage and both refine joins; no
+    # spark_partition_id consumer.
     sh_df = cut(
         spread(df)
         .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
         .select("id", shingles(F.col("toks"), shingle_n).alias("sh")),
         via_parquet=spill_worthwhile(df),
     )
-    # materialize=False: the candidate set feeds exactly one consumer
-    # chain (the refine), so the band self-join can land in the final
-    # job — exchange reuse still computes the signature aggregate once,
-    # and the refine joins overlap with the pair join instead of
-    # waiting behind a band-table barrier. (bucket_cap still pins the
-    # raw bands inside minhash_lsh_pairs when set.)
+    # The refine stays two id-keyed joins: carrying the shingle sets
+    # through the bucket exchange would ship each set once per band.
     pairs = minhash_lsh_pairs(
         df,
         id_col,
@@ -366,7 +467,6 @@ def minhash_neardup_pairs(
         hash_fn,
         bucket_cap,
         shingles_df=sh_df,
-        materialize=False,
     )
     tokd = sh_df.select("id", F.col("sh").alias("dt"))
     a = tokd.select(F.col("id").alias("id_a"), F.col("dt").alias("dt_a"))
@@ -485,70 +585,40 @@ def simhash_neardup_pairs(
             stacklevel=2,
         )
     band_w = n_bits // n_bands
-    # sim0..simK: the '0'/'1' signature parsed ONCE per row into 48-bit
-    # integer chunks (48 < 63 so conv->long never overflows), so the
-    # refine below is one bit_count(a XOR b) per chunk per candidate
-    # pair instead of 2 x n_bits interpreted substring compares (the
-    # BHJ evaluates the hamming expression in the join condition AND
-    # the projection). Same integer by construction: differing chars ==
-    # differing bits. Bands also shuffle/broadcast 8-byte longs instead
-    # of the n_bits-char string (guide: narrower types through the
-    # exchange).
-    chunk_w = 48
-    n_chunks = (n_bits + chunk_w - 1) // chunk_w
-    sim_cols = [f"sim{k}" for k in range(n_chunks)]
+    # sim: the '0'/'1' signature parsed ONCE per row into 48-bit integer
+    # chunks (48 < 63 so conv->long never overflows), so the refine is
+    # one popcount(a XOR b) per chunk per candidate pair — differing
+    # chars == differing bits. bk holds each band's bits the same way:
+    # the pair kernel's band vector.
     sigs = simhash_signatures(df, id_col, text_col, n_bits)
-    for k, c in enumerate(sim_cols):
-        piece = F.substring(
-            "simhash", k * chunk_w + 1, min(chunk_w, n_bits - k * chunk_w)
-        )
-        sigs = sigs.withColumn(c, F.conv(piece, 2, 10).cast("long"))
-    sigs = cut(sigs)
-    bands = sigs.select(
-        "id",
-        *sim_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.substring("simhash", b * band_w + 1, band_w).alias(
-                            "band_bits"
-                        ),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", *sim_cols, F.col("b.band_idx"), F.col("b.band_bits"))
-    bands = sub_salt(bands, ["band_idx", "band_bits"], bucket_cap, "id")
+    sig = F.col("simhash")
+    sim = _bit_chunks(sig, 0, n_bits)
+    bk = [c for b in range(n_bands) for c in _bit_chunks(sig, b * band_w, band_w)]
+    sigs = sigs.select("id", sig, F.array(*sim).alias("sim"), F.array(*bk).alias("bk"))
     if bucket_cap is not None:
-        # pin: the salted band table sits on BOTH sides of the
-        # self-join — materialize once instead of per alias.
-        bands = cut(bands)
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}")))
-        for c in sim_cols
-    ).cast("int")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_bits") == F.col("b.band_bits"),
-                F.col("a.sub") == F.col("b.sub"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+        # one row per document hashed by id, MinHash's signature
+        # aggregate exchange: sub_salt's two reads (sizes + join) share
+        # it, so the folds run once, and the subs window needs no shuffle
+        sigs = sigs.repartition("id")
+    bits = [F.substring(sig, b * band_w + 1, band_w) for b in range(n_bands)]
+    band = F.posexplode(F.array(*bits)).alias("band_idx", "band_bits")
+    bands = sigs.select("id", "sim", "bk", band)
+    keys = ["band_idx", "band_bits", "sub"]
+    return _pairs(
+        _salted(bands, keys[:2], bucket_cap),
+        keys,
+        len(bk) // n_bands,
+        _hamming(max_hamming),
+        "hamming int",
     )
+
+
+def _bit_chunks(bits: Column, start: int, width: int) -> list[Column]:
+    """Bits ``start .. start + width`` of a '0'/'1' string as 48-bit longs."""
+    return [
+        F.conv(F.substring(bits, start + k + 1, min(48, width - k)), 2, 10).cast("long")
+        for k in range(0, width, 48)
+    ]
 
 
 def ngram_jaccard_pairs(
@@ -558,28 +628,17 @@ def ngram_jaccard_pairs(
     block_cols: list[str],
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact token-set Jaccard over blocked pairs (id_a < id_b, jac ≥ θ)."""
-    keyed = df.select(
+    """Exact token-set Jaccard over blocked pairs (id_a < id_b, jac ≥ θ).
+
+    One grouped pass: rows shuffle once on ``block_cols``, and each block
+    scores all its pairs in its one call, so the largest block must fit
+    one task. A NULL block pairs with nothing."""
+    rows = df.select(
         F.col(id_col).alias("id"),
         distinct_tokens(F.col(text_col)).alias("toks"),
         *block_cols,
-    ).transform(cut)  # both sides of the self-join
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols] + [
-        F.col("a.id") < F.col("b.id")
-    ]
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.col("a.toks")) + F.size(F.col("b.toks")) - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        a.join(b, on=cond)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
+    return _pairs(rows, block_cols, refine=_jaccard(threshold), score="jaccard double")
 
 
 def dedupe_exact_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

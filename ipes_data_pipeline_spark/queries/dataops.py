@@ -31,7 +31,7 @@ from ipes_data_pipeline_spark.operators.dedup_minhash import (
     simhash_signatures,
 )
 from ipes_data_pipeline_spark.operators.sessionize import asof_join_latest, sessionize
-from ipes_data_pipeline_spark.operators.util import cut, local_frame, spread
+from ipes_data_pipeline_spark.operators.util import cut, local_frame, pin_pairs, spread
 from ipes_data_pipeline_spark.operators.similarity import (
     _AUTO_PLANES,
     ann_topk_bruteforce,
@@ -248,11 +248,11 @@ def q42c(spark, sf):
 
 def _doc_neardup_components(docs, extra_pairs=None, bucket_cap=None):
     """The shared md5-banded near-dup component chain (q42c's recipe,
-    also the backbone of q126/q133/q147/q148): LSH candidate pairs
+    also the backbone of q92/q126/q133/q147/q148): LSH candidate pairs
     (md5 family, 8 hashes, band size 2 — the oracle-portable
     parameters every consumer's SQL twin splices from _q42_oracle),
-    optionally unioned with ``extra_pairs`` (id_a, id_b), eagerly cut
-    BEFORE the propagation rounds (the q133 lesson: the component loop
+    optionally unioned with ``extra_pairs`` (id_a, id_b), pinned by
+    ``util.pin_pairs`` BEFORE the propagation rounds (the component loop
     references its edge set once per round, and an un-materialized
     pair family re-runs per round), then 3 min-label rounds. Returns
     ``(doc_id, cluster_id)`` with cluster_id = the min doc id reachable
@@ -264,11 +264,11 @@ def _doc_neardup_components(docs, extra_pairs=None, bucket_cap=None):
 
     pairs = minhash_lsh_pairs(
         docs, "doc_id", "text", n_hashes=8, band_size=2, hash_fn="md5",
-        materialize=False, bucket_cap=bucket_cap,
-    ).select("id_a", "id_b")
+        bucket_cap=bucket_cap,
+    )
     if extra_pairs is not None:
         pairs = pairs.union(extra_pairs).distinct()
-    pairs = pairs.transform(cut)
+    pairs = pin_pairs(docs, pairs)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -1194,6 +1194,14 @@ def q76(spark, sf):
 # ----------------------------------------- deterministic train/val/test split
 
 
+def _split_of(c):
+    """q77's content-addressed split of an id: md5(id) % 100 below 80 is
+    train, below 90 val, the rest test."""
+    hexed = F.substring(F.md5(c.cast("string")), 1, 15)
+    bucket = F.conv(hexed, 16, 10).cast("long") % 100
+    return F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+
+
 @register(
     "q77_hash_split",
     "curation: deterministic hash-bucketed train/val/test split (80/10/10)",
@@ -1214,20 +1222,9 @@ def q77(spark, sf):
     # the property a training pipeline needs (a random() split is neither
     # reproducible nor append-stable). Pure column ops, no shuffle beyond
     # the final small agg.
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % 100
-    )
     return (
         t(spark, sf, "documents")
-        .withColumn("bucket", bucket)
-        .withColumn(
-            "split",
-            F.when(F.col("bucket") < 80, "train")
-            .when(F.col("bucket") < 90, "val")
-            .otherwise("test"),
-        )
+        .withColumn("split", _split_of(F.col("doc_id")))
         .groupBy("lang", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1641,34 +1638,15 @@ def q124(spark, sf):
     # addressed split): a pair in different splits leaks training text
     # into eval. The fix in a real pipeline is splitting by CLUSTER
     # (q42c's component id) instead of by doc — this query is the audit
-    # that proves whether that is needed. Pair generation is the band
-    # join (bucket-local); the split tag is pure column math on top.
-    split_of = lambda c: (  # noqa: E731
-        F.when(
-            F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast(
-                "long"
-            )
-            % 100
-            < 80,
-            "train",
-        )
-        .when(
-            F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast(
-                "long"
-            )
-            % 100
-            < 90,
-            "val",
-        )
-        .otherwise("test")
-    )
+    # that proves whether that is needed. Pair generation is the grouped
+    # bucket pass (bucket-local); the split tag is pure column math on top.
     pairs = minhash_lsh_pairs(
         t(spark, sf, "documents"), "doc_id", "text", n_hashes=8, band_size=2,
         hash_fn="md5", bucket_cap=None,
     )
     tagged = pairs.select(
-        split_of(F.col("id_a")).alias("split_a"),
-        split_of(F.col("id_b")).alias("split_b"),
+        _split_of(F.col("id_a")).alias("split_a"),
+        _split_of(F.col("id_b")).alias("split_b"),
     )
     return (
         tagged.where(F.col("split_a") != F.col("split_b"))
@@ -1703,56 +1681,10 @@ FROM l3 GROUP BY split
     _q125_oracle(),
 )
 def q125(spark, sf):
-    from ipes_data_pipeline_spark.operators.dedup_fuzzy import (
-        min_label_components,
-    )
-
-    docs = t(spark, sf, "documents")
-    # Pin the half pair set before the 3 propagation rounds (the q133 /
-    # _cluster_docs lesson, encoded once in util.pin_pairs — an
-    # un-materialized pair join re-runs per round).
-    from ipes_data_pipeline_spark.operators.util import pin_pairs
-
-    pairs = pin_pairs(
-        docs,
-        minhash_lsh_pairs(
-            docs, "doc_id", "text", n_hashes=8, band_size=2, hash_fn="md5",
-            bucket_cap=None,
-        ),
-    )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    comp = min_label_components(nodes, edges, iterations=3)
-    split = (
-        F.when(
-            F.conv(
-                F.substring(F.md5(F.col("canonical_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 100
-            < 80,
-            "train",
-        )
-        .when(
-            F.conv(
-                F.substring(F.md5(F.col("canonical_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 100
-            < 90,
-            "val",
-        )
-        .otherwise("test")
-    )
-    return comp.groupBy(split.alias("split")).agg(
+    comp = _doc_neardup_components(t(spark, sf, "documents"))
+    return comp.groupBy(_split_of(F.col("cluster_id")).alias("split")).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("canonical_id").alias("n_clusters"),
+        F.countDistinct("cluster_id").alias("n_clusters"),
     )
 
 

@@ -179,35 +179,14 @@ FROM a JOIN r ON r.cluster_id = a.cluster_id AND r.rn = 1"""
 def q92(spark, sf):
     # The step after q42c's clustering: each near-dup cluster keeps its
     # best member (longest text, id tie-break) — the keep/drop decision a
-    # dedup pass actually ships. Cluster ids come from the same LSH ->
-    # min-label-components pipeline; the resolution itself is one
+    # dedup pass actually ships. Cluster ids come from the shared LSH ->
+    # min-label-components chain; the resolution itself is one
     # cluster-keyed window + aggregate (clusters are tiny, so no skew).
-    from ipes_data_pipeline_spark.operators.dedup_fuzzy import min_label_components
-    from ipes_data_pipeline_spark.operators.dedup_minhash import minhash_lsh_pairs
+    from ipes_data_pipeline_spark.queries.dataops import _doc_neardup_components
 
     docs = t(spark, sf, "documents")
-    # Pin the half pair set BEFORE the propagation rounds (the q133 /
-    # _cluster_docs lesson, encoded once in util.pin_pairs):
-    # min_label_components references its edge set once per round, and
-    # an un-materialized band self-join + distinct would re-execute 3x.
-    from ipes_data_pipeline_spark.operators.util import pin_pairs
-
-    pairs = pin_pairs(
-        docs,
-        minhash_lsh_pairs(
-            docs, "doc_id", "text", n_hashes=8, band_size=2, hash_fn="md5",
-            bucket_cap=None,
-        ),
-    )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    comp = min_label_components(
-        docs.select(F.col("doc_id").alias("node")), edges, iterations=3
-    )
-    m = comp.join(docs, comp.node == docs.doc_id).select(
-        F.col("canonical_id").alias("cluster_id"), "doc_id", "n_chars"
-    )
+    comp = _doc_neardup_components(docs)
+    m = comp.join(docs, "doc_id").select("cluster_id", "doc_id", "n_chars")
     w = W.partitionBy("cluster_id").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     reps = (
         m.withColumn("rn", F.row_number().over(w))

@@ -1,6 +1,9 @@
 """Solo-query measurement harness (guide §1): time one registry query
-through the noop sink N times in a fresh session, print per-run walls,
-and optionally dump .explain("formatted").
+through the noop sink N times in a fresh session, print per-run walls
+and the jobs and stages each run launched (counted from its job group
+with the status tracker; a skipped stage runs no task and does not
+count), and
+optionally dump .explain("formatted").
 
 Usage: python scripts/solo_query.py QUERY [runs] [--explain OUT.txt]
 """
@@ -33,9 +36,12 @@ def main() -> None:
     spark = get_session("solo")
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     spec = REGISTRY[name]
-    walls = []
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    walls, jobs, stages = [], [], []
     for r in range(runs):
-        spark.sparkContext.setJobDescription(f"{name} run {r}")
+        group = f"solo {name} run {r}"
+        sc.setJobGroup(group, group)
         t0 = time.perf_counter()
         df = spec.spark(spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()
@@ -43,10 +49,14 @@ def main() -> None:
         del df
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        time.sleep(0.3)
+        time.sleep(0.3)  # also lets the listener bus record the run
+        ids = tracker.getJobIdsForGroup(group)
+        infos = [tracker.getStageInfo(s) for j in ids for s in tracker.getJobInfo(j).stageIds]
+        jobs.append(len(ids))
+        stages.append(sum(i is not None and i.numCompletedTasks > 0 for i in infos))
     walls_s = " ".join(f"{w:.2f}" for w in walls)
     med = sorted(walls)[len(walls) // 2]
-    print(f"SOLO {name}: median {med:.2f}  runs [{walls_s}]")
+    print(f"SOLO {name}: median {med:.2f}  runs [{walls_s}]  jobs {jobs}  stages {stages}")
     if explain_out:
         df = spec.spark(spark, sf_dir)
         with open(explain_out, "w") as f:

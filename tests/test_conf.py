@@ -20,12 +20,8 @@ REGIME_MATRIX = [
         "q161_ivfpq_residual_ann",
     )
 ] + [
-    ("spark.ipes.spillMinInputBytes", q)
-    for q in (
-        "q42_dedup_minhash_lsh",
-        "q42p_dedup_minhash_deployed",
-        "q120_dedup_incremental",
-    )
+    # the shingle table of minhash_neardup_pairs is this threshold's one user
+    ("spark.ipes.spillMinInputBytes", "q42p_dedup_minhash_deployed"),
 ] + [
     ("spark.ipes.edgeSpillMinInputBytes", q)
     for q in ("q92_neardup_resolution", "q125_clusterwise_split")

@@ -43,6 +43,11 @@ def test_null_name_stays_singleton(spark):
     # a NULL block joins nothing, even between near-duplicate names
     null_blk = F.lit(None).cast("string")
     assert _labels(df, block_expr=null_blk) == {i: i for i in range(1, 5)}
+    # rows of a NULL block survive the block_cap valve as singletons
+    # (util.sub_salt attaches block sizes with a left join)
+    some_blk = F.when(F.col("id") <= 2, "a")
+    for cap in (None, 8):
+        assert _labels(df, block_expr=some_blk, block_cap=cap) == want
 
 
 def test_string_ids_take_spark_min_order(spark):

@@ -968,3 +968,143 @@ def test_cosine_pairs_autoplanes_refine_fixed_buckets(spark):
     assert set(auto) <= set(fixed)
     for k, v in auto.items():
         assert math.isclose(v, fixed[k], rel_tol=0, abs_tol=0.0)
+
+
+def _self_join_pairs(rows, keys, cap, probe=False):
+    """The band self-join reference: ``util.sub_salt`` rows joined to
+    themselves on ``keys`` and ``sub``, one row per band a pair shares,
+    then ``.distinct()``. ``probe``: the incremental rule (new × (new ∪
+    corpus), new–new once, never corpus × corpus)."""
+    from ipes_data_pipeline_spark.operators.util import sub_salt
+
+    s = sub_salt(rows, keys, cap, "id")
+    a, b = s.alias("a"), s.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys + ["sub"]]
+    if probe:
+        on += [F.col("a.is_new"), F.col("a.id") != F.col("b.id")]
+        on += [~F.col("b.is_new") | (F.col("b.id") > F.col("a.id"))]
+    else:
+        on += [F.col("a.id") < F.col("b.id")]
+    return {
+        (r[0], r[1])
+        for r in a.join(b, on).select("a.id", "b.id").distinct().collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def noisy_docs(spark):
+    """Random documents over a 9-word vocabulary: heavy band collisions,
+    exact duplicates, buckets far over small caps, empty (no token) and
+    short (no shingle) documents, and a NULL block."""
+    import random
+
+    rnd = random.Random(17)
+    words = "a b c d e f g h i".split()
+    texts = [" ".join(rnd.choices(words, k=rnd.randint(3, 9))) for _ in range(70)]
+    texts += texts[:10] + ["", "", "a", "b c", "a b"]
+    rows = [
+        (i, t, rnd.choice(["x", "y", None])) for i, t in enumerate(texts, start=1)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string, blk string").cache()
+
+
+@pytest.mark.parametrize(
+    "hash_fn,n_hashes,cap",
+    [("md5", 8, None), ("md5", 8, 256), ("md5", 8, 4), ("xxhash64", 16, 3)],
+)
+def test_pair_sets_equal_band_self_join(spark, noisy_docs, hash_fn, n_hashes, cap):
+    """The grouped pass emits exactly the band self-join's distinct pair
+    set: MinHash (batch and incremental, with and without stored corpus
+    bands), SimHash with its hamming refine, and n-gram Jaccard."""
+    from ipes_data_pipeline_spark.functions.text import distinct_tokens
+    from ipes_data_pipeline_spark.operators.dedup_minhash import (
+        minhash_bands,
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_delta,
+        ngram_jaccard_pairs,
+        simhash_neardup_pairs,
+        simhash_signatures,
+    )
+
+    docs = noisy_docs
+    kw = dict(n_hashes=n_hashes, hash_fn=hash_fn, bucket_cap=cap)
+    keys = ["band_idx", "band_key"]
+    bands = minhash_bands(docs, "doc_id", "text", n_hashes, hash_fn=hash_fn)
+    got = minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
+    assert len(got) == len(set(got))
+    assert set(map(tuple, got)) == _self_join_pairs(bands, keys, cap)
+
+    new = docs.where(F.col("doc_id") % 3 == 0)
+    corpus = docs.where(F.col("doc_id") % 3 != 0)
+    stored = minhash_bands(corpus, "doc_id", "text", n_hashes, hash_fn=hash_fn)
+    flagged = stored.withColumn("is_new", F.lit(False)).unionByName(
+        minhash_bands(new, "doc_id", "text", n_hashes, hash_fn=hash_fn)
+        .withColumn("is_new", F.lit(True))
+    )
+    want = _self_join_pairs(flagged, keys, cap, probe=True)
+    for corpus_bands in (None, stored.localCheckpoint(eager=True)):
+        got = minhash_lsh_pairs_delta(
+            new, corpus, "doc_id", "text", corpus_bands=corpus_bands, **kw
+        ).collect()
+        assert len(got) == len(set(got)) and set(map(tuple, got)) == want
+
+    sigs = {
+        r["id"]: r["simhash"]
+        for r in simhash_signatures(docs, "doc_id", "text").collect()
+    }
+    sim_bands = simhash_signatures(docs, "doc_id", "text").select(
+        "id",
+        F.posexplode(
+            F.array(*[F.substring("simhash", 8 * b + 1, 8) for b in range(4)])
+        ).alias("band_idx", "band_bits"),
+    )
+    for c in {cap, None if cap is None else 64}:  # 64: q121p's valve
+        ref = {
+            (a, b, sum(x != y for x, y in zip(sigs[a], sigs[b])))
+            for a, b in _self_join_pairs(sim_bands, ["band_idx", "band_bits"], c)
+        }
+        got = simhash_neardup_pairs(docs, "doc_id", "text", bucket_cap=c).collect()
+        assert len(got) == len(set(got))
+        assert set(map(tuple, got)) == {p for p in ref if p[2] <= 3}
+
+    if cap is None:  # n-gram blocking has no valve
+        toks = docs.select(
+            F.col("doc_id").alias("id"), distinct_tokens("text").alias("t"), "blk"
+        )
+        sets = {r["id"]: set(r["t"]) for r in toks.collect()}
+        want = {
+            (a, b, len(sets[a] & sets[b]) / len(sets[a] | sets[b]))
+            for a, b in _self_join_pairs(toks, ["blk"], None)
+            if sets[a] | sets[b]
+        }
+        want = {p for p in want if p[2] >= 0.5}
+        got = ngram_jaccard_pairs(docs, "doc_id", "text", ["blk"]).collect()
+        assert len(got) == len(set(got)) and set(map(tuple, got)) == want
+
+
+def test_groups_split_across_arrow_batches_stay_whole(spark, noisy_docs):
+    """util.group_apply holds back a group that spills over an Arrow
+    batch: with two-row batches every bucket and block still reaches
+    one kernel call whole, so the outputs equal the default batching's."""
+    from ipes_data_pipeline_spark.operators.dedup_fuzzy import dedupe_fuzzy
+    from ipes_data_pipeline_spark.operators.dedup_minhash import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    def run():
+        return (
+            sorted(minhash_lsh_pairs(noisy_docs, "doc_id", "text", bucket_cap=4).collect()),
+            sorted(ngram_jaccard_pairs(noisy_docs, "doc_id", "text", ["blk"]).collect()),
+            sorted(dedupe_fuzzy(noisy_docs, "doc_id", "text", F.col("blk"), 3).collect()),
+        )
+
+    whole = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        assert run() == whole
+    finally:
+        spark.conf.set(key, old)
+    assert all(whole)

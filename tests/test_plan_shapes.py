@@ -452,3 +452,45 @@ def test_fuzzy_dedup_is_one_grouped_pass(spark, sf_dir):
     assert ops.count("Exchange") == 2 and keys == ["blk", "blk, sub"], ops
     assert ops.count("BroadcastExchange") == 1, ops
     assert [op for op in ops if "Join" in op] == ["BroadcastHashJoin"], ops
+
+
+def test_text_neardup_is_one_grouped_pass(spark, sf_dir):
+    # The near-dup pair operators score each bucket inside one grouped
+    # Arrow pass (util.group_apply: whole buckets per MapInArrow call):
+    # no join on a band table, and no aggregate on
+    # (id_a, id_b), because each pair leaves only the lowest band its
+    # rows share. The capped twins add util.sub_salt's size aggregate and
+    # its broadcast join; capped SimHash also hashes its signature rows
+    # by id (MinHash's signature aggregate already does), so the per-band
+    # subs window runs without a shuffle of its own.
+    import re
+    from collections import Counter
+
+    def shape(name):
+        plan = formatted_plan(q(spark, name, sf_dir))
+        assert not re.search(r"Keys \[\d+\]: \[id_a", plan), plan
+        ops = Counter(re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M))
+        assert ops["MapInArrow"] == 1, ops
+        keys = re.findall(r"hashpartitioning\(([\w#, ]+), \d+\)", plan)
+        # without a cap, sub is the literal 0 and may be folded into the key
+        return ops, {re.sub(r", 0$", ", sub", re.sub(r"#\d+L?", "", k)) for k in keys}
+
+    for name in ("q42_dedup_minhash_lsh", "q121_simhash_neardup",
+                 "q44_dedup_ngram_jaccard"):
+        ops, _ = shape(name)
+        assert not [op for op in ops if "Join" in op], ops
+
+    def joins(ops):
+        return Counter({op: n for op, n in ops.items() if "Broadcast" in op})
+
+    for base, capped, extra in (
+        ("q42f_dedup_minhash_fast", "q42p_dedup_minhash_deployed",
+         {"band_idx, band_key"}),
+        ("q121_simhash_neardup", "q121p_simhash_neardup_capped",
+         {"band_idx, band_bits", "id"}),
+    ):
+        (b_ops, b_keys), (c_ops, c_keys) = shape(base), shape(capped)
+        assert c_keys - b_keys == extra and b_keys <= c_keys, (b_keys, c_keys)
+        assert joins(c_ops) - joins(b_ops) == Counter(
+            {"BroadcastExchange": 1, "BroadcastHashJoin": 1}
+        ), (b_ops, c_ops)
