@@ -20,4 +20,12 @@ Pandas UDFs).
 
 __version__ = "0.1.0"
 
-from ipes_data_pipeline_spark.session import get_session, tune  # noqa: F401
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): ``python -m ipes_data_pipeline_spark.worker_daemon``
+    # imports this package before the daemon module may touch pyspark.
+    if name in ("get_session", "tune"):
+        from ipes_data_pipeline_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -4,6 +4,15 @@ The driver harness owns the session it passes to ``__spark_entry__``;
 ``tune`` therefore only sets *runtime-settable* confs so our queries
 behave deterministically (UTC timestamps, non-ANSI coercions, AQE)
 regardless of who built the session.
+
+``get_session`` also sets the static ``spark.python.daemon.module`` to
+:mod:`ipes_data_pipeline_spark.worker_daemon`: its Python workers import
+the interpreter's installed pyspark and py4j instead of Spark's source
+zips, when the installed versions equal the ones the zips ship, and
+import from the zips otherwise. Its ``spark.executorEnv.PYTHONPATH``
+names this package's root, so the daemon imports whatever the driver's
+cwd. A session built by the harness only gets ``tune`` and keeps Spark's
+default daemon.
 """
 
 from __future__ import annotations
@@ -131,6 +140,10 @@ def get_session(app_name: str = "ipes_data_pipeline_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(cpus))
+        # static: only sessions built here start workers through it, and
+        # the daemon imports this package whatever the driver's cwd
+        .config("spark.python.daemon.module", "ipes_data_pipeline_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(__file__)))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
